@@ -298,7 +298,6 @@ def run_suite(
     violations = checks[0]
     for c in checks[1:]:
         violations = violations.unionByName(c)
-    violations = violations.persist()
 
     # ONE action computes everything: the verdicts aggregation forces the
     # whole violations union, and its (tiny) collected result carries every
@@ -307,10 +306,14 @@ def run_suite(
     # size over ONE nested leaf, not the struct array: size(spans) forces a
     # decode of every span field (text included) just to count elements,
     # while size(spans.offset) prunes the ReadSchema to a single int leaf —
-    # identical value (guide §6: verify pruning reaches the scan)
+    # identical value (guide §6: verify pruning reaches the scan). A null
+    # span array counts as 0 spans: size(null) is null, so a partition whose
+    # docs all have null spans would otherwise sum to a null n_spans.
     part_counts = docs.groupBy("partition").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.col("spans").getField("offset"))).alias("n_spans"),
+        F.sum(
+            F.coalesce(F.size(F.col("spans").getField("offset")), F.lit(0))
+        ).alias("n_spans"),
     )
     verdicts = (
         part_counts.join(
@@ -325,7 +328,6 @@ def run_suite(
         .withColumn("pass", F.col("n_violations") == 0)
     )
     vrows = verdicts.collect()
-    violations.unpersist()  # verdicts re-materialize from the collected rows
     if vrows:
         # Arrow ingestion (pandas) instead of a pickled-row local relation:
         # the row path spreads the handful of verdict rows over

@@ -175,6 +175,8 @@ def _kmeans_lloyd(
     import numpy as np
 
     n = mat.shape[0]
+    if n == 0:
+        raise ValueError("cannot train a KMeans codebook on an empty training sample")
     k = max(1, min(int(k), n))
     rng = np.random.RandomState(seed)
     centers = np.empty((k, mat.shape[1]), dtype=np.float64)

@@ -12,6 +12,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark keeps the classes it compiles for generated code in an LRU cache of
+# ``spark.sql.codegen.cache.maxEntries`` entries (default 100). Counted at
+# local[4] (CodegenMetrics compilations): one run_suite call generates 111
+# distinct classes, and a pass over the 50 registered queries about 1,100
+# more. At the default the cache thrashed: each warm suite call recompiled
+# 61-79 classes and each warm query pass about 1,415, all re-JITted too.
+# 4096 holds both working sets about three times over, so stale plan
+# variants are evicted before live classes. Static conf: it only applies
+# to a session this function creates (docs/SCALE.md "Session defaults").
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "logdata-anomaly-miner-spark",
@@ -43,6 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -191,6 +191,19 @@ def test_ivf_topk_recall(spark):
     assert approx == exact
 
 
+@pytest.mark.parametrize("shape", [(0,), (0, 3)])
+def test_kmeans_lloyd_empty_sample_raises(shape):
+    """An empty training sample (what ivf_topk collects from an empty
+    input) is refused with a message naming it, not an IndexError from
+    the centroid init."""
+    import numpy as np
+
+    from logdata_anomaly_miner_spark.functions.similarity import _kmeans_lloyd
+
+    with pytest.raises(ValueError, match="empty training sample"):
+        _kmeans_lloyd(np.empty(shape), k=4, seed=0)
+
+
 def test_connected_components_vs_union_find(spark):
     """Alternating large-star/small-star components match a plain-Python
     union-find on a seeded random graph plus a long path (the path forces

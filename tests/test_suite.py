@@ -175,3 +175,57 @@ def test_suite_lifecycle_freeze_and_ignore(spark):
     # the synthetic docs all fall within one dense time range -> no gap ->
     # learning never stops -> same novelty set minus the screened kind
     assert nv_lc <= nv_base
+
+
+def test_suite_null_spans(spark):
+    """A doc whose spans array is null counts as 0 spans: a partition where
+    every doc has null spans must not turn ``n_spans`` null (which made the
+    metric sum raise a TypeError), alone or next to a partition with spans."""
+    schema = (
+        "doc_id string, ts double, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    media = gen_media(spark, 10)
+    cfg = SuiteConfig(entropy_prob_thresh=0.0)
+    one = spark.createDataFrame([("d1", 100.0, None)], schema)
+    res = run_suite(spark, one, media, cfg, persist=False)
+    assert res.metrics["rows_scanned"] == 1
+    assert res.metrics["spans_scanned"] == 0
+    assert [(r["partition"], r["n_spans"]) for r in res.verdicts.collect()] == [
+        ("1970-01-01", 0)
+    ]
+
+    two = spark.createDataFrame(
+        [
+            ("d1", 100.0, None),
+            ("d2", 200.0, None),
+            ("d3", 86_400.0 * 2, [("text", "a", None, 0), ("text", "b", None, 1)]),
+        ],
+        schema,
+    )
+    res = run_suite(spark, two, media, cfg, persist=False)
+    assert res.metrics["rows_scanned"] == 3
+    assert res.metrics["spans_scanned"] == 2
+    spans = {r["partition"]: r["n_spans"] for r in res.verdicts.collect()}
+    assert spans == {"1970-01-01": 0, "1970-01-03": 2}
+
+
+def test_suite_warm_calls_reuse_generated_code(spark):
+    """Warm run_suite calls reuse the classes generated by the first call:
+    one call generates more distinct classes than Spark's default cache of
+    100 holds, so without the larger cache that get_spark sets, every warm
+    call recompiled dozens of them."""
+    compilations = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    docs = gen_documents(spark, n_docs=300, seed=7)
+    media = gen_media(spark, 1000)
+    cfg = SuiteConfig(entropy_prob_thresh=0.0001)
+    run_suite(spark, docs, media, cfg, persist=False)
+    before = compilations.getCount()
+    for _ in range(2):
+        run_suite(spark, docs, media, cfg, persist=False)
+    # new compilations over the two warm calls, measured at local[4]: 10
+    # with the larger cache, 51-94 at the default of 100
+    assert compilations.getCount() - before <= 30
