@@ -19,7 +19,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.constraints.drift import histogram, psi_kl
@@ -78,6 +78,22 @@ def _viol(df: DataFrame, suite: str, message: str) -> DataFrame:
     )
 
 
+def utc_day_partition(ts: Column) -> Column:
+    """The suite's partition key: the UTC day (``yyyy-MM-dd``) of an epoch
+    seconds ``ts``, by pure arithmetic — from_unixtime would use the
+    SESSION time zone, making checkpoint partition keys differ between
+    clusters configured differently. A null/uncastable ts gets the
+    sentinel ``__no_ts__`` so its violations still join the per-partition
+    verdicts."""
+    return F.coalesce(
+        F.date_add(
+            F.lit("1970-01-01").cast("date"),
+            F.floor(ts.cast("double") / 86400.0).cast("int"),
+        ).cast("string"),
+        F.lit("__no_ts__"),
+    )
+
+
 def run_suite(
     spark: SparkSession,
     documents: DataFrame,
@@ -96,20 +112,7 @@ def run_suite(
     cfg = config or SuiteConfig()
     t_start = time.time()
 
-    # UTC day bucket by pure arithmetic — from_unixtime would use the
-    # SESSION time zone, making checkpoint partition keys differ between
-    # clusters configured differently; null/uncastable ts gets a sentinel
-    # partition so its violations still join the per-partition verdicts
-    docs = documents.withColumn(
-        "partition",
-        F.coalesce(
-            F.date_add(
-                F.lit("1970-01-01").cast("date"),
-                F.floor(F.col("ts").cast("double") / 86400.0).cast("int"),
-            ).cast("string"),
-            F.lit("__no_ts__"),
-        ),
-    )
+    docs = documents.withColumn("partition", utc_day_partition(F.col("ts")))
     if persist:
         docs = docs.persist()
     # partition rides along through posexplode — no join needed (a join here

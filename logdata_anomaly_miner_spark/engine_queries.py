@@ -423,17 +423,12 @@ def q_monotonic_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _events(spark, sf_dir)
-    # width bucket mode: the order column is the dense ingest id, so
-    # equal-width boundaries are balanced by construction and skip the
-    # percentile pass + per-row boundary-count lambda (identical output —
-    # any order-consistent bucketing gives the same prefix positions)
-    out = monotonic_adjust(
-        ev, ts_col="us", order_cols=["event_id"], out_col="us_adj",
-        bucket_mode="width",
+    # event_id is a bigint ingest id, so both scans range-bucket it by
+    # equal width (timestamps._with_range_bucket picks by the column type)
+    out = monotonic_adjust(ev, ts_col="us", order_cols=["event_id"], out_col="us_adj")
+    uns = unsorted_timestamps(ev, ts_col="us", order_cols=["event_id"]).select(
+        "event_id", F.lit(1).alias("_bw")
     )
-    uns = unsorted_timestamps(
-        ev, ts_col="us", order_cols=["event_id"], bucket_mode="width"
-    ).select("event_id", F.lit(1).alias("_bw"))
     return out.join(F.broadcast(uns), "event_id", "left").select(
         "event_id",
         F.round(F.col("us_adj") / 1_000_000.0, 6).alias("ts_adj"),
@@ -568,8 +563,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _spread(_read(spark, sf_dir, "documents"))
-    # fused minhash+banding: byte-identical buckets to the two-step
-    # minhash_signatures -> lsh_candidate_pairs path, one less shuffle
+    # minhash + banding in one wide aggregation per document (dedup.py)
     cand = minhash_lsh_candidates(
         docs, "doc_id", "text", n_hashes=16, shingle_k=3, bands=4,
         rows_per_band=4,
@@ -785,8 +779,7 @@ def q_jaccard_pairs_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _spread(_read(spark, sf_dir, "documents"))
-    # fused minhash+banding (see q_jaccard_pairs): identical buckets,
-    # |docs|*n_hashes stack + (id, band) aggregation shuffle removed
+    # xxhash64 family of the same minhash + banding (see q_jaccard_pairs)
     cand = minhash_lsh_candidates(
         docs, "doc_id", "text", n_hashes=30, shingle_k=3, bands=10,
         rows_per_band=3, use_xx=True,

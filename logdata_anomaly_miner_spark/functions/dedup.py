@@ -3,11 +3,12 @@
 All variants are set-oriented and shuffle-bounded:
 
 - exact:      md5(normalized text) hash-groupBy — one shuffle of |docs| keys.
-- minhash+LSH: shingle → per-seed min of a portable hash → band → bucket
-              join. Candidate pairs only form inside buckets, so the join is
-              |bucket|² per bucket instead of |docs|² — the standard LSH
-              scale path. The hash is md5-based (hex-string min), portable
-              to any engine for oracle checks.
+- minhash+LSH: shingle → per-seed min of a hash → band → bucket join, all
+              minima in one wide aggregation per document. Candidate pairs
+              only form inside buckets, so the join is |bucket|² per bucket
+              instead of |docs|² — the standard LSH scale path. Two hash
+              families: md5 (hex-string min, portable to any engine for
+              oracle checks) and xxhash64 (signed long, cheaper).
 - simhash:    64-bit sign-sum of token-hash bits via explode + groupBy —
               no per-row Python; near-dups share simhash within k bits.
 - n-gram Jaccard: exact verification on LSH candidates (or small inputs).
@@ -59,77 +60,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, seed, minhash) — minhash per seed = min over shingles of
-    md5(seed || shingle) compared as hex strings (portable, deterministic).
-
-    One wide aggregation: n_hashes min(md5(seed:shingle)) columns over the
-    shingle rows (map-side combined), per-seed shape restored with stack()
-    after aggregation — hash values identical to the former seed-exploded
-    form (same md5 inputs), but the shuffle carries |docs| wide rows
-    instead of |shingles|·n_hashes hex strings."""
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(shingles(F.col(text_col), shingle_k)).alias("sh"),
-    )
-    agg = ex.groupBy("_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"_h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    stack_args = ", ".join(f"{i}, _h{i}" for i in range(n_hashes))
-    return agg.selectExpr(
-        f"_id as {id_col}",
-        f"stack({n_hashes}, {stack_args}) as (seed, minhash)",
-    )
-
-
-def minhash_signatures_xx(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Scale variant of ``minhash_signatures``: min over shingles of
-    xxhash64(seed, shingle) (a signed long). Unlike the md5 oracle form,
-    the seeds are NOT exploded: all n_hashes minima are computed as ONE
-    wide aggregation over the shingle rows (n_hashes min() columns with
-    map-side partial aggregation), so the shuffle carries |docs| rows of
-    longs instead of |shingles|·n_hashes rows of hex strings. The
-    (id, seed, minhash) shape is restored afterwards with stack() — a
-    |docs|·n_hashes expansion AFTER aggregation, feeding the same
-    banding/bucketing pipeline. md5 stays the portable ORACLE form (DuckDB
-    has md5 but not xxhash64); both are valid MinHash families."""
-    ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(shingles(F.col(text_col), shingle_k)).alias("sh"),
-    )
-    # one string hash per shingle; the n_hashes family is derived from it
-    # with fixed-width long re-hashes (12 bytes each) — ~n_hashes× cheaper
-    # than hashing the shingle string n_hashes times, same MinHash property
-    # (identical shingle sets -> identical signatures).
-    base = F.xxhash64(F.col("sh"))
-    agg = ex.groupBy("_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), base)).alias(f"_h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    stack_args = ", ".join(f"{i}, _h{i}" for i in range(n_hashes))
-    return agg.selectExpr(
-        f"_id as {id_col}",
-        f"stack({n_hashes}, {stack_args}) as (seed, minhash)",
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -140,16 +70,19 @@ def minhash_lsh_candidates(
     rows_per_band: int = 4,
     use_xx: bool = False,
 ) -> DataFrame:
-    """Fused minhash + banding (r8): candidate pairs straight from the
-    wide signature aggregation. Produces byte-identical buckets to
-    ``minhash_signatures(_xx)`` → ``lsh_candidate_pairs`` — the band
-    bucket is md5 of the band's minhash values concatenated in seed order,
-    exactly the string the unfused path builds from
-    sort_array(collect_list(struct(seed, minhash))) — but the per-seed
-    stack() expansion and the second (id, band) aggregation (a full
-    shuffle of |docs|·n_hashes rows plus a collect_list sort per band)
-    never materialize: buckets project directly off the one wide-agg row
-    per document (guide §2.4: remove shuffles outright)."""
+    """MinHash + LSH banding → candidate pairs (id_a < id_b).
+
+    minhash_i = min over the document's shingles of md5(f"{i}:{shingle}")
+    compared as hex strings, or with ``use_xx`` of xxhash64(i,
+    xxhash64(shingle)) as signed longs; both are valid MinHash families
+    (identical shingle sets give identical signatures), md5 is the one
+    DuckDB can replay. All n_hashes minima are ONE wide aggregation over
+    the shingle rows (map-side combined), so the shuffle carries |docs|
+    rows. Band b's bucket is md5 of its ``rows_per_band`` minhashes joined
+    with "|" in SEED order (standard banding: sorting by value would pair
+    documents whose bands merely share a multiset of minhashes across
+    seeds), projected straight off the aggregated row; documents sharing
+    a (band, bucket) become candidates."""
     if bands * rows_per_band > n_hashes:
         raise ValueError("bands * rows_per_band must be <= n_hashes")
     ex = df.select(
@@ -187,43 +120,6 @@ def minhash_lsh_candidates(
         F.col("_id").alias(id_col),
         F.explode(F.array(*band_structs)).alias("_bb"),
     ).select(id_col, "_bb.band", "_bb.bucket")
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Band the signature (seed // rows_per_band), bucket on the band hash,
-    self-join within buckets → candidate pairs (id_a < id_b)."""
-    # the band signature concatenates minhashes in SEED order (standard
-    # banding): sorting by hash VALUE would make the bucket permutation-
-    # invariant, pairing documents whose bands merely share a multiset of
-    # minhashes across different seeds
-    banded = (
-        signatures.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("seed", "minhash"))),
-                        lambda s: s["minhash"].cast("string"),
-                    ),
-                )
-            ).alias("bucket")
-        )
-    )
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     return (
@@ -349,7 +245,7 @@ def simhash64(
 
     All 64 bit-sums are computed as ONE wide aggregation over the token
     rows (64 conditional-sum columns, map-side combined) — the
-    ``minhash_signatures_xx`` pattern. The earlier form exploded
+    ``minhash_lsh_candidates`` pattern. The earlier form exploded
     |tokens|×64 rows before the groupBy, inflating the shuffle 64×; here
     the shuffle carries |docs| rows of 64 longs. The packed value is
     reconstructed bit-by-bit afterwards (bit 63 lands as two's-complement
@@ -408,14 +304,6 @@ def portable_simhash_bits(
         F.col("bit").cast("int").alias("bit"),
         F.when(F.col("s") > 0, 1).otherwise(0).cast("int").alias("b"),
     )
-
-
-def all_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Exact candidate set: every (id_a < id_b) pair — the small-input /
-    oracle path; use lsh_candidate_pairs at scale."""
-    a = df.select(F.col(id_col).alias("id_a"))
-    b = df.select(F.col(id_col).alias("id_b"))
-    return a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -392,13 +392,11 @@ def validate_correlation_pairs(
     ]
     # bucket the ATOMS, then melt (r8): _pid is a function of the order
     # column only, so computing it before the |pairs|x explode evaluates
-    # the boundary comparison |pairs| times less per pass; width mode
-    # replaces the percentile pass + per-row count-boundaries lambda with
-    # one codegen'd width_bucket (the reference orders by a dense ingest
-    # id, uniform by construction, so equal-width boundaries stay
-    # balanced). Any order-consistent bucketing yields identical prefix
-    # positions — see _with_range_bucket's width-mode note.
-    pre = _with_range_bucket(df, order_cols, num_buckets, mode="width")
+    # the boundary expression |pairs| times less per pass. The reference
+    # orders by a dense integral ingest id, which _with_range_bucket
+    # buckets by equal width; any order-consistent bucketing yields
+    # identical prefix positions.
+    pre = _with_range_bucket(df, order_cols, num_buckets)
     bucketed = (
         pre.select(
             *order_cols, "_pid", F.explode(F.array(*pair_structs)).alias("_p")

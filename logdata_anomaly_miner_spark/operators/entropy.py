@@ -18,12 +18,10 @@ Spark shape:
 - **Learning** is pure Column algebra: explode each value into its bigram
   code pairs via sequence/transform/posexplode, then groupBy(first,second)
   count — whole-stage codegen, one shuffle of at most 257^2 rows.
-- **Scoring** has two implementations with identical results:
-  * ``score_entropy_expr`` — declarative (explode pairs, broadcast-join the
-    freq table, avg) — used for oracle parity;
-  * ``score_entropy_pandas`` — a vectorized pandas UDF over a broadcast
-    257×257 numpy matrix: zero shuffle, one Arrow-batched pass; this is the
-    10^12-doc scale path (the freq table is ≤66k rows ≡ ~500 KB broadcast).
+- **Scoring** (``score_entropy_pandas``) is a vectorized pandas UDF over a
+  broadcast 257×257 numpy matrix: zero shuffle, one Arrow-batched pass
+  (the freq table is ≤66k rows ≡ ~500 KB broadcast). The check-then-learn
+  replay of the reference loop is ``score_entropy_sequential``.
 """
 
 from __future__ import annotations
@@ -134,37 +132,6 @@ def learn_bigram_freq(
             .agg(F.sum("cnt").alias("cnt"))
         )
     return counts, new_seen
-
-
-def score_entropy_expr(
-    df: DataFrame, value_col: str, freq: DataFrame
-) -> DataFrame:
-    """Declarative scoring: explode pairs, broadcast-join freq + totals,
-    avg(prob) per original row. Adds column ``critical_val`` (null for a
-    null value — matching score_entropy_pandas' NaN, which never alarms).
-
-    The self-join key ``_rid`` is assigned on an eagerly materialized tag
-    frame: monotonically_increasing_id is evaluation-order-dependent and
-    the tag plan is referenced on both sides of the join — without the
-    localCheckpoint a nondeterministic exchange (or task retry) could
-    assign different ids per side and attach scores to the wrong rows.
-    (localCheckpoint blocks are freed by the ContextCleaner when the
-    caller drops the result — no persist leak across calls.)"""
-    totals = freq.groupBy("first").agg(F.sum("cnt").alias("total"))
-    enriched = F.broadcast(freq.join(totals, "first"))
-    tagged = df.withColumn("_rid", F.monotonically_increasing_id()).localCheckpoint(
-        eager=True
-    )
-    pairs = tagged.filter(F.col(value_col).isNotNull()).select(
-        "_rid", F.posexplode(_bigram_pairs(F.col(value_col))).alias("_i", "p")
-    ).select("_rid", "_i", F.col("p.first").alias("first"), F.col("p.second").alias("second"))
-    scored = (
-        pairs.join(enriched, ["first", "second"], "left")
-        .withColumn("prob", F.coalesce(F.col("cnt") / F.col("total"), F.lit(0.0)))
-        .groupBy("_rid")
-        .agg(F.avg("prob").alias("critical_val"))
-    )
-    return tagged.join(scored, "_rid", "left").drop("_rid")
 
 
 def freq_matrix(freq: DataFrame) -> np.ndarray:

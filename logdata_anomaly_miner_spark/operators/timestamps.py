@@ -28,11 +28,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
 def _with_range_bucket(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    num_buckets: int | None,
-    mode: str = "quantile",
+    df: DataFrame, order_cols: Sequence[str], num_buckets: int | None
 ) -> DataFrame:
     """Adds ``_pid``: a range-bucket id where bucket i holds order values
     no greater than bucket i+1's (equal order values always share a
@@ -45,14 +45,31 @@ def _with_range_bucket(
     boundaries come from a sampling pass that can differ between the two
     evaluations, silently shifting rows across buckets and corrupting the
     carry (observed: +41-row drift in per-pair positions on a 60k-row
-    melt). Boundaries here are in-plan percentile_approx quantiles of the
-    first order column — a deterministic aggregate (partition merge order
-    is fixed), evaluation-stable, AND load-balanced under skew (equal-
-    width bucketing would funnel a burst into one bucket). bucket(row) =
-    number of boundaries ≤ its order value, so equal order values always
-    share a bucket, NULL order values land in bucket 0 (matching their
+    melt). Boundaries here come from an in-plan aggregate of the first
+    order column — deterministic (partition merge order is fixed) and
+    evaluation-stable. NULL order values land in bucket 0 (matching their
     nulls-first position in the window sort), and degenerate all-equal
-    input collapses to one bucket — correct, just serial."""
+    input collapses to one bucket — correct, just serial.
+
+    ANY deterministic, order-consistent bucket id yields IDENTICAL
+    downstream prefix positions — a local scan counts rows inside the
+    bucket, the carry counts rows in strictly earlier buckets, so the sum
+    is the global rank regardless of where the boundaries sit. Only load
+    balance differs, so the leading order column's type picks the
+    boundaries:
+
+    - integral (tinyint..bigint): equal-width buckets from min/max via the
+      codegen'd width_bucket builtin. These columns are ingest ids, line
+      numbers and event ids — dense by construction, so equal widths are
+      balanced, and the percentile pass plus the per-row boundary-count
+      lambda are skipped (measured ~2.5 s per evaluation on a 600k-row
+      melt).
+    - timestamp, date, float, double, decimal: percentile_approx quantile
+      boundaries, which keep a bursty distribution balanced (equal widths
+      would funnel a burst into one bucket).
+
+    Known limit: a bursty order column stored as an integer (e.g. epoch
+    micros in a bigint) gets width buckets — same output, worse balance."""
     nb = num_buckets or max(
         2, df.sparkSession.sparkContext.defaultParallelism * 2
     )
@@ -63,46 +80,33 @@ def _with_range_bucket(
         # epoch seconds (microsecond precision), preserving the sort order
         # exactly, so the bucket boundaries stay order-consistent
         v = F.col(c0).cast("timestamp").cast("double")
-    elif dtype in (
-        "tinyint", "smallint", "int", "bigint", "float", "double"
-    ) or dtype.startswith("decimal"):
+    elif dtype in (*_INTEGRAL, "float", "double") or dtype.startswith("decimal"):
         v = F.col(c0).cast("double")
     else:
         raise TypeError(
             "range bucketing needs a numeric/timestamp/date leading order "
             f"column; got {c0}:{dtype}"
         )
-    if mode == "width":
-        # Equal-width bucketing via the codegen'd width_bucket builtin.
-        # ANY deterministic, order-consistent bucket id (monotone in the
-        # order value, equal values share a bucket) yields IDENTICAL
-        # downstream prefix positions — _lrn counts rows inside the
-        # bucket, the carry counts rows in strictly earlier buckets, so
-        # the sum is the global rank regardless of where the boundaries
-        # sit. Only load balance differs: callers whose leading order
-        # column is a dense ingest id (uniform by construction) opt in
-        # and skip both the percentile pass and the per-row
-        # count-boundaries lambda (measured ~2.5 s per evaluation on a
-        # 600k-row melt, r8); skewed order columns (timestamps with
-        # bursts) keep the default quantile boundaries.
+    if dtype in _INTEGRAL:
         mm = df.agg(F.min(v).alias("_blo"), F.max(v).alias("_bhi"))
         # nullif guard: an all-equal (or empty/all-null) input degenerates
         # to one bucket — width_bucket gets null bounds, returns null,
-        # coalesce lands every row in bucket 0, mirroring the quantile
-        # path's degenerate collapse. Nulls sort first: null v -> bucket 0
-        # below every non-null bucket (width_bucket >= 1).
+        # coalesce lands every row in bucket 0. Nulls sort first: null v ->
+        # bucket 0 below every non-null bucket (width_bucket >= 1). The
+        # coalesce comes before least(), which skips nulls: least(null, nb)
+        # would put null rows in the LAST bucket. least() folds the max
+        # value's bucket nb + 1 into nb.
         raw = F.width_bucket(
             v, F.col("_blo"), F.nullif(F.col("_bhi"), F.col("_blo")), F.lit(nb)
         )
         return (
             df.crossJoin(F.broadcast(mm))
-            .withColumn("_pid", F.coalesce(F.least(raw, F.lit(nb)), F.lit(0)))
+            .withColumn("_pid", F.least(F.coalesce(raw, F.lit(0)), F.lit(nb)))
             .drop("_blo", "_bhi")
         )
-    if mode != "quantile":
-        raise ValueError(f"unknown range-bucket mode {mode!r}")
     probs = F.array(*[F.lit(i / nb) for i in range(1, nb)])
     mm = df.agg(F.percentile_approx(v, probs, F.lit(10_000)).alias("_bnds"))
+    # bucket(row) = number of boundaries <= its order value.
     # NOTE (r8): an unrolled when(v >= element_at(_bnds, i)) comparison sum
     # was tried here to move the bucket id into whole-stage codegen; it
     # measured 2x SLOWER than this aggregate (the nb-1-term expression is
@@ -151,7 +155,6 @@ def unsorted_timestamps(
     order_cols: Sequence[str] = ("event_id",),
     stream_cols: Sequence[str] = (),
     num_buckets: int | None = None,
-    bucket_mode: str = "quantile",
 ) -> DataFrame:
     """Rows whose timestamp is smaller than the previous row's (ingest order)."""
     if stream_cols:
@@ -163,7 +166,7 @@ def unsorted_timestamps(
         )
     # Global sequence: per-range lag; each range's first row compares against
     # the last timestamp (in order) of the nearest preceding non-empty range.
-    d = _with_range_bucket(df, order_cols, num_buckets, mode=bucket_mode)
+    d = _with_range_bucket(df, order_cols, num_buckets)
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
     d = d.withColumn("_prev_local", F.lag(F.col(ts_col)).over(w))
     d = _carry_join(d, ts_col, order_cols, "_carry")
@@ -182,7 +185,6 @@ def monotonic_adjust(
     stream_cols: Sequence[str] = (),
     out_col: str = "ts_adj",
     num_buckets: int | None = None,
-    bucket_mode: str = "quantile",
 ) -> DataFrame:
     """Adds ``out_col`` = running max of the timestamp in ingest order
     (decreasing timestamps clamped up, reference :18-52)."""
@@ -195,7 +197,7 @@ def monotonic_adjust(
         return df.withColumn(out_col, F.max(F.col(ts_col)).over(w))
     # Global sequence: local running max per range + max over all earlier
     # ranges (carry-in), combined with greatest() (null carry for range 0).
-    d = _with_range_bucket(df, order_cols, num_buckets, mode=bucket_mode)
+    d = _with_range_bucket(df, order_cols, num_buckets)
     w = (
         Window.partitionBy("_pid")
         .orderBy(*[F.col(c) for c in order_cols])

@@ -133,11 +133,6 @@ def parse_xml_atoms(
     return df.withColumn("parsed", parsed).withColumn("_parse_ok", ok)
 
 
-def read_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Canonical documents table (parquet/Iceberg dir)."""
-    return spark.read.parquet(path)
-
-
 def read_log_resources(
     spark: SparkSession,
     resources: list[dict],
@@ -312,27 +307,6 @@ def spool_unix_socket(
     if pending:
         flush()
     return spooled
-
-
-def read_unix_socket_lines(
-    spark: SparkSession,
-    socket_path: str,
-    spool_dir: str,
-    max_line_length: int | None = None,
-) -> DataFrame:
-    """Batch convenience: connect to ``unix://socket_path``, drain to EOF
-    into ``spool_dir``, and return the atom frame (read_text_lines columns)
-    tagged with the socket resource name."""
-    res = UnixSocketResource(b"unix://" + socket_path.encode())
-    if not res.open():
-        raise OSError(f"unix socket {socket_path} absent or refusing")
-    spool_unix_socket(res, spool_dir)
-    return read_text_lines(
-        spark,
-        spool_dir,
-        max_line_length=max_line_length,
-        source_tag="unix://" + socket_path,
-    )
 
 
 def multisource_union(sources: list[DataFrame]) -> DataFrame:

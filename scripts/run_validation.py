@@ -36,7 +36,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logdata_anomaly_miner_spark.config import load_spec, to_suite_config
-    from logdata_anomaly_miner_spark.constraints.suite import run_suite
+    from logdata_anomaly_miner_spark.constraints.suite import run_suite, utc_day_partition
     from logdata_anomaly_miner_spark.plans.checkpoint import CheckpointManifest
     from logdata_anomaly_miner_spark.session import get_spark
 
@@ -48,9 +48,9 @@ def main() -> int:
     media = spark.read.parquet(args.media)
     manifest = CheckpointManifest(spark, f"{args.out}/manifest")
 
-    docs = docs.withColumn(
-        "partition", F.from_unixtime(F.col("ts").cast("long"), "yyyy-MM-dd")
-    )
+    # the key run_suite labels its verdicts with, so each slice is exactly
+    # one verdict partition and a null ts is its own slice
+    docs = docs.withColumn("partition", utc_day_partition(F.col("ts")))
     partitions = sorted(
         r["partition"] for r in docs.select("partition").distinct().collect()
     )

@@ -2,13 +2,15 @@
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.functions.dedup import (
     exact_dup_groups,
-    lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_dups,
@@ -43,13 +45,45 @@ def test_exact_dup_groups(spark):
     assert sorted(out[0]["doc_ids"]) == [1, 2, 3]  # normalization folds 3 in
 
 
+def _ref_shingles(text, k=3):
+    toks = re.sub(r"\s+", " ", re.sub(r"[^a-z0-9\s]", " ", text.lower())).strip().split(" ")
+    if len(toks) < k:
+        return {" ".join(toks)}
+    return {" ".join(toks[j : j + k]) for j in range(len(toks) - k + 1)}
+
+
+def _ref_lsh_candidates(docs, hash_fn, n_hashes, bands, rows):
+    """Plain-Python MinHash + banding: minhash_i = min over the shingles of
+    hash_fn(i, shingle); a band's bucket is md5 of its minhashes joined by
+    "|" in seed order; docs sharing a (band, bucket) are candidates."""
+    buckets: dict[tuple[int, str], list[int]] = {}
+    for doc_id, text in docs:
+        sig = [min(hash_fn(i, sh) for sh in _ref_shingles(text)) for i in range(n_hashes)]
+        for b in range(bands):
+            key = "|".join(str(m) for m in sig[b * rows : (b + 1) * rows])
+            buckets.setdefault((b, hashlib.md5(key.encode()).hexdigest()), []).append(doc_id)
+    return {(a, c) for ids in buckets.values() for a in ids for c in ids if a < c}
+
+
+def _md5_minhash(i, sh):
+    return hashlib.md5(f"{i}:{sh}".encode()).hexdigest()
+
+
+def _spark_xx_minhash(spark, docs, n_hashes):
+    """xxhash64(seed, xxhash64(shingle)) for every (seed, shingle) of
+    ``docs``, taken from Spark as the hash primitive only (no Python
+    xxhash)."""
+    shs = sorted({sh for _, t in docs for sh in _ref_shingles(t)})
+    df = spark.createDataFrame(
+        [(i, sh) for i in range(n_hashes) for sh in shs], "i int, sh string"
+    )
+    h = df.select("i", "sh", F.xxhash64("i", F.xxhash64("sh")).alias("h")).collect()
+    table = {(r["i"], r["sh"]): r["h"] for r in h}
+    return lambda i, sh: table[(i, sh)]
+
+
 def test_minhash_lsh_finds_near_dups(spark):
-    sig = minhash_signatures(_docs(spark), "doc_id", "text", n_hashes=16, shingle_k=3)
-    assert sig.count() == 5 * 16
-    # identical docs share identical signatures
-    s = {(r["doc_id"], r["seed"]): r["minhash"] for r in sig.collect()}
-    assert all(s[(1, k)] == s[(2, k)] for k in range(16))
-    pairs = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(sig, "doc_id").collect()}
+    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(_docs(spark)).collect()}
     assert (1, 2) in pairs and (1, 3) in pairs
     assert not any(5 in p for p in pairs)
     # the jaccard~0.4 pair (1,4) is below these banding parameters' reliable
@@ -60,38 +94,28 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert 0.3 <= got[(1, 4)] < 1.0
 
 
-def test_fused_minhash_banding_matches_two_step(spark):
-    """minhash_lsh_candidates (r8 fused path — buckets projected straight
-    off the wide aggregation) must emit exactly the candidate set of the
-    unfused minhash_signatures(_xx) -> lsh_candidate_pairs pipeline: the
-    band bucket md5 input string is identical by construction, for both
-    hash families."""
-    from logdata_anomaly_miner_spark.functions.dedup import (
-        minhash_lsh_candidates,
-        minhash_signatures_xx,
-    )
-
-    docs = _docs(spark)
+def test_minhash_lsh_candidates_match_python_reference(spark):
+    """minhash_lsh_candidates emits exactly the candidate set of the
+    plain-Python MinHash + banding reference, for both hash families. The
+    one-word variants of one sentence are pairwise near the banding
+    threshold, so which of them pair depends on the exact hash values."""
+    words = "the engine validates every span of every document in one pass".split()
+    rows = DOCS + [
+        (100 + j, " ".join("zz" if i == j else w for i, w in enumerate(words)))
+        for j in range(len(words))
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     for use_xx, nh, bands, rpb in [(False, 16, 4, 4), (True, 30, 10, 3)]:
-        sig = (
-            minhash_signatures_xx(docs, "doc_id", "text", n_hashes=nh, shingle_k=3)
-            if use_xx
-            else minhash_signatures(docs, "doc_id", "text", n_hashes=nh, shingle_k=3)
-        )
-        two_step = {
-            (r["id_a"], r["id_b"])
-            for r in lsh_candidate_pairs(
-                sig, "doc_id", bands=bands, rows_per_band=rpb
-            ).collect()
-        }
-        fused = {
+        hash_fn = _spark_xx_minhash(spark, rows, nh) if use_xx else _md5_minhash
+        want = _ref_lsh_candidates(rows, hash_fn, nh, bands, rpb)
+        got = {
             (r["id_a"], r["id_b"])
             for r in minhash_lsh_candidates(
                 docs, "doc_id", "text", n_hashes=nh, shingle_k=3,
                 bands=bands, rows_per_band=rpb, use_xx=use_xx,
             ).collect()
         }
-        assert fused == two_step and fused
+        assert got == want and got, use_xx
 
 
 def test_jaccard_shingle_df_cap(spark):

@@ -14,7 +14,6 @@ import pytest
 from logdata_anomaly_miner_spark.operators.entropy import (
     check_entropy,
     learn_bigram_freq,
-    score_entropy_expr,
     score_entropy_pandas,
 )
 
@@ -61,12 +60,8 @@ def _spark_sequential_scores(spark, scorer):
     return scores
 
 
-@pytest.mark.parametrize("which", ["expr", "pandas"])
-def test_sequential_parity_scores(spark, which):
-    if which == "expr":
-        scorer = lambda df, b: score_entropy_expr(df, "value", b)  # noqa: E731
-    else:
-        scorer = lambda df, b: score_entropy_pandas(spark, df, "value", b)  # noqa: E731
+def test_sequential_parity_scores(spark):
+    scorer = lambda df, b: score_entropy_pandas(spark, df, "value", b)  # noqa: E731
     got = _spark_sequential_scores(spark, scorer)
     want = _ref_scores()
     assert got == pytest.approx(want, abs=1e-12)
@@ -76,7 +71,7 @@ def test_sequential_parity_scores(spark, which):
 
 
 def test_non_ascii_utf8_byte_parity(spark):
-    """Learner + both scorers must agree on UTF-8 BYTES for non-ASCII text,
+    """Learner + scorer must agree on UTF-8 BYTES for non-ASCII text,
     matching the reference's bytes() iteration (EntropyDetector.py:128-145).
     'café' is 5 bytes (c3 a9 for é) -> 6 bigram pairs; codepoint-based code
     would see 4 chars / 5 pairs and a code 233 ≠ bytes {0xc3, 0xa9}."""
@@ -89,10 +84,6 @@ def test_non_ascii_utf8_byte_parity(spark):
     # (0xc3, 0xa9) must be a learned pair (the two bytes of é)
     assert any(r["first"] == 0xC3 and r["second"] == 0xA9 for r in rows)
     score_df = spark.createDataFrame([("café",), ("中caf",), ("xyz",)], "value string")
-    got_expr = {
-        r["value"]: r["critical_val"]
-        for r in score_entropy_expr(score_df, "value", freq).collect()
-    }
     got_pd = {
         r["value"]: r["critical_val"]
         for r in score_entropy_pandas(spark, score_df, "value", freq).collect()
@@ -115,7 +106,6 @@ def test_non_ascii_utf8_byte_parity(spark):
             s = b[i + 1] if i != len(b) - 1 else 256
             probs.append(tab.get((f, s), 0) / tot[f] if f in tot else 0.0)
         want = sum(probs) / len(probs)
-        assert got_expr[v] == pytest.approx(want, abs=1e-12), v
         assert got_pd[v] == pytest.approx(want, abs=1e-12), v
 
 

@@ -96,10 +96,11 @@ def test_global_prefix_scan_multi_bucket(spark):
         prev = t
     df = spark.createDataFrame(rows, "event_id long, ts double").repartition(8)
     for nb in (3, 7, 1000):
-        adj = {
-            r["event_id"]: r["ts_adj"]
-            for r in monotonic_adjust(df, num_buckets=nb).collect()
-        }
+        out = monotonic_adjust(df, num_buckets=nb)
+        # a dense integral ingest id is range-bucketed by equal width
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "width_bucket" in plan and "percentile_approx" not in plan
+        adj = {r["event_id"]: r["ts_adj"] for r in out.collect()}
         assert adj == want_adj, f"num_buckets={nb}"
         bad = sorted(
             r["event_id"]
@@ -193,8 +194,9 @@ def test_range_bucket_null_skew_and_stability(spark):
     """_with_range_bucket invariants (round-4 determinism fix): bucket is
     a pure row function (two evaluations agree), monotone in the order
     value, NULL order values land in bucket 0 (their nulls-first window
-    position), and quantile boundaries keep a bursty distribution
-    balanced (no bucket hoards the burst)."""
+    position), and quantile boundaries keep a bursty double distribution
+    balanced (no bucket hoards the burst). A nullable bigint order column
+    gets equal-width buckets, its nulls in bucket 0 too."""
     from pyspark.sql import functions as F
 
     from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
@@ -205,6 +207,7 @@ def test_range_bucket_null_skew_and_stability(spark):
     ] + [(None,), (None,)]
     df = spark.createDataFrame(rows, "ts double")
     b = _with_range_bucket(df, ["ts"], 8)
+    assert "percentile_approx" in b._jdf.queryExecution().optimizedPlan().toString()
     got = b.groupBy("_pid").agg(
         F.count(F.lit(1)).alias("n"), F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).collect()
@@ -223,6 +226,32 @@ def test_range_bucket_null_skew_and_stability(spark):
     # stable across a second evaluation of the same plan
     again = {r["_pid"]: r["n"] for r in b.groupBy("_pid").count().withColumnRenamed("count", "n").collect()}
     assert again == sizes
+
+    ids = spark.createDataFrame(
+        [(i,) for i in range(100)] + [(None,), (None,)], "event_id bigint"
+    )
+    w = _with_range_bucket(ids, ["event_id"], 4)
+    plan = w._jdf.queryExecution().optimizedPlan().toString()
+    assert "width_bucket" in plan and "percentile_approx" not in plan
+    by_pid = {
+        r["_pid"]: (r["n"], r["lo"], r["hi"])
+        for r in w.groupBy("_pid").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("event_id").alias("lo"),
+            F.max("event_id").alias("hi"),
+        ).collect()
+    }
+    # nulls alone in bucket 0; ids 0..99 in four equal-width buckets
+    assert by_pid == {
+        0: (2, None, None), 1: (25, 0, 24), 2: (25, 25, 49),
+        3: (25, 50, 74), 4: (25, 75, 99),
+    }
+    # so the prefix scan sees a null id first in ingest order
+    seq = spark.createDataFrame(
+        [(None, 50.0), (1, 10.0), (2, 60.0), (3, 20.0)], "event_id bigint, ts double"
+    )
+    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(seq, num_buckets=2).collect()}
+    assert adj == {None: 50.0, 1: 50.0, 2: 60.0, 3: 60.0}
 
 
 def test_range_bucket_timestamp_order_col(spark):

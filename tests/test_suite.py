@@ -229,3 +229,52 @@ def test_suite_warm_calls_reuse_generated_code(spark):
     # new compilations over the two warm calls, measured at local[4]: 10
     # with the larger cache, 51-94 at the default of 100
     assert compilations.getCount() - before <= 30
+
+
+def test_run_validation_cli_validates_every_row_once(spark, tmp_path, monkeypatch):
+    """scripts/run_validation.py slices the input by the UTC-day key that
+    run_suite labels its verdicts with: a null-ts doc is its own slice (it
+    used to make sorted() raise next to dated slices), and in a non-UTC
+    session two docs either side of UTC midnight stay in two slices."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from logdata_anomaly_miner_spark import session
+
+    script = Path(__file__).resolve().parents[1] / "scripts" / "run_validation.py"
+    mod_spec = importlib.util.spec_from_file_location("run_validation", script)
+    cli = importlib.util.module_from_spec(mod_spec)
+    mod_spec.loader.exec_module(cli)
+
+    schema = (
+        "doc_id string, ts double, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    midnight = 86_400.0 * 19_700  # 2023-12-09T00:00Z
+    span = [("text", "a", None, 0)]
+    docs = spark.createDataFrame(
+        [("d1", None, span), ("d2", midnight - 60, span), ("d3", midnight + 60, span)],
+        schema,
+    )
+    media = gen_media(spark, 10)
+    docs.write.parquet(str(tmp_path / "docs"))
+    media.write.parquet(str(tmp_path / "media"))
+    out = tmp_path / "out"
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(sys, "argv", [
+        "run_validation.py", "--docs", str(tmp_path / "docs"),
+        "--media", str(tmp_path / "media"), "--out", str(out),
+    ])
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert cli.main() == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+    manifest = CheckpointManifest(spark, str(out / "manifest")).read().collect()
+    assert sum(r["rows_scanned"] for r in manifest) == 3
+    verdicts = run_suite(spark, docs, media, persist=False).verdicts.collect()
+    assert {r["partition"] for r in manifest} == {r["partition"] for r in verdicts}
+    assert len(manifest) == 3

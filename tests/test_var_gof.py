@@ -469,10 +469,12 @@ def test_spec_candidate_with_injected_table(spark):
         finally:
             sys.path.remove(REFERENCE_LIB)
         table = [float(x) for x in VTDData.quantiles["spec"]]
-    else:  # synthetic right-skewed standardized table
-        table = sorted(
-            ((i + 0.5) / 1000.0) ** 0.35 * 4.0 - 2.0 for i in range(1000)
-        )
+    else:  # synthetic left-skewed table, standardized like the reference's
+        # (mean 0, population sd 1): the sample is compared in z-space
+        raw = [((i + 0.5) / 1000.0) ** 0.35 for i in range(1000)]
+        mu0 = sum(raw) / len(raw)
+        sd0 = math.sqrt(sum((x - mu0) ** 2 for x in raw) / len(raw))
+        table = sorted((x - mu0) / sd0 for x in raw)
     vals = [5.0 + 2.0 * table[j] for j in range(0, 1000, 10)]
     df = spark.createDataFrame(_rows(vals), "g string, i long, v double")
     out = fit_continuous(
