@@ -69,34 +69,3 @@ def column_stats(
         ]
     )
     return one.select(F.explode(per_col).alias("s")).select("s.*")
-
-
-def partition_distinct_sketches(
-    df: DataFrame,
-    part_col: str,
-    columns: Sequence[str],
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-partition MERGEABLE HyperLogLog sketches (Apache DataSketches via
-    hll_sketch_agg) — the north-star incremental-stats shape at 10^12 rows:
-    each ingest appends one sketch row per new partition; global or
-    any-partition-subset distinct counts then come from merging the (tiny)
-    sketch table with hll_union_agg, never re-scanning the data. Values are
-    canonicalized to strings (bijective for the supported types)."""
-    aggs = [
-        F.hll_sketch_agg(F.col(c).cast("string"), F.lit(int(lg_k))).alias(f"sk_{c}")
-        for c in columns
-    ]
-    return df.groupBy(part_col).agg(*aggs)
-
-
-def merged_distinct_counts(
-    sketches: DataFrame, columns: Sequence[str]
-) -> DataFrame:
-    """One row of global distinct-count estimates from a sketch table
-    (hll_union_agg + hll_sketch_estimate) — O(|partitions|) work."""
-    aggs = [
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(f"sk_{c}"))).alias(f"nd_{c}")
-        for c in columns
-    ]
-    return sketches.agg(*aggs)

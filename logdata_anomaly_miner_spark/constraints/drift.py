@@ -85,10 +85,3 @@ def psi_kl(
         .groupBy(*g)
         .agg(F.sum("_psi").alias("psi"), F.sum("_kl").alias("kl"))
     )
-
-
-def drift_verdict(
-    psi_df: DataFrame, psi_threshold: float = 0.2, group_cols: Sequence[str] = ()
-) -> DataFrame:
-    """Pass/fail per group (PSI > 0.2 = major shift, the conventional cut)."""
-    return psi_df.withColumn("drift_fail", F.col("psi") > F.lit(psi_threshold))

@@ -3,49 +3,43 @@
 AMiner analogs: NewMatchPathDetector (unknown parser path ≙ unknown span
 kind), JsonModelElement strictness (missing/extra keys ≙ required fields
 null), TimestampsUnsortedDetector (ordering ≙ offset monotonicity per doc).
-All checks run on the exploded spans view and emit violation rows under the
-span-sequence (kind, text, media_ref, order) invariant.
+Each check is one boolean ``Column`` — true on a violating row — so the
+suite evaluates all of them in one projection over one scan
+(constraints/suite.py) and a caller can ``filter`` on any one alone.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def unknown_kinds(spans_flat: DataFrame, kind_vocab: Sequence[str]) -> DataFrame:
-    """Spans whose kind is outside the registered vocabulary."""
-    return spans_flat.filter(~F.col("kind").isin(*kind_vocab))
+def unknown_kind(kind_vocab: Sequence[str]) -> Column:
+    """A span whose kind is outside the registered vocabulary (null for a
+    null kind, which ``required_field_null`` reports)."""
+    return ~F.col("kind").isin(*kind_vocab)
 
 
-def required_non_null(spans_flat: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Spans with any required field null (no required fields -> no
-    violations, not filter(None))."""
-    cond = F.lit(False)
-    for c in cols:
-        cond = cond | F.col(c).isNull()
-    return spans_flat.filter(cond)
+def required_field_null(cols: Sequence[str]) -> Column:
+    """A span with any required field null (no required fields -> never)."""
+    return reduce(lambda a, b: a | b, (F.col(c).isNull() for c in cols), F.lit(False))
 
 
-def offsets_monotonic(documents: DataFrame) -> DataFrame:
-    """Documents whose span offsets do not strictly increase in array order.
+def offsets_not_increasing(spans: Column) -> Column:
+    """A document whose span offsets do not strictly increase in array order.
 
     Checked INSIDE the spans array (pure expression over the row, zero
     shuffle) rather than via a window over the exploded view — which would
     both shuffle and mis-group when doc_id uniqueness is itself violated."""
-    spans = F.col("spans")
-    bad = F.exists(
+    return (F.size(spans) >= 2) & F.exists(
         F.sequence(F.lit(1), F.size(spans) - 1),
         lambda i: F.element_at(spans, i + 1)["offset"] <= F.element_at(spans, i)["offset"],
     )
-    return documents.filter((F.size(spans) >= 2) & bad)
 
 
-def media_kind_consistency(spans_flat: DataFrame) -> DataFrame:
+def media_ref_on_non_media_kind() -> Column:
     """media_ref must only appear on media-ish kinds (image/audio/video)."""
-    return spans_flat.filter(
-        F.col("media_ref").isNotNull()
-        & ~F.col("kind").isin("image", "audio", "video")
-    )
+    return F.col("media_ref").isNotNull() & ~F.col("kind").isin("image", "audio", "video")

@@ -4,7 +4,7 @@ one pass, per-partition verdicts + violations + metrics.
 This is the engine's "analysis pipeline" ≙ AMiner's AnalysisChild select loop
 pushing each atom through every registered detector
 (aminer/AnalysisChild.py:298-408) — re-expressed as N DataFrame constraint
-programs over ONE cached exploded-spans view, unioned into a single
+programs over ONE exploded-spans view, unioned into a single
 violations DataFrame. The fan-out is SubhandlerFilter
 (aminer/analysis/AtomFilters.py:18-54) made set-oriented.
 
@@ -24,11 +24,14 @@ from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.constraints.drift import histogram, psi_kl
 from logdata_anomaly_miner_spark.constraints.referential import dangling_media_refs
+from logdata_anomaly_miner_spark.constraints.schema_checks import (
+    media_ref_on_non_media_kind,
+    offsets_not_increasing,
+    required_field_null,
+    unknown_kind,
+)
 from logdata_anomaly_miner_spark.constraints.uniqueness import duplicate_keys_salted
-# NOTE: the four schema checks (constraints/schema_checks.py) are inlined
-# into the merged single-scan branch below, predicate-for-predicate — the
-# standalone functions remain the unit-tested reference implementations.
-from logdata_anomaly_miner_spark.datagen import KINDS
+from logdata_anomaly_miner_spark.datagen import KINDS, explode_spans
 from logdata_anomaly_miner_spark.operators.entropy import (
     check_entropy,
     learn_bigram_freq,
@@ -104,45 +107,28 @@ def run_suite(
     """Run all constraint suites; returns violations, per-partition verdicts,
     and job metrics.
 
-    ``persist=True`` caches the exploded view (right when `documents` is an
-    expensive upstream computation). For parquet/Iceberg-backed input pass
-    ``persist=False``: re-scanning with column pruning is cheaper than the
-    cache build — caching is memory-bandwidth-bound and doesn't scale with
-    cores, while pruned columnar scans do."""
+    Neither ``documents`` nor its exploded view is cached: every check
+    re-scans the input with column pruning, which on parquet/Iceberg input
+    is cheaper than a cache build (caching is memory-bandwidth-bound and
+    does not scale with cores; pruned columnar scans do). A caller whose
+    ``documents`` is an expensive upstream computation should ``.persist()``
+    it before the call. ``persist`` is accepted for existing callers and
+    selects nothing.
+
+    ``violations`` is returned as an uncached plan: every action on it
+    recomputes the checks."""
     cfg = config or SuiteConfig()
     t_start = time.time()
 
     docs = documents.withColumn("partition", utc_day_partition(F.col("ts")))
-    if persist:
-        docs = docs.persist()
     # partition rides along through posexplode — no join needed (a join here
     # would shuffle |spans| rows and break under duplicate doc_ids anyway).
-    # doc_bad (offsets_monotonic's array-local predicate) is computed BEFORE
-    # the explode, on the intact spans array, and rides along so the merged
-    # single-scan check branch below can emit the doc-level violation at
-    # ord == 0 without a second pass over the table.
-    spans_col = F.col("spans")
-    doc_bad = (F.size(spans_col) >= 2) & F.exists(
-        F.sequence(F.lit(1), F.size(spans_col) - 1),
-        lambda i: F.element_at(spans_col, i + 1)["offset"]
-        <= F.element_at(spans_col, i)["offset"],
+    # doc_bad is computed BEFORE the explode, on the intact spans array, and
+    # rides along so the merged single-scan check branch below can emit the
+    # doc-level violation at ord == 0 without a second pass over the table.
+    flat = explode_spans(
+        docs.withColumn("doc_bad", offsets_not_increasing(F.col("spans")))
     )
-    flat = docs.select(
-        "doc_id", "ts", "partition", doc_bad.alias("doc_bad"),
-        F.posexplode("spans").alias("ord", "span"),
-    ).select(
-        "doc_id",
-        "ts",
-        "partition",
-        "doc_bad",
-        "ord",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
-    )
-    if persist:
-        flat = flat.persist()
 
     checks: list[DataFrame] = []
 
@@ -166,7 +152,7 @@ def run_suite(
     # 2+3+5-pickup. ONE scan for every per-row check (round 6): the
     # referential pickup, all four schema checks, and the entropy-failure
     # pickup used to be SIX separate branches of the union — six parquet
-    # scans each decoding the full nested spans column under persist=False.
+    # scans each decoding the full nested spans column.
     # The profile is scan-dominated and this host's scaling loss is
     # memory-bandwidth contention (BENCH/NOTES.md), so the row-local checks
     # now evaluate together in one projection over one scan: each span
@@ -174,10 +160,9 @@ def run_suite(
     # via explode. The two set-membership checks (dangling refs, entropy
     # failures) become broadcast LEFT joins with marker columns — both sets
     # are distinct-keyed, so join multiplicity is exactly 1 and the row
-    # multiset is identical to the former semi-join branches. Semantics of
-    # each predicate are byte-identical to constraints/schema_checks.py
-    # (including null-kind behavior: a null `when` condition emits nothing,
-    # exactly as the former `filter` dropped null predicates).
+    # multiset is identical to the former semi-join branches. A null `when`
+    # condition (e.g. an unknown-kind test on a null kind) emits nothing,
+    # as a `filter` on the same predicate would drop the row.
     # The dangling-ref SET itself still comes from a separate nested-PRUNED
     # scan (only spans.media_ref read — see dangling_media_refs), which is
     # why it is not folded into this full-decode scan.
@@ -187,9 +172,9 @@ def run_suite(
     # feeds the merged scan): dedup-before-compute — learn and score over
     # DISTINCT texts (|distinct| ≪ |spans| for natural corpora). Learning
     # from distinct values ≙ the reference's skip_repetitions mode
-    # (EntropyDetector.py:170-174). texts is persisted regardless of the
-    # `persist` flag: the set is consumed twice (learner collect + scorer
-    # pass) and is far smaller than re-scanning + re-deduplicating.
+    # (EntropyDetector.py:170-174). texts is the one cached frame: the set
+    # is consumed twice (learner collect + scorer pass) and is far smaller
+    # than re-scanning + re-deduplicating.
     texts = (
         flat.filter(F.col("text").isNotNull()).select("text").dropDuplicates().persist()
     )
@@ -214,20 +199,16 @@ def run_suite(
     failures = F.filter(
         F.array(
             F.when(F.col("_dangling"), _f("referential", "Dangling media_ref")),
-            F.when(~F.col("kind").isin(*cfg.kind_vocab), _f("schema", "Unknown span kind")),
+            F.when(unknown_kind(cfg.kind_vocab), _f("schema", "Unknown span kind")),
             F.when(
-                F.col("kind").isNull() | F.col("offset").isNull(),
+                required_field_null(["kind", "offset"]),
                 _f("schema", "Required field null"),
             ),
             F.when(
                 F.col("doc_bad") & (F.col("ord") == 0),
                 _f("schema", "Offset not increasing", doc_level=True),
             ),
-            F.when(
-                F.col("media_ref").isNotNull()
-                & ~F.col("kind").isin("image", "audio", "video"),
-                _f("schema", "media_ref on non-media kind"),
-            ),
+            F.when(media_ref_on_non_media_kind(), _f("schema", "media_ref on non-media kind")),
             F.when(F.col("_bad_text"), _f("entropy", "Value entropy anomaly detected")),
         ),
         lambda x: x.isNotNull(),
@@ -358,11 +339,8 @@ def run_suite(
         "wall_time_s": round(wall, 3),
         "docs_per_sec": round(n_docs / wall, 1) if wall > 0 else None,
     }
-    # texts was persisted unconditionally above; the verdict collect is the
-    # last action that reads it — release it here so repeated run_suite
-    # calls in one session don't accumulate cached blocks
+    # the verdict collect is the last action that reads texts — release it
+    # here so repeated run_suite calls in one session don't accumulate
+    # cached blocks
     texts.unpersist()
-    if persist:
-        flat.unpersist()
-        docs.unpersist()
     return SuiteResult(violations=violations, verdicts=verdicts, metrics=metrics)

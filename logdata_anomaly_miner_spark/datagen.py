@@ -135,18 +135,18 @@ def gen_documents(
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
-    """Canonical working view ``spans_flat`` (FIXTURES.md §1).
+    """Canonical working view ``spans_flat`` (FIXTURES.md §1): one row per
+    span, carrying every document column but ``spans``.
 
     posexplode preserves array order as ``ord`` — the span-sequence
     (kind, text, media_ref, order) equality invariant rides on this column.
     """
+    carried = [c for c in documents.columns if c != "spans"]
     return documents.select(
-        "doc_id",
-        "ts",
+        *carried,
         F.posexplode("spans").alias("ord", "span"),
     ).select(
-        "doc_id",
-        "ts",
+        *carried,
         "ord",
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),

@@ -642,9 +642,10 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN (scale path). Oracle-certified end-to-end: the
     hyperplanes come from a deterministic LCG that DuckDB replicates
     exactly in HUGEINT arithmetic, so the oracle reproduces the SAME
-    signatures, probe set, and cosine re-rank (not the exact-scan answer —
-    recall vs that is < 1 by construction and is certified separately by
-    the banding-vs-ground-truth jaccard queries)."""
+    signatures, probe set, and cosine re-rank — not the exact-scan answer.
+    Recall against the exact scan is < 1 by construction and is not
+    checked: the jaccard queries' exact-Jaccard oracles certify MinHash
+    banding, not these hyperplanes."""
     from logdata_anomaly_miner_spark.functions.similarity import lsh_bucket_topk
 
     emb = _read(spark, sf_dir, "embeddings")

@@ -304,139 +304,3 @@ def portable_simhash_bits(
         F.col("bit").cast("int").alias("bit"),
         F.when(F.col("s") > 0, 1).otherwise(0).cast("int").alias("b"),
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_dups(
-    sim: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by simhash: block on 16-bit chunks (a pair within
-    hamming ≤3 shares at least one of 4 chunks — pigeonhole), verify
-    hamming distance inside blocks."""
-    chunks = sim.select(
-        F.col(id_col).alias("_id"),
-        F.col("simhash"),
-        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("chunk"),
-    ).withColumn("key", F.expr("shiftright(simhash, chunk * 16) & 65535"))
-    a = chunks.select(F.col("_id").alias("id_a"), F.col("simhash").alias("sh_a"), "chunk", "key")
-    b = chunks.select(F.col("_id").alias("id_b"), F.col("simhash").alias("sh_b"), "chunk", "key")
-    return (
-        a.join(b, ["chunk", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming64(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates()
-    )
-
-
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node, component) for every node appearing in ``pairs`` — component
-    is the SMALLEST node (by the ids' natural ordering) reachable from it.
-
-    The consolidation step after candidate-pair generation: LSH banding /
-    simhash blocking / exact-hash grouping emit duplicate PAIRS, but
-    keep-one-per-cluster dedup needs the transitive closure. Implemented
-    as alternating large-star / small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): converges in
-    O(log n) rounds, and every round is a key-partitioned groupBy + hash
-    join over the edge set — no driver-side graph, no partition-less
-    shuffle. Each round localCheckpoints to truncate lineage (an iterative
-    plan would otherwise grow without bound). Convergence is detected by
-    an order-insensitive edge-set hash; the driver loop holds two scalars
-    per round.
-    """
-    spark = pairs.sparkSession
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sig(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-insensitive, no ANSI long overflow (edges are
-            # distinct, so xor cancellation needs a hash collision)
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def large_star(e: DataFrame) -> DataFrame:
-        n = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).dropDuplicates()
-        mins = n.groupBy("u").agg(F.min("v").alias("_mv"))
-        mins = mins.select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
-        return (
-            n.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        n = (
-            e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-        mins = n.groupBy("u").agg(F.min("v").alias("m"))
-        return (
-            n.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-
-    prev = _sig(edges)
-    converged = False
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint(eager=True)
-        cur = _sig(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # an unconverged edge set is NOT a star forest — the extraction
-        # below would silently split true clusters; fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (rounds needed grow with log(component size))"
-        )
-
-    # converged edge set is a collection of stars (node -> component root)
-    star = edges.select(
-        F.greatest("u", "v").alias("node"), F.least("u", "v").alias("component")
-    ).dropDuplicates()
-    return nodes.join(star, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("component")
-    )
-
-
-def dup_clusters(
-    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
-) -> DataFrame:
-    """(component, n_members, members) duplicate clusters from candidate
-    pairs — keep min(component) per cluster, drop the rest."""
-    cc = connected_components(pairs, a_col, b_col)
-    return cc.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sort_array(F.collect_list("node")).alias("members"),
-    )

@@ -109,28 +109,3 @@ def blocklist_event(
         raise Exception("Blocklisting data not understood by this detector")
     cols, _ = blocklist_path(ignore_cols, event_data, detector)
     return cols, f"Blocklisted path {event_data} in {event_type}."
-
-
-def save_path_lists(
-    spark,
-    table_path: str,
-    constraint_cols: Sequence[str] = (),
-    ignore_cols: Sequence[str] = (),
-) -> None:
-    """Persist the mutated constraint/ignore lists as a tiny table — the
-    batch analog of the reference persisting detector state
-    (PersistenceUtil.py:116-125): the NEXT run loads them and screens
-    atoms accordingly, so a remote-control mutation survives restarts."""
-    rows = [("constraint", c) for c in constraint_cols] + [
-        ("ignore", c) for c in ignore_cols
-    ]
-    df = spark.createDataFrame(rows or [], "list_type string, col string")
-    df.coalesce(1).write.mode("overwrite").parquet(table_path)
-
-
-def load_path_lists(spark, table_path: str) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """Load (constraint_cols, ignore_cols) persisted by save_path_lists."""
-    rows = spark.read.parquet(table_path).collect()
-    constraint = tuple(sorted(r["col"] for r in rows if r["list_type"] == "constraint"))
-    ignore = tuple(sorted(r["col"] for r in rows if r["list_type"] == "ignore"))
-    return constraint, ignore

@@ -83,16 +83,3 @@ def manhattan_vs_baseline(
         .groupBy(*g, "w")
         .agg((F.sum("_num") / F.sum("_den")).alias("dist"))
     )
-
-
-def check_count_clusters(
-    current: DataFrame,
-    baseline: DataFrame,
-    id_cols: Sequence[str],
-    confidence_factor: float = 0.5,
-    idf: bool = False,
-    n_baseline_ids: int | None = None,
-) -> DataFrame:
-    """Anomalous (id, w) vectors: similarity (1 − dist) below the factor."""
-    d = manhattan_vs_baseline(current, baseline, id_cols, idf, n_baseline_ids)
-    return d.filter((1.0 - F.col("dist")) < F.lit(confidence_factor))

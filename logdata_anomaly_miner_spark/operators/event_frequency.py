@@ -20,10 +20,10 @@ Key semantics reproduced (and unit-tested in tests/test_event_frequency.py):
   checked; the final (incomplete) window is never checked.
 - **Zero-count windows count**: a key active earlier but silent in window w
   contributes count 0 there (reset_counter appends 0) — realized via a
-  per-key window **spine** (`sequence()` + explode + left join), which also
-  yields the "No log events received in time window" warnings for globally
-  empty windows (reference :195-201; one warning per maximal gap, because
-  one closing atom reports all windows it skips).
+  per-key window **spine** (`sequence()` + explode + left join). The
+  reference's "No log events received in time window" warnings for
+  globally empty windows (:195-201; one per maximal gap) come from the
+  stateful replay in streaming/state.py.
 - ``unique_path_list`` ⇒ count **distinct** values per window (:320-328,
   ``countDistinct``; at extreme scale swap for approx_count_distinct).
 
@@ -317,55 +317,6 @@ def check_early_exceeding(
         crossed.withColumn("_rn", F.row_number().over(first))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def empty_window_gaps(
-    df: DataFrame, window_size: float, ts_col: str = "ts", t0: float | None = None
-) -> DataFrame:
-    """Globally-empty closed windows, grouped into maximal gaps — one warning
-    row per gap (reference emits one event per closing atom that skipped
-    windows, :195-201). Returns (gap_start_w, gap_end_w, n_windows)."""
-    ts = F.col(ts_col).cast("double")
-    if t0 is None:
-        t0_df = df.agg(F.min(ts).alias("t0"))
-        df = df.crossJoin(F.broadcast(t0_df))
-        t0_col = F.col("t0")
-    else:
-        t0_col = F.lit(float(t0))
-    wins = (
-        df.withColumn("w", F.floor((ts - t0_col) / F.lit(float(window_size))))
-        .select("w")
-        .dropDuplicates()
-    )
-    # consecutive occupied windows with a hole between them => a gap.
-    # next_w is a global lead over ONE sequence — same two-phase
-    # distributed scan as timestamps.py: range-partition on w, local lead
-    # within each range, and for each range's last row take the first w
-    # of the nearest following non-empty range from the (tiny, broadcast)
-    # per-range summary. No stage sees the whole window set.
-    from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
-
-    d = _with_range_bucket(wins, ["w"], None)
-    d = d.withColumn(
-        "_next_local", F.lead("w").over(Window.partitionBy("_pid").orderBy("w"))
-    )
-    firsts = d.groupBy("_pid").agg(F.min("w").alias("_first_w"))
-    nxt = (
-        firsts.alias("a")
-        .join(firsts.alias("b"), F.col("b._pid") > F.col("a._pid"))
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.min_by(F.col("b._first_w"), F.col("b._pid")).alias("_carry_next"))
-    )
-    return (
-        d.join(F.broadcast(nxt), "_pid", "left")
-        .withColumn("next_w", F.coalesce("_next_local", "_carry_next"))
-        .filter(F.col("next_w") > F.col("w") + 1)
-        .select(
-            (F.col("w") + 1).alias("gap_start_w"),
-            (F.col("next_w") - 1).alias("gap_end_w"),
-            (F.col("next_w") - F.col("w") - 1).alias("n_windows"),
-        )
     )
 
 

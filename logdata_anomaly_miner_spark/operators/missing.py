@@ -38,19 +38,3 @@ def check_missing_values(
         )
         .drop("_now_us")
     )
-
-
-def check_missing_any_of(
-    df: DataFrame,
-    value_col_options: Sequence[str],
-    interval_s: float,
-    ts_micros_col: str,
-    now_micros: int | None = None,
-) -> DataFrame:
-    """MissingMatchPathListValueDetector (reference :335-359): the tracked
-    value comes from the FIRST present path of a list — coalesce, then the
-    same last-seen check."""
-    v = F.coalesce(*[F.col(c) for c in value_col_options]).alias("value")
-    return check_missing_values(
-        df.select(v, F.col(ts_micros_col)), ["value"], interval_s, ts_micros_col, now_micros
-    )

@@ -1,11 +1,10 @@
-"""Novelty detectors: new value / new value-combo / new path.
+"""Novelty detectors: new value / new value-combo / new id-value combo.
 
 Re-expresses (semantics only, not code):
 - NewMatchPathValueDetector      (aminer/analysis/NewMatchPathValueDetector.py:28-126;
                                   check at :91, learn at :92-98)
 - NewMatchPathValueComboDetector (aminer/analysis/NewMatchPathValueComboDetector.py:29-239)
 - EnhancedNewMatchPathValueComboDetector (…/EnhancedNewMatchPathValueComboDetector.py:27-228)
-- NewMatchPathDetector           (aminer/analysis/NewMatchPathDetector.py:28-168)
 - NewMatchIdValueComboDetector   (aminer/analysis/NewMatchIdValueComboDetector.py:30-273)
 
 Spark shape (SURVEY.md §2.4): the learned ``known_values_set`` becomes a
@@ -157,18 +156,3 @@ def check_new_id_combos(
     if baseline is None:
         return agg
     return agg.join(baseline.select(*value_cols), on=list(value_cols), how="left_anti")
-
-
-def check_new_paths(
-    df: DataFrame, path_col: str, baseline: DataFrame | None
-) -> DataFrame:
-    """NewMatchPathDetector ≙ schema drift: unknown span ``kind`` vs the
-    registered vocabulary."""
-    seen = df.select(path_col).dropDuplicates()
-    if baseline is None:
-        return seen
-    return seen.join(
-        F.broadcast(baseline.select(path_col).dropDuplicates()),
-        on=[path_col],
-        how="left_anti",
-    )

@@ -954,6 +954,10 @@ def changed_var_types(
 
     Returns (group_cols..., chunk, old_dist, new_dist, stat, confidence)
     — one row per failed chunk of a continuous-fitted group. KS mode only.
+
+    Kept as a reference replay: tests/test_var_gof.py::
+    test_changed_var_types_alternative_walk checks it against a replica of
+    the reference's alternative walk (:1199-1268).
     """
     crit_scale = F.lit(math.sqrt(-math.log(gof_alpha / 2.0) / 2.0))
     v = F.col(value_col).cast("double")

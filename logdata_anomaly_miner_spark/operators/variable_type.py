@@ -91,24 +91,3 @@ def ks_statistic(
         .groupBy(*g)
         .agg(F.max("_d").alias("ks"))
     )
-
-
-def check_type_drift(
-    current: DataFrame,
-    baseline_types: DataFrame,
-    group_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Variables whose inferred type changed vs the learned classification
-    (e.g. a continuous column suddenly static) — the reference's
-    type-switch anomaly."""
-    cur = infer_variable_types(current, group_col, value_col).select(
-        group_col, F.col("var_type").alias("cur_type")
-    )
-    return (
-        cur.join(
-            baseline_types.select(group_col, F.col("var_type").alias("base_type")),
-            group_col,
-        )
-        .filter(F.col("cur_type") != F.col("base_type"))
-    )

@@ -311,15 +311,6 @@ def _group_index(rx: str, name: str) -> int:
     raise KeyError(name)
 
 
-def repeated_items(col: Column, item_pattern: str, group: int = 1) -> Column:
-    """Per-item value recovery for ``repeated`` spans
-    (RepeatedElementDataModelElement): the whole repetition is captured as
-    one span (single-pass regex engines keep only the last iteration's
-    groups), then this extracts every item occurrence as an array —
-    array<string> ready for transform()/cast."""
-    return F.regexp_extract_all(col, F.lit(item_pattern), group)
-
-
 def parse_value_branches(
     df: DataFrame,
     discriminator_col: str,
@@ -400,6 +391,10 @@ def infer_years(
     raw reading (data, not computed state) and wraparound lags the
     straggler-corrected reading, which is fully determined once the raw
     carry is joined — so three independent carry joins suffice.
+
+    Kept as a reference replay: tests/test_parsing.py::
+    test_infer_years_reference_parity runs DateTimeModelElementTest
+    test11/13/14 against it.
     """
     from pyspark.sql import Window
 

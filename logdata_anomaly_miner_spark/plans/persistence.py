@@ -83,7 +83,9 @@ def ranges_from_reference_json(
 def known_values_to_reference_json(values: DataFrame, value_col: str = "value") -> str:
     """NewMatchPathValueDetector baseline -> sorted value list
     (NewMatchPathValueDetector.py:140-145 persists the sorted set;
-    reference values are bytes -> 'bytes:' prefix)."""
+    reference values are bytes -> 'bytes:' prefix). Kept for format parity
+    with the reference: tests/test_operators3.py::
+    test_known_values_reference_json."""
     vals = sorted(r[value_col] for r in values.collect())
     return json.dumps([f"bytes:{v}" for v in vals])
 
@@ -91,6 +93,9 @@ def known_values_to_reference_json(values: DataFrame, value_col: str = "value") 
 def known_values_from_reference_json(
     spark: SparkSession, payload: str, value_col: str = "value"
 ) -> DataFrame:
+    """Load a reference NewMatchPathValueDetector baseline. Kept for format
+    parity with the reference: tests/test_operators3.py::
+    test_known_values_reference_json."""
     vals = [[_dec_key(v).decode() if isinstance(_dec_key(v), bytes) else _dec_key(v)]
             for v in json.loads(payload)]
     return spark.createDataFrame(vals, f"{value_col} string")
@@ -150,7 +155,9 @@ def write_known_values_reference_json(
 ) -> None:
     """Streamed NewMatchPathValueDetector baseline writer — sorted value
     list, partition-at-a-time; byte-identical to
-    atomic_write(path, known_values_to_reference_json(...))."""
+    atomic_write(path, known_values_to_reference_json(...)). Kept for byte
+    parity with the reference format: tests/test_operators3.py::
+    test_streamed_persistence_writers_byte_parity."""
 
     def emit(f):
         f.write("[")

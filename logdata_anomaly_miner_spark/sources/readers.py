@@ -88,26 +88,6 @@ def parse_json_atoms(
     return df.withColumn("parsed", parsed).withColumn("_parse_ok", ok)
 
 
-def unparsed_atoms(df: DataFrame) -> DataFrame:
-    """SimpleUnparsedAtomHandler analog: the rows that failed parsing."""
-    return df.filter(~F.col("_parse_ok"))
-
-
-def parse_json_string_field(
-    df: DataFrame,
-    field_col: str,
-    schema: T.StructType,
-    out_col: str = "nested",
-) -> DataFrame:
-    """JsonStringModelElement nested re-parse (aminer/parsing/
-    JsonStringModelElement.py): a JSON document embedded as a STRING value
-    inside an already-parsed structure gets its own schema-driven parse.
-    Adds ``out_col`` (struct) and ``<out_col>_ok``."""
-    inner = F.from_json(F.col(field_col), schema)
-    as_map = F.from_json(F.col(field_col), T.MapType(T.StringType(), T.StringType()))
-    return df.withColumn(out_col, inner).withColumn(f"{out_col}_ok", as_map.isNotNull())
-
-
 def parse_xml_atoms(
     df: DataFrame,
     schema: T.StructType,
@@ -131,45 +111,6 @@ def parse_xml_atoms(
     for fld in schema.fields:
         ok = ok | parsed[fld.name].isNotNull()
     return df.withColumn("parsed", parsed).withColumn("_parse_ok", ok)
-
-
-def read_log_resources(
-    spark: SparkSession,
-    resources: list[dict],
-    parsers: dict | None = None,
-    default_parser=None,
-    max_line_length: int = 1 << 16,
-    streaming: bool = False,
-) -> DataFrame:
-    """SimpleByteStreamLineAtomizerFactory analog (reference
-    aminer/input/SimpleByteStreamLineAtomizerFactory.py:20-76): one atom
-    frame from many log resources, where EACH resource may override the
-    factory defaults — its parser (`parser_id` into ``parsers``, a dict of
-    ``fn(df, raw_col) -> parsed df`` such as ReferenceConfig.parse), its
-    ``max_line_length`` (the reference's fixed 1<<16), and its source tag.
-
-    Resource dicts: ``{path, source?, parser_id?, max_line_length?}``.
-    Atoms from differently-parsed resources union by name with null-filled
-    missing columns — the columnar form of delivering every atom to the
-    same handler lists regardless of which parser produced it."""
-    frames = []
-    for r in resources:
-        df = read_text_lines(
-            spark,
-            r["path"],
-            max_line_length=r.get("max_line_length", max_line_length),
-            source_tag=r.get("source", r["path"]),
-            streaming=streaming,
-        )
-        fn = default_parser
-        if parsers is not None and r.get("parser_id") is not None:
-            if r["parser_id"] not in parsers:
-                raise KeyError(f"unknown parser_id {r['parser_id']!r}")
-            fn = parsers[r["parser_id"]]
-        if fn is not None:
-            df = fn(df, "raw")
-        frames.append(df)
-    return multisource_union(frames)
 
 
 class UnixSocketResource:

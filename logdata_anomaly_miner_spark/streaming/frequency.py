@@ -23,21 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _hadoop_dir_has_files(spark, path: str) -> bool:
-    """True iff `path` exists and holds at least one file, resolved through
-    the Hadoop FileSystem API — so hdfs:// / s3a:// / file:// state dirs all
-    work (a driver-local os.listdir probe returns False forever on remote
-    filesystems, silently discarding learned state)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
-    if not fs.exists(hpath):
-        return False
-    it = fs.listStatus(hpath)
-    return any(st.isFile() for st in it)
-
-
 def union_sources(sources: Sequence[DataFrame]) -> DataFrame:
     """K-way merge of sources; event-time ordering is reconstructed by the
     engine's watermarking, not by a driver-side merge loop. (Same union as
@@ -159,52 +144,3 @@ def run_streaming_band_check(
     if await_seconds is not None:
         query.awaitTermination(await_seconds)
     return query
-
-
-def streaming_entropy_check(
-    spark,
-    value_col: str,
-    prob_thresh: float,
-    freq_dir: str,
-    alarms_dir: str,
-):
-    """foreachBatch body for a streaming EntropyDetector (reference
-    EntropyDetector.py:29-195): each micro-batch is SCORED against the
-    bigram freq table learned from all PREVIOUS batches (the reference's
-    check-then-learn order per atom, at micro-batch granularity), then the
-    batch's pairs are merged into the freq table. Freq state lives in a
-    parquet table (≤257² rows — swap for Delta MERGE on a cluster for
-    atomic commits); alarms append."""
-    from pyspark.sql import functions as F
-
-    from logdata_anomaly_miner_spark.operators.entropy import (
-        check_entropy,
-        learn_bigram_freq,
-        score_entropy_pandas,
-    )
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # "First batch" means the freq table does not exist yet — probe the
-        # path instead of catching every read error, so a corrupt table
-        # (crash mid-overwrite), schema drift, or transient IO failure
-        # surfaces instead of silently discarding all learned state. The
-        # probe goes through the Hadoop FileSystem API so hdfs:// / s3a://
-        # state dirs are seen too (os.path only sees the driver's local fs).
-        have_freq = _hadoop_dir_has_files(spark, freq_dir)
-        freq = spark.read.parquet(freq_dir) if have_freq else None
-        if have_freq:
-            scored = score_entropy_pandas(spark, batch_df, value_col, freq)
-            alarms = check_entropy(scored, prob_thresh).withColumn(
-                "batch_id", F.lit(batch_id)
-            )
-            alarms.write.mode("append").parquet(alarms_dir)
-        merged, _ = learn_bigram_freq(batch_df, value_col, baseline=freq)
-        # materialize BEFORE overwrite: the new table derives from the old
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode("overwrite").parquet(
-            freq_dir
-        )
-
-    return on_batch

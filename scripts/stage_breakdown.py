@@ -63,9 +63,7 @@ def main() -> None:
 
     t0 = time.time()
     t0_ms = int(t0 * 1000)
-    res = run_suite(
-        spark, docs, media, SuiteConfig(entropy_prob_thresh=0.0001), persist=False
-    )
+    res = run_suite(spark, docs, media, SuiteConfig(entropy_prob_thresh=0.0001))
     res.verdicts.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

@@ -76,18 +76,13 @@ def test_entropy_allowlist_blocklist_event_reference_replay():
     assert icols == ("/s1",)
 
 
-def test_blocklist_mutation_consumed_on_next_run(spark, tmp_path):
-    """End-to-end: an entropy alarm's path is blocklisted, the mutated
-    lists persist as a baseline-table update, and the NEXT run loads them
-    and screens the offending atoms (reference remote-control mutation +
-    state persist, EntropyDetector.py:238-272)."""
+def test_blocklist_mutation_consumed_on_next_run(spark):
+    """End-to-end: an entropy alarm's path is blocklisted, and the NEXT run
+    screens the offending atoms with the mutated lists (reference
+    remote-control mutation, EntropyDetector.py:238-272)."""
     from pyspark.sql import functions as F
 
-    from logdata_anomaly_miner_spark.operators.allowlisting import (
-        blocklist_event,
-        load_path_lists,
-        save_path_lists,
-    )
+    from logdata_anomaly_miner_spark.operators.allowlisting import blocklist_event
     from logdata_anomaly_miner_spark.operators.entropy import (
         check_entropy,
         learn_bigram_freq,
@@ -103,14 +98,11 @@ def test_blocklist_mutation_consumed_on_next_run(spark, tmp_path):
     alarms = check_entropy(scored, 0.01)
     assert alarms.filter(F.col("dbg").isNotNull()).count() == 1
 
-    # operator blocklists the offending path; state persists to a table
-    icols, _ = blocklist_event("Analysis.EntropyDetector", "dbg", None, ())
-    state = str(tmp_path / "path_lists.parquet")
-    save_path_lists(spark, state, (), icols)
+    # operator blocklists the offending path
+    ignore, _ = blocklist_event("Analysis.EntropyDetector", "dbg", None, ())
+    assert ignore == ("dbg",)
 
-    # next run: a fresh session-load of the lists screens the atoms
-    constraint, ignore = load_path_lists(spark, state)
-    assert (constraint, ignore) == ((), ("dbg",))
-    screened = screen_paths(df, ignore_cols=ignore, constraint_cols=constraint)
+    # next run: the mutated lists screen the atoms
+    screened = screen_paths(df, ignore_cols=ignore, constraint_cols=())
     scored2 = score_entropy_pandas(spark, screened, "value", freq)
     assert check_entropy(scored2, 0.01).count() == 0

@@ -10,7 +10,6 @@ from logdata_anomaly_miner_spark.operators.event_frequency import (
     anchored_window_counts,
     check_event_frequency,
     check_sliding_frequency,
-    empty_window_gaps,
 )
 
 T0 = 1_700_000_000.0
@@ -85,17 +84,6 @@ def test_unique_counts(spark):
     counts = anchored_window_counts(df, ["k"], 10.0, unique_cols=["v"])
     got = {(r["k"], r["w"]): r["cnt"] for r in counts.collect()}
     assert got == {("a", 0): 2, ("a", 1): 1}  # x,y distinct in w0
-
-
-def test_empty_window_gaps(spark):
-    rows = [(T0 + 1,), (T0 + 5,), (T0 + 45,), (T0 + 85,)]
-    df = spark.createDataFrame(rows, "ts double")
-    gaps = sorted(
-        (r["gap_start_w"], r["gap_end_w"], r["n_windows"])
-        for r in empty_window_gaps(df, 10.0).collect()
-    )
-    # occupied windows: 0, 4, 8 -> gaps [1..3] and [5..7]
-    assert gaps == [(1, 3, 3), (5, 7, 3)]
 
 
 def test_sliding_frequency(spark):

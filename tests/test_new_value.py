@@ -5,7 +5,6 @@ from __future__ import annotations
 from logdata_anomaly_miner_spark.operators.new_value import (
     check_new_combos_enhanced,
     check_new_id_combos,
-    check_new_paths,
     check_new_values,
     learn_values,
 )
@@ -92,7 +91,9 @@ def test_new_id_combo(spark):
 
 
 def test_new_paths(spark):
+    """NewMatchPathDetector ≙ the suite's unknown-kind schema check."""
+    from logdata_anomaly_miner_spark.constraints.schema_checks import unknown_kind
+
     df = spark.createDataFrame([("text",), ("image",), ("weird_kind",)], "kind string")
-    registry = spark.createDataFrame([("text",), ("image",), ("audio",)], "kind string")
-    viols = check_new_paths(df, "kind", registry)
+    viols = df.filter(unknown_kind(["text", "image", "audio"]))
     assert [r["kind"] for r in viols.collect()] == ["weird_kind"]

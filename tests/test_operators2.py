@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.operators import rules
 from logdata_anomaly_miner_spark.operators.event_count_cluster import (
-    check_count_clusters,
     count_vectors,
     manhattan_vs_baseline,
 )
@@ -173,8 +172,6 @@ def test_count_vectors_and_manhattan(spark):
     # w0 identical -> 0; w1: |1-2|+|0-1|+|1-0| = 3 over (2+3)=5 -> 0.6
     assert d[0] == pytest.approx(0.0)
     assert d[1] == pytest.approx(0.6)
-    anomalies = check_count_clusters(cv, baseline, ["uid"], confidence_factor=0.5)
-    assert [r["w"] for r in anomalies.collect()] == [1]
 
 
 def test_minimal_transition_time(spark):

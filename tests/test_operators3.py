@@ -1,4 +1,4 @@
-"""Batch-3 operators: persistence parity, variable types + KS, PCA, chi²,
+"""Batch-3 operators: persistence parity, variable types + KS, chi²,
 implication rules."""
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from logdata_anomaly_miner_spark.operators.correlation import (
     implication_within,
 )
 from logdata_anomaly_miner_spark.operators.variable_type import (
-    check_type_drift,
     infer_variable_types,
     ks_statistic,
 )
@@ -92,8 +91,11 @@ def test_type_drift(spark):
     )
     cur = spark.createDataFrame([("v1", "x")] * 5 + [("v2", str(i % 3)) for i in range(30)],
                                 "var string, value string")
-    drift = check_type_drift(cur, base, "var", "value")
-    assert [(r["var"], r["cur_type"]) for r in drift.collect()] == [("v1", "static")]
+    base_types = {r["var"]: r["var_type"] for r in base.collect()}
+    cur_types = infer_variable_types(cur, "var", "value").collect()
+    drift = [(r["var"], r["var_type"]) for r in cur_types
+             if r["var_type"] != base_types[r["var"]]]
+    assert drift == [("v1", "static")]
 
 
 def test_ks_statistic_matches_numpy(spark):
@@ -147,24 +149,6 @@ def test_implication_within(spark):
         df, F.col("typ") == "req", F.col("typ") == "resp", 0.0, 5.0, key_cols=("sid",)
     )
     assert sorted(r["sid"] for r in v.collect()) == ["s2", "s3"]
-
-
-def test_pca_detector(spark):
-    from logdata_anomaly_miner_spark.operators.pca import check_pca_anomalies
-
-    rows = []
-    # 20 normal windows: counts of 'a' and 'b' move TOGETHER (n, n) with n
-    # varying 3..8 -> PC1 is the diagonal; an anomaly breaks the correlation
-    for w in range(20):
-        n = 3 + (w % 6)
-        rows += [(T0 + w * 10 + i * 0.5, "a") for i in range(n)]
-        rows += [(T0 + w * 10 + 5 + i * 0.5, "b") for i in range(n)]
-    # weird window 20: 12 a's, 0 b's (orthogonal to the learned structure)
-    rows += [(T0 + 200 + i * 0.1, "a") for i in range(12)]
-    df = spark.createDataFrame(rows, "ts double, typ string")
-    anomalies = check_pca_anomalies(df, "typ", window_size=10.0, k=1)
-    ws = [r["w"] for r in anomalies.collect()]
-    assert ws == [20]
 
 
 def test_chi_square_pairs(spark):

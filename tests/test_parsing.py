@@ -217,7 +217,6 @@ def test_repeated_items_per_item_values(spark):
         fixed,
         parse,
         repeated,
-        repeated_items,
         seq,
     )
     from pyspark.sql import functions as F
@@ -227,7 +226,10 @@ def test_repeated_items_per_item_values(spark):
     df = spark.createDataFrame([("ids:1;22;333;",)], "raw string")
     out = parse(df, "raw", model).withColumn(
         "vals",
-        F.transform(repeated_items(F.col("items"), r"(\d+);"), lambda s: s.cast("long")),
+        F.transform(
+            F.regexp_extract_all(F.col("items"), F.lit(r"(\d+);"), 1),
+            lambda s: s.cast("long"),
+        ),
     )
     assert out.collect()[0]["vals"] == [1, 22, 333]
 
@@ -258,16 +260,16 @@ def test_parse_value_branches(spark):
 
 
 def test_parse_json_string_field(spark):
-    from logdata_anomaly_miner_spark.sources.readers import parse_json_string_field
-    from pyspark.sql import types as T
+    """A JSON document embedded as a string value is parsed key by key
+    (JsonStringModelElement); invalid JSON is unparsed."""
+    from logdata_anomaly_miner_spark.parsing import decimal_integer, parse_json_string_models
 
     df = spark.createDataFrame(
         [('{"a": 1}',), ("not json",)], "payload string"
     )
-    schema = T.StructType([T.StructField("a", T.LongType())])
-    out = parse_json_string_field(df, "payload", schema).collect()
-    assert out[0]["nested"]["a"] == 1 and out[0]["nested_ok"]
-    assert not out[1]["nested_ok"]
+    out = parse_json_string_models(df, "payload", {"a": decimal_integer("a")}).collect()
+    assert out[0]["a"] == 1 and out[0]["_parse_ok"]
+    assert not out[1]["_parse_ok"]
 
 
 def test_ip_address_v6(spark):

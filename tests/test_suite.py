@@ -6,6 +6,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.constraints.schema_checks import offsets_not_increasing
 from logdata_anomaly_miner_spark.constraints.suite import SuiteConfig, run_suite
 from logdata_anomaly_miner_spark.datagen import explode_spans, gen_documents, gen_media
 from logdata_anomaly_miner_spark.plans.checkpoint import CheckpointManifest
@@ -20,31 +21,20 @@ def test_datagen_shape(spark):
     again = gen_documents(spark, n_docs=500, dup_rate=0.02, dangling_rate=0.05)
     assert docs.exceptAll(again).count() == 0 and again.exceptAll(docs).count() == 0
     # offsets strictly increasing within each doc (generator invariant)
-    from logdata_anomaly_miner_spark.constraints.schema_checks import offsets_monotonic
-    assert offsets_monotonic(docs).count() == 0
+    assert docs.filter(offsets_not_increasing(F.col("spans"))).count() == 0
     # planted non-monotonic offsets are caught
     broken = spark.createDataFrame(
         [("d1", 1.0, [("text", "a", None, 5), ("text", "b", None, 3)])],
         "doc_id string, ts double, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    assert offsets_monotonic(broken).count() == 1
+    assert broken.filter(offsets_not_increasing(F.col("spans"))).count() == 1
 
 
-def test_merged_scan_matches_standalone_schema_checks(spark):
-    """Drift guard for the round-6 single-scan check branch: the suite's
-    inlined per-span predicates must stay predicate-for-predicate equal to
-    the standalone reference implementations in constraints/schema_checks.py
-    — compared on a corpus with every schema violation class planted
-    (unknown kind, null kind, null offset, media_ref on a text kind,
-    non-monotonic offsets)."""
-    from logdata_anomaly_miner_spark.constraints.schema_checks import (
-        media_kind_consistency,
-        offsets_monotonic,
-        required_non_null,
-        unknown_kinds,
-    )
-    from logdata_anomaly_miner_spark.datagen import KINDS
-
+def test_suite_schema_violations_on_planted_corpus(spark):
+    """The suite's schema checks on a corpus with every violation class
+    planted (unknown kind, null kind, null offset, media_ref on a text kind,
+    non-monotonic offsets): exact counts per message, and the doc-level
+    offset violation carries no span fields."""
     docs = spark.createDataFrame(
         [
             ("d1", 100.0, [("text", "ok", None, 0), ("blob", "x", None, 5)]),
@@ -56,25 +46,21 @@ def test_merged_scan_matches_standalone_schema_checks(spark):
         "doc_id string, ts double, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     media = gen_media(spark, 10)
-    res = run_suite(spark, docs, media, SuiteConfig(entropy_prob_thresh=0.0), persist=False)
+    res = run_suite(spark, docs, media, SuiteConfig(entropy_prob_thresh=0.0))
+    schema = res.violations.filter("suite = 'schema'")
     got = {
-        (r["message"],): r["n"]
-        for r in res.violations.filter("suite = 'schema'")
-        .groupBy("message").agg(F.count(F.lit(1)).alias("n")).collect()
+        r["message"]: r["n"]
+        for r in schema.groupBy("message").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    flat = explode_spans(docs)
-    want = {
-        ("Unknown span kind",): unknown_kinds(flat, tuple(KINDS)).count(),
-        ("Required field null",): required_non_null(flat, ["kind", "offset"]).count(),
-        ("Offset not increasing",): offsets_monotonic(docs).count(),
-        ("media_ref on non-media kind",): media_kind_consistency(flat).count(),
+    assert got == {
+        "Unknown span kind": 1,            # blob
+        "Required field null": 2,          # null kind + null offset
+        "Offset not increasing": 1,        # d4
+        "media_ref on non-media kind": 1,  # d3
     }
-    want = {k: v for k, v in want.items() if v > 0}
-    assert got == want
-    assert got[("Unknown span kind",)] == 1      # blob
-    assert got[("Required field null",)] == 2    # null kind + null offset
-    assert got[("Offset not increasing",)] == 1  # d4
-    assert got[("media_ref on non-media kind",)] == 1  # d3
+    [doc_row] = schema.filter("message = 'Offset not increasing'").collect()
+    assert doc_row["doc_id"] == "d4"
+    assert (doc_row["kind"], doc_row["value"], doc_row["media_ref"]) == (None, None, None)
 
 
 def test_suite_finds_planted_violations(spark):
@@ -168,8 +154,8 @@ def test_suite_lifecycle_freeze_and_ignore(spark):
     assert cfg.ignore_kinds == ("footnote",)
     docs = gen_documents(spark, n_docs=300, seed=11)
     media = gen_media(spark, 1000)
-    res = run_suite(spark, docs, media, cfg, persist=False)
-    base = run_suite(spark, docs, media, None, persist=False)
+    res = run_suite(spark, docs, media, cfg)
+    base = run_suite(spark, docs, media, None)
     nv_lc = res.violations.filter("suite = 'new_value'").count()
     nv_base = base.violations.filter("suite = 'new_value'").count()
     # the synthetic docs all fall within one dense time range -> no gap ->
@@ -188,7 +174,7 @@ def test_suite_null_spans(spark):
     media = gen_media(spark, 10)
     cfg = SuiteConfig(entropy_prob_thresh=0.0)
     one = spark.createDataFrame([("d1", 100.0, None)], schema)
-    res = run_suite(spark, one, media, cfg, persist=False)
+    res = run_suite(spark, one, media, cfg)
     assert res.metrics["rows_scanned"] == 1
     assert res.metrics["spans_scanned"] == 0
     assert [(r["partition"], r["n_spans"]) for r in res.verdicts.collect()] == [
@@ -203,7 +189,7 @@ def test_suite_null_spans(spark):
         ],
         schema,
     )
-    res = run_suite(spark, two, media, cfg, persist=False)
+    res = run_suite(spark, two, media, cfg)
     assert res.metrics["rows_scanned"] == 3
     assert res.metrics["spans_scanned"] == 2
     spans = {r["partition"]: r["n_spans"] for r in res.verdicts.collect()}
@@ -222,10 +208,10 @@ def test_suite_warm_calls_reuse_generated_code(spark):
     docs = gen_documents(spark, n_docs=300, seed=7)
     media = gen_media(spark, 1000)
     cfg = SuiteConfig(entropy_prob_thresh=0.0001)
-    run_suite(spark, docs, media, cfg, persist=False)
+    run_suite(spark, docs, media, cfg)
     before = compilations.getCount()
     for _ in range(2):
-        run_suite(spark, docs, media, cfg, persist=False)
+        run_suite(spark, docs, media, cfg)
     # new compilations over the two warm calls, measured at local[4]: 10
     # with the larger cache, 51-94 at the default of 100
     assert compilations.getCount() - before <= 30
@@ -275,6 +261,6 @@ def test_run_validation_cli_validates_every_row_once(spark, tmp_path, monkeypatc
 
     manifest = CheckpointManifest(spark, str(out / "manifest")).read().collect()
     assert sum(r["rows_scanned"] for r in manifest) == 3
-    verdicts = run_suite(spark, docs, media, persist=False).verdicts.collect()
+    verdicts = run_suite(spark, docs, media).verdicts.collect()
     assert {r["partition"] for r in manifest} == {r["partition"] for r in verdicts}
     assert len(manifest) == 3
