@@ -1332,8 +1332,8 @@ FROM al
 def _chi2_pairs_oracle() -> str:
     """chi2_pairs oracle SQL, generated over the column pairs so the
     statistic's formula exists exactly ONCE (six hand-copied blocks
-    previously invited drift). Mirrors chi_square's null exclusion: rows
-    where either variable is null are excluded per pair."""
+    previously invited drift). Mirrors chi_square_pairs' null exclusion:
+    rows where either variable is null are excluded per pair."""
     cols = ["event_type", "user_bucket", "vbin", "hour"]
     blocks = []
     for i, a in enumerate(cols):

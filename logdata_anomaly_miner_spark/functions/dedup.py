@@ -9,8 +9,9 @@ All variants are set-oriented and shuffle-bounded:
               instead of |docs|² — the standard LSH scale path. Two hash
               families: md5 (hex-string min, portable to any engine for
               oracle checks) and xxhash64 (signed long, cheaper).
-- simhash:    64-bit sign-sum of token-hash bits via explode + groupBy —
-              no per-row Python; near-dups share simhash within k bits.
+- simhash:    per-bit sign-sum of md5 token-hash bits in one wide
+              aggregation — no per-row Python; near-dups share simhash
+              within k bits.
 - n-gram Jaccard: exact verification on LSH candidates (or small inputs).
 """
 
@@ -237,46 +238,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash per doc: for each token, xxhash64(token) contributes
-    ±1 per bit position; simhash bit = sign of the sum.
-
-    All 64 bit-sums are computed as ONE wide aggregation over the token
-    rows (64 conditional-sum columns, map-side combined) — the
-    ``minhash_lsh_candidates`` pattern. The earlier form exploded
-    |tokens|×64 rows before the groupBy, inflating the shuffle 64×; here
-    the shuffle carries |docs| rows of 64 longs. The packed value is
-    reconstructed bit-by-bit afterwards (bit 63 lands as two's-complement
-    min-long, matching shiftleft(1L, 63))."""
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
-    sums = toks.groupBy("_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(shiftright(h, {i}) & 1) = 1"), 1).otherwise(-1)
-            ).alias(f"_s{i}")
-            for i in range(64)
-        ]
-    )
-    packed = F.lit(0).cast("long")
-    for i in range(64):
-        packed = packed + F.when(
-            F.col(f"_s{i}") > 0, F.expr(f"shiftleft(CAST(1 AS BIGINT), {i})")
-        ).otherwise(F.lit(0).cast("long"))
-    return sums.select(F.col("_id").alias(id_col), packed.alias("simhash"))
-
-
 def portable_simhash_bits(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_bits: int = 64
 ) -> DataFrame:
     """Relational SimHash with a portable (md5-hex-nibble) token hash —
     one row per (id, bit) with the majority bit value. Cross-engine
-    deterministic (md5/substr/strpos exist everywhere), used by the oracle
-    parity query; ``simhash64`` (xxhash64, packed long) is the scale path."""
+    deterministic (md5/substr/strpos exist everywhere), so the
+    ``simhash_bits`` query matches its DuckDB oracle bit for bit."""
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),

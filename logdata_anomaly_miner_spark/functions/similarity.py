@@ -7,8 +7,6 @@
   bucket the vectors; candidates share the query's bucket (multi-probe via
   hamming-1 neighbors optional), then exact cosine re-ranks candidates.
   At 10^12 vectors the bucket join replaces the full scan.
-- ``embedding_near_dup_pairs``: pairwise near-duplicate detection within
-  LSH buckets (cosine ≥ threshold).
 """
 
 from __future__ import annotations
@@ -297,8 +295,7 @@ def exact_near_dup_pairs(
        candidate pairs above (threshold − slack). Peak task memory is
        2·(n/B)·d·8 bytes + a rows_per_chunk-bounded sims tile — tune
        n_blocks so a block fits an executor. Exact all-pairs is O(n²)
-       FLOPs by definition; this spreads them over B(B+1)/2 tasks (the
-       sub-quadratic scale path is ``embedding_near_dup_pairs``).
+       FLOPs by definition; this spreads them over B(B+1)/2 tasks.
     2. **Exact re-check**: candidates (broadcast — they are few) join their
        vectors back and the cosine is recomputed with the same sequential
        zip_with/aggregate expression the SQL oracle uses, so reported
@@ -378,35 +375,3 @@ def exact_near_dup_pairs(
         .select("id_a", "id_b", "cosine")
     )
 
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Near-duplicate embedding pairs: LSH-bucket self-join + exact cosine.
-    Exact within a bucket; pairs split across buckets are missed (standard
-    LSH recall tradeoff, mitigated by fewer planes / multiple tables)."""
-    if dim is None:
-        row = df.select(vec_col).first()
-        if row is None:  # empty input -> empty pairs, not TypeError
-            return df.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        dim = len(row[0])
-    planes = make_planes(dim, n_planes, seed)
-    sig = df.withColumn("_sig", hyperplane_signature(F.col(vec_col), planes))
-    a = sig.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "_sig")
-    b = sig.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "_sig")
-    pairs = a.join(b, "_sig").filter(F.col("id_a") < F.col("id_b"))
-    sim = _cosine(F.col("va"), F.col("vb"))
-    return (
-        pairs.withColumn("cosine", F.round(sim, 9))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
-    )

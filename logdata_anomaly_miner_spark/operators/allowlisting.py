@@ -9,9 +9,10 @@ engine detector state IS a baseline table and screening lists ARE plain
 config, so the analog is programmatic edits to those, applied before the
 next run (the reference's mutation also only affects future atoms):
 
-- ``allowlist_values`` / ``blocklist_values`` edit a baseline DataFrame
-  (union-distinct / anti-join) — rerunning the check with the edited
-  baseline reproduces exactly the reference's post-mutation behavior.
+- a value allowlist / blocklist is a plain edit of the baseline DataFrame
+  (``unionByName`` + ``dropDuplicates`` / ``left_anti`` join) — rerunning
+  the check with the edited baseline reproduces exactly the reference's
+  post-mutation behavior.
 - ``allowlist_path`` / ``blocklist_path`` append to the constraint / ignore
   column lists consumed by operators/lifecycle.screen_paths, returning the
   reference's confirmation message alongside the new tuple.
@@ -20,37 +21,6 @@ next run (the reference's mutation also only affects future atoms):
 from __future__ import annotations
 
 from collections.abc import Sequence
-
-from pyspark.sql import DataFrame
-
-
-def allowlist_values(
-    baseline: DataFrame, values: Sequence[tuple], value_cols: Sequence[str]
-) -> DataFrame:
-    """Add value tuples to a known-values baseline (NMPVD allowlist_event):
-    the values stop alarming on the next run and are never re-reported."""
-    if not values:
-        return baseline
-    spark = baseline.sparkSession
-    add = spark.createDataFrame(
-        [tuple(v) for v in values], schema=baseline.select(*value_cols).schema
-    )
-    return baseline.select(*value_cols).unionByName(add).dropDuplicates()
-
-
-def blocklist_values(
-    baseline: DataFrame, values: Sequence[tuple], value_cols: Sequence[str]
-) -> DataFrame:
-    """Remove value tuples from a baseline — the inverse mutation (the
-    reference exposes it via persistence edits): removed values alarm again
-    as novel on the next run."""
-    if not values:
-        return baseline
-    spark = baseline.sparkSession
-    drop = spark.createDataFrame(
-        [tuple(v) for v in values], schema=baseline.select(*value_cols).schema
-    )
-    return baseline.select(*value_cols).join(drop, list(value_cols), "left_anti")
 
 
 def allowlist_path(

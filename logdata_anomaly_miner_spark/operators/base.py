@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-VIOLATION_COLS = ["detector", "message", "ts", "group_key", "value", "detail"]
-
 
 def violation_cols(
     detector: str,

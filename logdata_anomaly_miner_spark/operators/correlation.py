@@ -23,46 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
-    """(a, b, cnt) contingency table."""
-    return df.groupBy(F.col(col_a).alias("a"), F.col(col_b).alias("b")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-
-
-def chi_square(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
-    """One-row chi² independence statistic: Σ (O−E)²/E with
-    E = row_total·col_total/N. All joins are on the (small) marginal keys.
-
-    Rows where either variable is null are EXCLUDED up front (the
-    reference correlates variables over atoms that contain both paths).
-    Without the filter, null groups enter the marginals but the cells-obs
-    equi-join can never match them (null != null), silently zeroing their
-    observed counts and inflating the statistic."""
-    obs = contingency(
-        df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull()),
-        col_a,
-        col_b,
-    )
-    ra = obs.groupBy("a").agg(F.sum("cnt").alias("ra"))
-    rb = obs.groupBy("b").agg(F.sum("cnt").alias("rb"))
-    n = obs.agg(F.sum("cnt").alias("n"))
-    # the statistic needs EVERY (a, b) cell including unobserved ones
-    # (O=0 still contributes E): cross the marginals, left-join observations
-    cells = ra.crossJoin(F.broadcast(rb)).join(obs, ["a", "b"], "left").fillna(
-        {"cnt": 0}
-    )
-    j = (
-        cells.crossJoin(F.broadcast(n))
-        .withColumn("e", F.col("ra") * F.col("rb") / F.col("n"))
-        .withColumn("term", (F.col("cnt") - F.col("e")) ** 2 / F.col("e"))
-    )
-    dof = (
-        (F.countDistinct("a") - 1) * (F.countDistinct("b") - 1)
-    )
-    return j.agg(F.sum("term").alias("chi2"), dof.alias("dof"))
-
-
 def chi_square_pairs(
     df: DataFrame, cols: Sequence[str], alpha_z: float = 1.6448536269514722
 ) -> DataFrame:
@@ -79,11 +39,13 @@ def chi_square_pairs(
     Scale shape (r8): ONE scan for all pairs — every pair melts out of the
     same row (the validate_correlation_pairs pattern), the contingency
     cube is one count aggregation over (pair, va, vb), and the marginals /
-    grid completion / statistic all derive from that cube. The former
-    per-pair ``chi_square`` union re-scanned the input once per pair
-    (|cols| choose 2 full passes — guide §2.4); per-cell observed counts,
-    expected values, and dof are identical integers/doubles, so the
-    statistic matches the per-pair form (and the oracle) to rounding."""
+    grid completion / statistic all derive from that cube, so the input is
+    scanned once, not once per pair (guide §2.4).
+
+    Rows where either variable of a pair is null are EXCLUDED for that pair
+    (the reference correlates variables over atoms that contain both
+    paths); kept, null groups would enter the marginals with no observed
+    cell to match and inflate the statistic."""
     pair_list = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
     if not pair_list:  # fewer than two columns: empty result, not IndexError
         return df.sparkSession.createDataFrame(
@@ -144,7 +106,8 @@ def match_disc_distr(p1: Sequence[float], p2: Sequence[float], threshold: float 
     """VariableCorrelationDetector.pick_cor_match_disc_distr (reference
     :1235-1245): two discrete distributions MAY correlate when their
     sorted-descending probability profiles agree pointwise within
-    threshold / max(len)."""
+    threshold / max(len).
+    Replayed by test_operators3::test_var_corr_preselection_reference_replay."""
     a = sorted(p1, reverse=True)
     b = sorted(p2, reverse=True)
     bound = threshold / max(len(a), len(b))
@@ -154,14 +117,16 @@ def match_disc_distr(p1: Sequence[float], p2: Sequence[float], threshold: float 
 def exclude_due_distr(p: Sequence[float], lower_limit: float = 0.4) -> bool:
     """pick_cor_exclude_due_distr (reference :1248-1259): a variable is
     USABLE iff no single value dominates — every probability must stay at
-    or below epsilon = lower + (1-lower)/len."""
+    or below epsilon = lower + (1-lower)/len.
+    Replayed by test_operators3::test_var_corr_preselection_reference_replay."""
     eps = lower_limit + (1.0 - lower_limit) / len(p)
     return all(v <= eps for v in p)
 
 
 def match_disc_vals(v1: Sequence, v2: Sequence, sim_thresh: float = 0.7) -> bool:
     """pick_cor_match_disc_vals (reference :1262-1267): candidate iff the
-    shared-value count exceeds sim_thresh · min(|v1|, |v2|)."""
+    shared-value count exceeds sim_thresh · min(|v1|, |v2|).
+    Replayed by test_operators3::test_var_corr_preselection_reference_replay."""
     s2 = set(v2)
     shared = sum(1 for v in v1 if v in s2)
     return shared > sim_thresh * min(len(v1), len(v2))
@@ -180,7 +145,8 @@ def pick_random_pairs(
     draws come from an explicit ``numpy.random.RandomState(seed)`` instead
     of the global np.random — same output for the same seed on every
     machine, so the method is testable and cluster-safe (driver-side only;
-    the pair list is bounded by |vars|²)."""
+    the pair list is bounded by |vars|²).
+    Replayed by test_operators3::test_preselect_random_method_seeded."""
     import numpy as np
 
     if not 0.0 < percentage_random_cors < 1.0:
@@ -243,7 +209,8 @@ def preselect_pairs(
     summary, the driver derives each bucket's carry-in (bounded
     |vars|·|buckets| rows), buckets entirely past the cutoff are pruned,
     and row_number runs per (var, bucket) — so no task ever sorts a whole
-    variable's stream."""
+    variable's stream.
+    Replayed by test_operators3::test_preselect_random_method_seeded."""
     from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
 
     for m in methods:

@@ -11,9 +11,10 @@ shape for a 10¹²-row engine anyway, so two honest batch analogs:
   least squares via the built-in regr_slope / regr_intercept aggregates:
   100% declarative (one window pass + one aggregation, whole-stage
   codegen), DuckDB-oracle-checkable, and the right default at scale.
-- ``ar_forecast_bands`` — AR(p) per key via applyInPandas (numpy lstsq on
-  the normal equations): one Arrow batch per key, keys distribute; for
-  the minority of keys that genuinely need longer memory.
+- ``arma_forecast_bands`` — ARMA(p,q) per key via applyInPandas (numpy
+  lstsq on the normal equations; AR(p) is ``q=0``): one Arrow batch per
+  key, keys distribute; for the minority of keys that genuinely need
+  longer memory.
 
 Both fit on the full series and flag in-sample one-step-ahead residuals
 beyond z·σ (the reference's rolling-refit cadence collapses to per-batch
@@ -374,8 +375,7 @@ def arma_forecast_bands(
     min_train: int = 20,
     cnt_col: str = "cnt",
     w_col: str = "w",
-    css: bool = False,
-    method: str | None = None,
+    method: str = "hr",
 ) -> DataFrame:
     """General ARMA(p,q) (+optional d=1 differencing and one seasonal AR
     lag) per key via applyInPandas — the full-surface analog of the
@@ -389,8 +389,7 @@ def arma_forecast_bands(
     Arrow batch per key; keys distribute across executors; series length
     is bounded by the window-count domain.
 
-    ``method`` selects the estimator tier (default 'hr'; ``css=True`` is a
-    shorthand for method='css'):
+    ``method`` selects the estimator tier (default 'hr'):
     - 'hr'  — Hannan–Rissanen two-stage OLS (closed form, fastest);
     - 'css' — refines the HR estimate (its start value) by minimizing the
       conditional sum of squares with a pure-numpy Nelder–Mead; removes
@@ -405,8 +404,6 @@ def arma_forecast_bands(
       treatment of the first max(p,q+1) observations — the O(1/n) edge
       that matters on short series. Not available with seasonal_lag (the
       state-space form here carries no seasonal AR term)."""
-    if method is None:
-        method = "css" if css else "hr"
     if method not in ("hr", "css", "mle"):
         raise ValueError("method must be 'hr', 'css' or 'mle'")
     if method == "mle" and seasonal_lag:
@@ -492,59 +489,3 @@ def arma_forecast_bands(
 
     return counts.groupBy(*key_cols).applyInPandas(fit, schema)
 
-
-def ar_forecast_bands(
-    counts: DataFrame,
-    key_cols: Sequence[str],
-    p: int = 3,
-    z: float = 1.96,
-    min_train: int = 20,
-    cnt_col: str = "cnt",
-    w_col: str = "w",
-) -> DataFrame:
-    """AR(p) per key via applyInPandas: numpy least squares on the lag
-    matrix, in-sample one-step predictions, |resid| > z·σ flags. One
-    (ordered) pandas batch per key — series length is bounded by the
-    window-count domain, keys distribute across executors."""
-    # derive key/w types from the INPUT schema — hardcoding 'string'/'long'
-    # breaks Arrow conversion (or silently coerces) for numeric keys
-    in_types = {f.name: f.dataType.simpleString() for f in counts.schema.fields}
-    schema = (
-        ", ".join(f"{c} {in_types[c]}" for c in key_cols)
-        + f", {w_col} {in_types[w_col]}, {cnt_col} double, "
-        + "pred double, sigma double, anomaly boolean"
-    )
-
-    def fit(key, pdf):
-        pdf = pdf.sort_values(w_col).reset_index(drop=True)
-        yv = pdf[cnt_col].to_numpy(dtype=np.float64)
-        n = len(yv)
-        preds = np.full(n, np.nan)
-        if n > p + min_train:
-            x = np.column_stack(
-                [np.ones(n - p)] + [yv[p - k - 1 : n - k - 1] for k in range(p)]
-            )
-            target = yv[p:]
-            theta, *_ = np.linalg.lstsq(x, target, rcond=None)
-            preds[p:] = x @ theta
-        resid = target - preds[p:] if n > p + min_train else np.array([])
-        sigma = float(np.sqrt(np.mean(resid**2))) if resid.size else float("nan")
-        anom = (
-            np.abs(yv - preds) > z * sigma
-            if resid.size
-            else np.zeros(n, dtype=bool)
-        )
-        out = pd.DataFrame(
-            {
-                w_col: pdf[w_col],
-                cnt_col: yv,
-                "pred": preds,
-                "sigma": sigma,
-                "anomaly": anom & ~np.isnan(preds),
-            }
-        )
-        for c, v in zip(key_cols, key):
-            out[c] = v
-        return out[[*key_cols, w_col, cnt_col, "pred", "sigma", "anomaly"]]
-
-    return counts.groupBy(*key_cols).applyInPandas(fit, schema)

@@ -76,8 +76,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-SQRT2 = math.sqrt(2.0)
-
 
 def _clip01(x: Column) -> Column:
     return F.least(F.greatest(x, F.lit(0.0)), F.lit(1.0))

@@ -25,9 +25,9 @@ Element → reference → here:
   optional(child)       OptionalMatchModelElement:18    (?:...)?
   repeated(child,m,n)   RepeatedElementDataModelElement (?:...){m,n} (value = span)
 
-Value-dependent branching (ElementValueBranchModelElement:22) is applied
-AFTER extraction with when()/otherwise() — a value-dependent grammar cannot
-be one regex, but its discriminator column drives per-branch re-parses.
+Value-dependent branching (ElementValueBranchModelElement:22) cannot be one
+regex: the reference-config loader relaxes it to a first match over all
+branch models and records that as an approximation.
 """
 
 from __future__ import annotations
@@ -311,40 +311,8 @@ def _group_index(rx: str, name: str) -> int:
     raise KeyError(name)
 
 
-def parse_value_branches(
-    df: DataFrame,
-    discriminator_col: str,
-    branches: dict[str, "Element"],
-    raw_col: str = "raw",
-) -> DataFrame:
-    """ElementValueBranchModelElement (aminer/parsing/
-    ElementValueBranchModelElement.py:22-150): the VALUE of an already-
-    parsed element decides which sub-model parses the remainder. Columnar
-    form: filter rows per branch value, parse each subset with its branch
-    model, union the results (columns a branch does not produce are null —
-    exactly the reference's per-branch match dictionaries). Rows whose
-    discriminator is null or matches NO branch are kept as unparsed atoms
-    (_parse_ok=false) — the reference keeps the atom and fails the match;
-    dropping them would corrupt every downstream row count."""
-    vals = list(branches)
-    matched = F.col(discriminator_col).isin(vals)
-    outs = [
-        parse(df.filter(F.col(discriminator_col) == val), raw_col, model)
-        for val, model in branches.items()
-    ]
-    outs.append(
-        df.filter(~F.coalesce(matched, F.lit(False))).withColumn(
-            "_parse_ok", F.lit(False)
-        )
-    )
-    combined = outs[0]
-    for o in outs[1:]:
-        combined = combined.unionByName(o, allowMissingColumns=True)
-    return combined
-
-
 # --------------------------------------------------------------------------
-# DateTime year inference + multi-locale (reference DateTimeModelElement.py)
+# DateTime year inference (reference DateTimeModelElement.py)
 # --------------------------------------------------------------------------
 
 def infer_years(
@@ -476,34 +444,6 @@ def infer_years(
     return d.withColumn(out_col, adj).drop(
         "_s", "_ny", "_ly", "_strag", "_eff", "_wrap", "_yoff", *extra
     )
-
-
-def datetime_multi_locale(
-    col: Column,
-    formats: list[tuple[str, dict[str, str] | None]],
-) -> Column:
-    """MultiLocaleDateTimeModelElement (reference
-    MultiLocaleDateTimeModelElement.py / DateTimeModelElement.py:442-505):
-    first-match over (format, month-name translation) pairs.
-
-    Each entry is (spark datetime pattern, optional {localized month token
-    -> english token} map applied with word-boundary regexes before
-    to_timestamp); the first pattern that parses wins (coalesce order =
-    the reference's ordered date_formats list)."""
-    attempts = []
-    for fmt, month_map in formats:
-        normalized = col
-        for loc, eng in (month_map or {}).items():
-            # word boundaries only against word-char token edges ("Feb."
-            # ends in '.', where \b would never match)
-            pat = (
-                (r"\b" if loc[:1].isalnum() else "")
-                + re.escape(loc)
-                + (r"\b" if loc[-1:].isalnum() else "")
-            )
-            normalized = F.regexp_replace(normalized, pat, eng)
-        attempts.append(F.try_to_timestamp(normalized, F.lit(fmt)))
-    return F.coalesce(*attempts)
 
 
 # --------------------------------------------------------------------------

@@ -53,7 +53,8 @@ def ranges_to_reference_json(ranges: DataFrame, id_cols: list[str]) -> str:
 
     Small-baseline path (whole payload as one str). For baselines too
     large to hold on the driver use write_ranges_reference_json, which
-    streams partition-at-a-time to disk in the same byte format."""
+    streams partition-at-a-time to disk in the same byte format.
+    Golden bytes checked by test_operators3::test_ranges_reference_json_golden."""
     rows = ranges.orderBy(*id_cols).collect()
     mins = {}
     maxs = {}
@@ -101,12 +102,9 @@ def known_values_from_reference_json(
     return spark.createDataFrame(vals, f"{value_col} string")
 
 
-def atomic_write(path: str, payload: str) -> None:
-    """tmpfile + rename ≙ PersistenceUtil.persist atomic swap (:116-125)."""
-    _atomic_stream(path, lambda f: f.write(payload))
-
-
 def _atomic_stream(path: str, emit) -> None:
+    """tmpfile + rename ≙ PersistenceUtil.persist atomic swap (:116-125);
+    ``emit(f)`` writes the payload to the open tmpfile."""
     d = os.path.dirname(os.path.abspath(path))
     os.makedirs(d, exist_ok=True)
     fd, tmp = tempfile.mkstemp(dir=d)
@@ -125,7 +123,7 @@ def write_ranges_reference_json(ranges: DataFrame, id_cols: list[str], path: str
     shuffle), then toLocalIterator() pulls ONE partition at a time to
     the driver while writing incrementally — peak driver memory is one
     partition, not the baseline. Output bytes are identical to
-    atomic_write(path, ranges_to_reference_json(...)). json.dumps'
+    ranges_to_reference_json(...). json.dumps'
     default separators (', ', ': ') are reproduced exactly."""
     srt = ranges.orderBy(*id_cols).persist()
     try:
@@ -155,7 +153,7 @@ def write_known_values_reference_json(
 ) -> None:
     """Streamed NewMatchPathValueDetector baseline writer — sorted value
     list, partition-at-a-time; byte-identical to
-    atomic_write(path, known_values_to_reference_json(...)). Kept for byte
+    known_values_to_reference_json(...). Kept for byte
     parity with the reference format: tests/test_operators3.py::
     test_streamed_persistence_writers_byte_parity."""
 

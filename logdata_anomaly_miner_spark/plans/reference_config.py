@@ -34,7 +34,7 @@ Semantics notes:
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -249,10 +249,9 @@ def _build_element(
     if t == "MultiLocaleDateTimeModelElement":
         # match side: first-match union of the format regexes, value
         # captured as TEXT ('%b' widened to any-letter for localized month
-        # names). The typed conversion is the downstream
-        # parsing.datetime_multi_locale Column (coalesced
-        # try_to_timestamp per format + month-name translation) — the
-        # loader keeps the MODEL's accept/reject behavior in the regex.
+        # names). No typed conversion follows: the loader keeps the
+        # MODEL's accept/reject behavior in the regex and records the
+        # text value as an approximation.
         rxs = []
         for df_entry in entry.get("date_formats", []):
             f = df_entry.get("format") if isinstance(df_entry, dict) else df_entry
@@ -268,22 +267,21 @@ def _build_element(
             raise ReferenceConfigError("no translatable date_formats")
         if approximations is not None:
             approximations.append(
-                (entry.get("id", t), "value captured as text; cast via datetime_multi_locale")
+                (entry.get("id", t), "value captured as text, not converted to a timestamp")
             )
         return P.Element(P._grp(name, "|".join(f"(?:{r})" for r in rxs)), name)
     if t == "ElementValueBranchModelElement":
         # regex approximation: value model followed by first-match over
         # ALL branch models — accepts (value_x, branch_of_y) combos the
-        # reference would reject; exact value->branch coupling is the
-        # post-parse parsing.parse_value_branches operator. Recorded as
-        # an approximation so the caller can tighten downstream.
+        # reference would reject. Recorded as an approximation so the
+        # caller can tighten downstream.
         vm = ref(args[0] if isinstance(args, list) else args)
         branches = [ref(b["model"]) for b in entry.get("branch_model_dict", [])]
         if not branches:
             raise ReferenceConfigError("empty branch_model_dict")
         if approximations is not None:
             approximations.append(
-                (entry.get("id", t), "value->branch coupling relaxed to first_match; tighten with parse_value_branches")
+                (entry.get("id", t), "value->branch coupling relaxed to first_match")
             )
         return P.seq(vm, P.first_match(*branches))
     if t == "JsonModelElement":

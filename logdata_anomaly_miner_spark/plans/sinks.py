@@ -1,18 +1,8 @@
-"""Event/violation sinks.
+"""Event sinks.
 
 Re-expresses the reference event-handler layer (semantics only):
 - StreamPrinterEventHandler (aminer/events/StreamPrinterEventHandler.py:21-61)
   → operators/base.py format_event (golden text format).
-- JsonConverterHandler (aminer/events/JsonConverterHandler.py:22-36) →
-  ``to_json_events``: wraps each violation in the AnalysisComponent JSON
-  envelope.
-- KafkaEventHandler / ZmqEventHandler (aminer/events/KafkaEventHandler.py:
-  21-37) → ``write_kafka``: the JSON column is writeStream-able to the kafka
-  sink (format left to deploy config; no broker in this sandbox).
-- MatchValueStreamWriter (aminer/analysis/MatchValueStreamWriter.py:21-104)
-  → ``write_csv_projection``: select paths, write CSV.
-- ScoringEventHandler (aminer/events/ScoringEventHandler.py:24-48) →
-  ``score_events``: attach confidence weights to violation values.
 - VolatileLogarithmicBackoffEventHistory (aminer/events/Utils.py:19-48) →
   the violations table itself is the (unbounded, queryable) history.
 - SyslogWriterEventHandler (aminer/events/SyslogWriterEventHandler.py:
@@ -23,77 +13,14 @@ Re-expresses the reference event-handler layer (semantics only):
   DefaultMailNotificationEventHandler.py:37-181) → ``MailAlertCollector``:
   the collect/grace/alert-gap state machine with injected clock + SMTP
   sender, fed the rendered event strings.
+
+The JSON, Kafka/ZMQ, CSV-projection and scoring handlers are not
+implemented.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def to_json_events(
-    violations: DataFrame, analysis_id: str = "None", detector_col: str = "detector"
-) -> DataFrame:
-    """Violation rows -> JSON envelope column `event_json` mirroring the
-    reference's {"AnalysisComponent": {...}} structure. Pass
-    ``detector_col='suite'`` for the constraint-suite violations table."""
-    envelope = F.struct(
-        F.struct(
-            F.col(detector_col).alias("AnalysisComponentType"),
-            F.lit(analysis_id).alias("AnalysisComponentName"),
-            F.col("message").alias("Message"),
-            F.array(F.col("value")).alias("AffectedLogAtomValues"),
-        ).alias("AnalysisComponent")
-    )
-    return violations.withColumn("event_json", F.to_json(envelope))
-
-
-def write_csv_projection(
-    df: DataFrame, cols: Sequence[str], path: str, sep: str = ";"
-) -> None:
-    """MatchValueStreamWriter analog: project selected paths to CSV."""
-    df.select(*cols).write.mode("overwrite").option("sep", sep).csv(path)
-
-
-def write_kafka(json_df: DataFrame, bootstrap: str, topic: str):
-    """Violations JSON -> Kafka (streaming); returns the started query.
-    (KafkaEventHandler analog; requires a broker + the kafka connector.)"""
-    return (
-        json_df.selectExpr("CAST(event_json AS STRING) AS value")
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .start()
-    )
-
-
-def emit_events(json_df: DataFrame, send, topic: str = "aminer") -> int:
-    """Transport-agnostic event emitter — the KafkaEventHandler.receive_event
-    (aminer/events/KafkaEventHandler.py:58-77) / ZmqEventHandler
-    (aminer/events/ZmqEventHandler.py:60-89) delivery loop with the socket
-    injected: each JSON envelope is encoded to bytes and handed to
-    ``send(topic, payload)`` — kafka-python's ``KafkaProducer.send``, a zmq
-    PUB socket's send, or a test double. Certifies the serialization
-    without a broker. Violations stream partition-at-a-time
-    (toLocalIterator) through the single driver-side emitter, exactly the
-    reference's single-threaded handler shape; the volume is violations,
-    not the corpus. Returns the number of events sent."""
-    n = 0
-    for r in json_df.select("event_json").toLocalIterator():
-        send(topic, r["event_json"].encode("utf-8"))
-        n += 1
-    return n
-
-
-def emit_events_stream(json_df: DataFrame, send, topic: str = "aminer"):
-    """Streaming variant of emit_events: one foreachBatch emitter per
-    micro-batch; returns the started query."""
-    return json_df.writeStream.foreachBatch(
-        lambda batch, _id: emit_events(batch, send, topic)
-    ).start()
-
+from pyspark.sql import DataFrame
 
 LOG_INFO = 6  # syslog.LOG_INFO — numeric so no syslog import is needed
 
@@ -131,11 +58,11 @@ def emit_syslog(
     ``send(priority, message)`` is ``syslog.syslog`` in production, a test
     double for byte-parity. Emits the reference's one-time init record
     (handler construction) then each event's chunk records with sequential
-    event ids. Like ``emit_events`` the loop is driver-side single-threaded
-    — exactly the reference handler shape — and the volume is violations,
-    not the corpus. Returns the next event id; continuation calls pass it
-    as ``start_event_id`` and by default skip the init record
-    (``announce`` defaults to ``start_event_id == 0``).
+    event ids. The loop is driver-side single-threaded — exactly the
+    reference handler shape — and the volume is violations, not the corpus.
+    Returns the next event id; continuation calls pass it as
+    ``start_event_id`` and by default skip the init record (``announce``
+    defaults to ``start_event_id == 0``).
 
     ORDER-SENSITIVE: event ids are assigned in iteration order, so pass a
     sorted frame (``orderBy(...)``) — a multi-partition frame without a
@@ -184,8 +111,7 @@ def emit_syslog_stream(rendered_df: DataFrame, send, order_col: str = "ingest_or
     the :func:`syslog_batch_emitter` id/announce/replay discipline. Each
     micro-batch is sorted by ``order_col`` so the id assignment is
     deterministic. ``rendered_df`` carries the rendered ``event_text``
-    column that :func:`emit_syslog` consumes (not the ``event_json`` frame
-    of :func:`emit_events_stream`). Returns the started query."""
+    column that :func:`emit_syslog` consumes. Returns the started query."""
     return (
         rendered_df.writeStream.foreachBatch(syslog_batch_emitter(send, order_col))
         .start()
@@ -328,24 +254,13 @@ def collect_mail_alerts(
         collector.receive_event(r[text_col].rstrip("\n") + "\n")
 
 
-def collect_mail_alerts_stream(
-    df: DataFrame, collector: MailAlertCollector, order_col: str = "ingest_order"
-):
-    """Streaming collect_mail_alerts: micro-batches feed the (stateful)
-    collector in order via :func:`mail_batch_collector`; the collector's
-    own clock/gap machine decides when a batch boundary flushes mail.
-    Returns the started query."""
-    return df.writeStream.foreachBatch(
-        mail_batch_collector(collector, order_col)
-    ).start()
-
-
 def mail_batch_collector(collector: MailAlertCollector, order_col: str = "ingest_order"):
-    """foreachBatch callback for :func:`collect_mail_alerts_stream` with a
-    replay guard: an at-least-once re-invocation of the same ``batch_id``
-    would double-pool every event in the batch into one mail, so replays
-    are skipped. Collector state is driver-memory only — a driver restart
-    re-pools from scratch."""
+    """foreachBatch callback that feeds each micro-batch, in ``order_col``
+    order, into the (stateful) collector, with a replay guard: an
+    at-least-once re-invocation of the same ``batch_id`` would double-pool
+    every event in the batch into one mail, so replays are skipped.
+    Collector state is driver-memory only — a driver restart re-pools from
+    scratch."""
     state = {"last_batch": -1}
 
     def _collect(batch: DataFrame, batch_id: int) -> None:
@@ -356,16 +271,3 @@ def mail_batch_collector(collector: MailAlertCollector, order_col: str = "ingest
 
     return _collect
 
-
-def score_events(
-    violations: DataFrame,
-    weights: dict[str, float],
-    default: float = 0.5,
-    detector_col: str = "detector",
-) -> DataFrame:
-    """ScoringEventHandler analog: attach a confidence score per detector
-    (``detector_col='suite'`` for the constraint-suite violations table)."""
-    expr: Column = F.lit(default)
-    for detector, w in weights.items():
-        expr = F.when(F.col(detector_col) == detector, F.lit(w)).otherwise(expr)
-    return violations.withColumn("confidence", expr)

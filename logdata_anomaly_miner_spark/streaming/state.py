@@ -244,7 +244,6 @@ def streaming_new_sequences(stream: DataFrame, id_col: str = "id") -> DataFrame:
     )
 
 
-_COMBO_SEP = "\x1f"
 DISPATCH_OUTPUT_SCHEMA = (
     "ingest_order long, rank int, prev_ts double, new_paths array<string>"
 )

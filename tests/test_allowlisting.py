@@ -5,31 +5,8 @@ from __future__ import annotations
 
 from logdata_anomaly_miner_spark.operators.allowlisting import (
     allowlist_path,
-    allowlist_values,
     blocklist_path,
-    blocklist_values,
 )
-from logdata_anomaly_miner_spark.operators.new_value import check_new_values
-
-
-def test_allowlist_value_stops_alarming(spark):
-    base = spark.createDataFrame([("login",)], "event_type string")
-    batch = spark.createDataFrame(
-        [(1.0, "login"), (2.0, "probe"), (3.0, "probe")], "ts double, event_type string"
-    )
-    before = check_new_values(batch, ["event_type"], base)
-    assert [r["event_type"] for r in before.collect()] == ["probe"]
-    base2 = allowlist_values(base, [("probe",)], ["event_type"])
-    after = check_new_values(batch, ["event_type"], base2)
-    assert after.count() == 0
-
-
-def test_blocklist_value_alarms_again(spark):
-    base = spark.createDataFrame([("login",), ("probe",)], "event_type string")
-    batch = spark.createDataFrame([(1.0, "probe")], "ts double, event_type string")
-    assert check_new_values(batch, ["event_type"], base).count() == 0
-    base2 = blocklist_values(base, [("probe",)], ["event_type"])
-    assert check_new_values(batch, ["event_type"], base2).count() == 1
 
 
 def test_path_list_mutations():

@@ -12,7 +12,6 @@ from logdata_anomaly_miner_spark.functions.dedup import (
     exact_dup_groups,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
-    simhash64,
 )
 from logdata_anomaly_miner_spark.functions.similarity import (
     cosine_topk,
@@ -146,17 +145,6 @@ def test_jaccard_shingle_df_cap(spark):
     # stop-shingle-only pairs are gone; the true near-dup pair survives
     assert set(capped) == {(1, 2)}
     assert capped[(1, 2)] == 1.0  # exact jaccard, capped shingles included
-
-
-def test_simhash_near_dups(spark):
-    sim = simhash64(_docs(spark), "doc_id", "text")
-    vals = {r["doc_id"]: r["simhash"] for r in sim.collect()}
-    assert vals[1] == vals[2]
-    hamming = lambda a, b: bin((vals[a] ^ vals[b]) & (2**64 - 1)).count("1")  # noqa: E731
-    nd = {(a, b): hamming(a, b) for a in vals for b in vals if a < b and hamming(a, b) <= 10}
-    assert nd[(1, 2)] == 0
-    assert (1, 4) in nd  # near dup within hamming 10
-    assert not any(5 in p for p in nd)
 
 
 def test_cosine_topk_and_lsh(spark):

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from logdata_anomaly_miner_spark import parsing as P
 from logdata_anomaly_miner_spark.operators.new_value import check_new_values, first_occurrences
 from logdata_anomaly_miner_spark.operators.timestamps import unsorted_timestamps
-from logdata_anomaly_miner_spark.sources.readers import read_text_lines
+from logdata_anomaly_miner_spark.sources.readers import multisource_union, read_text_lines
 
 E2E = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden", "demo_e2e")
 FROZEN = 1710504060.0  # must equal scripts/capture_demo_golden.py FROZEN_TIME
@@ -1734,7 +1734,6 @@ def test_demo9_e2e_stream_matches_reference_golden(spark):
 
 def _spark_event_stream10(spark) -> str:
     from logdata_anomaly_miner_spark.operators.timestamps import unsorted_timestamps
-    from logdata_anomaly_miner_spark.streaming.frequency import union_sources
 
     model = P.seq(
         P.Element("^"),
@@ -1746,7 +1745,7 @@ def _spark_event_stream10(spark) -> str:
     )
     a = read_text_lines(spark, os.path.join(E2E, "corpus10a.log"), source_tag="parity0")
     b = read_text_lines(spark, os.path.join(E2E, "corpus10b.log"), source_tag="parity1")
-    merged = union_sources([a, b])
+    merged = multisource_union([a, b])
     parsed = (
         P.parse(merged, "raw", model)
         .withColumn("epoch", F.unix_timestamp("DTM10"))

@@ -5,7 +5,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.constraints.drift import (
     EPS,

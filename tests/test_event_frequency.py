@@ -4,8 +4,6 @@ single-history fallback std, empty-window gaps, sliding counts."""
 
 from __future__ import annotations
 
-import pytest
-
 from logdata_anomaly_miner_spark.operators.event_frequency import (
     anchored_window_counts,
     check_event_frequency,

@@ -2,13 +2,11 @@
 
 from __future__ import annotations
 
-import json
 import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logdata_anomaly_miner_spark.plans.sinks import score_events, to_json_events
 from logdata_anomaly_miner_spark.sources.readers import (
     multisource_union,
     parse_json_atoms,
@@ -53,99 +51,6 @@ def test_multisource_union(spark):
     assert out.count() == 2 and "w" in out.columns
 
 
-def test_json_events_and_scoring(spark):
-    v = spark.createDataFrame(
-        [("new_value", "New value(s) detected", 1.0, None, "val_a", None)],
-        "detector string, message string, ts double, group_key string, value string, detail string",
-    )
-    j = json.loads(to_json_events(v).collect()[0]["event_json"])
-    assert j["AnalysisComponent"]["AffectedLogAtomValues"] == ["val_a"]
-    assert j["AnalysisComponent"]["Message"] == "New value(s) detected"
-    s = score_events(v, {"new_value": 0.9}).collect()[0]
-    assert s["confidence"] == 0.9
-
-
-def test_emit_events_injected_transport(spark):
-    """Kafka/ZMQ handler delivery loop with an injected transport: the
-    emitter pushes each envelope as UTF-8 bytes to send(topic, payload)
-    — the exact shape KafkaProducer.send / a zmq PUB socket consumes —
-    so the serialization is certified without a broker."""
-    from logdata_anomaly_miner_spark.plans.sinks import emit_events
-
-    v = spark.createDataFrame(
-        [
-            ("new_value", "New value(s) detected", 1.0, None, "val_a", None),
-            ("entropy", "Low entropy", 2.0, None, "zzzz", None),
-        ],
-        "detector string, message string, ts double, group_key string, value string, detail string",
-    )
-    sent = []
-    n = emit_events(to_json_events(v), lambda topic, payload: sent.append((topic, payload)),
-                    topic="aminer-events")
-    assert n == 2 and len(sent) == 2
-    assert all(t == "aminer-events" and isinstance(p, bytes) for t, p in sent)
-    decoded = sorted(json.loads(p.decode())["AnalysisComponent"]["AffectedLogAtomValues"][0]
-                     for _, p in sent)
-    assert decoded == ["val_a", "zzzz"]
-
-
-def test_streaming_window_counts(spark):
-    from logdata_anomaly_miner_spark.streaming.frequency import streaming_window_counts
-
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(1_700_000_000.0 + i, "a" if i % 2 else "b") for i in range(20)],
-            "ts double, k string",
-        ).write.parquet(f"{d}/in")
-        stream = spark.readStream.schema("ts double, k string").parquet(f"{d}/in")
-        counts = streaming_window_counts(stream, ["k"], window_size_s=10.0)
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("win_counts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        rows = spark.sql("select * from win_counts").collect()
-        assert sum(r["cnt"] for r in rows) == 20
-        assert {r["k"] for r in rows} == {"a", "b"}
-
-
-def test_streaming_counts_equal_batch_when_aligned(spark):
-    """When the first atom falls on a calendar boundary, the streaming
-    (calendar) windows coincide with the batch anchored windows — the
-    documented deviation vanishes and counts must agree exactly."""
-    from logdata_anomaly_miner_spark.operators.event_frequency import (
-        anchored_window_counts,
-    )
-    from logdata_anomaly_miner_spark.streaming.frequency import streaming_window_counts
-
-    t0 = 1_700_000_000.0  # multiple of 10 -> aligned for 10s windows
-    rows = [(t0 + o, "a" if i % 3 else "b") for i, o in enumerate(
-        [0.0, 1.5, 9.9, 10.0, 12.2, 25.0, 31.4, 31.5, 47.0])]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, "ts double, k string").write.parquet(f"{d}/in")
-        stream = spark.readStream.schema("ts double, k string").parquet(f"{d}/in")
-        q = (
-            streaming_window_counts(stream, ["k"], window_size_s=10.0)
-            .writeStream.format("memory").queryName("aligned_counts")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(60)
-        got_stream = {
-            (r["k"], int(r["win_start"].timestamp() - t0) // 10): r["cnt"]
-            for r in spark.sql("select * from aligned_counts").collect()
-        }
-    batch = anchored_window_counts(
-        spark.createDataFrame(rows, "ts double, k string"), ["k"], 10.0
-    )
-    got_batch = {
-        (r["k"], r["w"]): r["cnt"] for r in batch.filter("cnt > 0").collect()
-    }
-    assert got_stream == got_batch
-
-
 def test_streaming_new_values(spark):
     from logdata_anomaly_miner_spark.streaming.state import streaming_new_values
 
@@ -171,48 +76,6 @@ def test_streaming_new_values(spark):
         assert rows == [("p1", "x"), ("p1", "y"), ("p2", "x")]
 
 
-def test_streaming_band_alarms_equal_batch(spark):
-    """End-to-end streaming band check (VERDICT item 8): the foreachBatch
-    alarm table after an availableNow run must equal the batch
-    check_event_frequency output on the calendar-aligned anchor fixture."""
-    from logdata_anomaly_miner_spark.operators.event_frequency import (
-        check_event_frequency,
-    )
-    from logdata_anomaly_miner_spark.streaming.frequency import (
-        run_streaming_band_check,
-    )
-
-    t0 = 1_700_000_000.0  # multiple of 10 -> calendar-aligned 10s windows
-    rows = []
-    for w in range(6):  # steady 2 events per window for both keys
-        for k in ("a", "b"):
-            rows += [(t0 + w * 10 + 1, k), (t0 + w * 10 + 2, k)]
-    rows += [(t0 + 61 + i * 0.5, "a") for i in range(9)]  # burst in w6 for a
-    rows += [(t0 + 62, "b"), (t0 + 63, "b")]
-    rows += [(t0 + 71, "a"), (t0 + 72, "a"), (t0 + 71, "b"), (t0 + 72, "b")]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, "ts double, k string").write.parquet(f"{d}/in")
-        stream = spark.readStream.schema("ts double, k string").parquet(f"{d}/in")
-        run_streaming_band_check(
-            stream, ["k"], 10.0, num_windows=5, confidence_factor=0.51,
-            t0_epoch=t0, sink_dir=f"{d}/alarms", await_seconds=120,
-        )
-        got = {
-            (r["k"], r["w"]): (r["cnt"], round(r["lower"], 9), round(r["upper"], 9))
-            for r in spark.read.parquet(f"{d}/alarms").collect()
-        }
-    batch = check_event_frequency(
-        spark.createDataFrame(rows, "ts double, k string"),
-        ["k"], 10.0, num_windows=5, confidence_factor=0.51,
-    )
-    want = {
-        (r["k"], r["w"]): (r["cnt"], round(r["lower"], 9), round(r["upper"], 9))
-        for r in batch.collect()
-    }
-    assert got == want
-    assert ("a", 6) in got  # the planted burst actually alarms
-
-
 def test_parse_xml_atoms(spark):
     """XmlModelElement analog via Spark-native from_xml: typed extraction,
     attribute addressing, and unparsed-atom tracking."""
@@ -235,51 +98,6 @@ def test_parse_xml_atoms(spark):
     assert out[0]["parsed"]["value"] == 7
     assert out[1]["_parse_ok"] and out[1]["parsed"]["value"] is None
     assert not out[2]["_parse_ok"]
-
-
-def test_streaming_value_range_matches_sequential(spark):
-    """Streaming ValueRangeDetector state operator vs the batch sequential
-    prefix check: identical alarms (value + the pre-event range)."""
-    import tempfile as _tf
-
-    from logdata_anomaly_miner_spark.operators.value_range import (
-        check_value_range_sequential,
-    )
-    from logdata_anomaly_miner_spark.streaming.state import streaming_value_range
-
-    rows = [
-        ("a", 1.0, 5.0), ("a", 2.0, 9.0), ("a", 3.0, 7.0), ("a", 4.0, 12.0),
-        ("b", 1.5, 100.0), ("b", 2.5, 90.0), ("b", 3.5, 95.0),
-        # a NULL value arrives as NaN through Arrow: it must be skipped, NOT
-        # poison c's (mn, mx) state and disable the later genuine alarm
-        ("c", 1.0, 10.0), ("c", 2.0, None), ("c", 3.0, 50.0),
-    ]
-    with _tf.TemporaryDirectory() as d:
-        spark.createDataFrame(rows, "id string, ts double, value double").coalesce(
-            1
-        ).write.parquet(f"{d}/in")
-        stream = spark.readStream.schema("id string, ts double, value double").parquet(
-            f"{d}/in"
-        )
-        q = (
-            streaming_value_range(stream)
-            .writeStream.format("memory").queryName("vr_alarms")
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["id"], r["ts"]): (r["value"], r["range_min"], r["range_max"])
-            for r in spark.sql("select * from vr_alarms").collect()
-        }
-    batch_df = spark.createDataFrame(rows, "id string, ts double, value double")
-    viol, _ = check_value_range_sequential(batch_df, ["id"], "value", ("ts",))
-    want = {}
-    for r in viol.collect():
-        import json as _json
-
-        det = _json.loads(r["detail"])
-        want[(r["id"], r["ts"])] = (det["value"], det["range_min"], det["range_max"])
-    assert got == want and len(got) >= 3
 
 
 def test_streaming_file_rollover(spark, tmp_path):

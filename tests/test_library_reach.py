@@ -1,26 +1,29 @@
 """Every top-level library def is reached from the running system or from a
-reference-parity test.
+reference-parity test, and no module imports or assigns a name it never uses.
 
-Static (AST and source text), no Spark. Roots: the scripts, ``bench.py``,
+Static (AST only), no Spark. Roots: the scripts, ``bench.py``,
 ``__spark_entry__.py`` and ``perfbench/``; the module-level code of every
 library module (the ``QUERIES``/``ORACLES`` registries); and the
-reference-parity and golden test files. From the roots, the names a reached def mentions reach every def of
-that name, to a fixpoint. A name counts wherever it appears in the source
-lines — code, docstring or comment — so a def that a reached def names as
-its counterpart is reached too. A def that nothing reaches is dead code —
-unless it is the reference that a named test replays, which ``KEEP`` records.
+reference-parity and golden test files. From the roots, the names a reached
+def uses in code reach every def of that name, to a fixpoint. Only code
+identifiers count — ``ast.Name`` ids, ``ast.Attribute`` attrs and imported
+names — so a def that a docstring, comment or string merely mentions is not
+reached. A def that nothing reaches is dead code — unless it is the
+reference that a named test replays, which ``KEEP`` records.
 
-Run ``python tests/test_library_reach.py`` to print the unreached defs.
+Run ``python tests/test_library_reach.py`` to print the unreached defs and
+the unused module names.
 """
 
 from __future__ import annotations
 
 import ast
-import re
+from functools import cache
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 LIBRARY = ROOT / "logdata_anomaly_miner_spark"
+TESTS = ROOT / "tests"
 
 ROOT_FILES = (
     sorted((ROOT / "scripts").glob("*.py"))
@@ -49,26 +52,53 @@ KEEP = {
     "known_values_from_reference_json": "test_operators3::test_known_values_reference_json",
     "write_known_values_reference_json":
         "test_operators3::test_streamed_persistence_writers_byte_parity",
+    "ranges_to_reference_json": "test_operators3::test_ranges_reference_json_golden",
+    "preselect_pairs": "test_operators3::test_preselect_random_method_seeded",
+    "pick_random_pairs": "test_operators3::test_preselect_random_method_seeded",
+    "match_disc_distr": "test_operators3::test_var_corr_preselection_reference_replay",
+    "exclude_due_distr": "test_operators3::test_var_corr_preselection_reference_replay",
+    "match_disc_vals": "test_operators3::test_var_corr_preselection_reference_replay",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-_NAME = re.compile(r"[A-Za-z_]\w*")
+_IMPORTS = (ast.Import, ast.ImportFrom)
+
+
+@cache
+def _tree(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+def _imported(node: ast.Import | ast.ImportFrom) -> list[str]:
+    """The names an import statement binds (``import a.b`` binds ``a``)."""
+    return [a.asname or a.name.split(".")[0] for a in node.names]
+
+
+def code_names(tree: ast.AST) -> set[str]:
+    """The identifiers a piece of code uses: Name ids, Attribute attrs and
+    the names an import brings in — never docstrings, comments or strings."""
+    out: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, _IMPORTS):
+            out.update(a.name.split(".")[-1] for a in n.names)
+    return out
 
 
 def library_defs() -> dict[str, list[tuple[str, int, set[str]]]]:
-    """Top-level defs by name -> [(module path, lines, names mentioned)];
-    the statements of module-level code (everything but defs and imports)
-    sit under the key ``""``."""
+    """Top-level defs by name -> [(module path, lines, names used)]; the
+    statements of module-level code (everything but defs and imports) sit
+    under the key ``""``."""
     defs: dict[str, list[tuple[str, int, set[str]]]] = {"": []}
     for path in sorted(LIBRARY.rglob("*.py")):
-        text = path.read_text()
-        lines = text.splitlines()
         rel = str(path.relative_to(ROOT))
-        for node in ast.parse(text, str(path)).body:
-            if isinstance(node, (ast.Import, ast.ImportFrom)):
+        for node in _tree(path).body:
+            if isinstance(node, _IMPORTS):
                 continue
-            src = "\n".join(lines[node.lineno - 1:node.end_lineno])
-            entry = (rel, node.end_lineno - node.lineno + 1, set(_NAME.findall(src)))
+            entry = (rel, node.end_lineno - node.lineno + 1, code_names(node))
             defs.setdefault(node.name if isinstance(node, _DEFS) else "", []).append(entry)
     return defs
 
@@ -77,10 +107,10 @@ def unreached() -> list[tuple[str, str, int]]:
     """(module, def name, lines) of every top-level library def that no root
     reaches, sorted by module and name."""
     defs = library_defs()
-    roots = [ROOT / "tests" / f"{t}.py" for t in PARITY_TESTS] + ROOT_FILES
+    roots = [TESTS / f"{t}.py" for t in PARITY_TESTS] + ROOT_FILES
     frontier: set[str] = set()
     for path in roots:
-        frontier |= set(_NAME.findall(path.read_text()))
+        frontier |= code_names(_tree(path))
     for _, _, names in defs.pop(""):
         frontier |= names
     reached: set[str] = set()
@@ -99,14 +129,53 @@ def unreached() -> list[tuple[str, str, int]]:
     )
 
 
+def unused_module_names() -> list[tuple[str, str, str]]:
+    """(module, name, 'import' | 'constant') for each module-level import a
+    library or test module never uses, and each module-level constant that
+    no scanned file reads."""
+    modules = sorted(LIBRARY.rglob("*.py")) + sorted(TESTS.glob("*.py"))
+    read_anywhere: set[str] = set()
+    for path in modules + ROOT_FILES:
+        for n in ast.walk(_tree(path)):
+            if isinstance(n, ast.Attribute):
+                read_anywhere.add(n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                read_anywhere.update(a.name for a in n.names)
+    out = []
+    for path in modules:
+        tree = _tree(path)
+        rel = str(path.relative_to(ROOT))
+        loaded = {
+            n.id for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, _IMPORTS):
+                out += [(rel, n, "import") for n in _imported(node) if n not in loaded]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                out += [
+                    (rel, t.id, "constant")
+                    for t in targets
+                    if isinstance(t, ast.Name)
+                    and not t.id.startswith("__")
+                    and t.id != "pytestmark"  # read by pytest
+                    and t.id not in loaded | read_anywhere
+                ]
+    return sorted(out)
+
+
 def test_kept_defs_exist_and_their_tests_exist():
     defs = library_defs()
     for name, test in KEEP.items():
         assert name in defs, f"KEEP names a def that is gone: {name}"
         module, func = test.split("::")
-        src = (ROOT / "tests" / f"{module}.py").read_text()
-        assert f"def {func}(" in src, f"{name}: test {test} not found"
-        assert name in src, f"tests/{module}.py does not mention {name}"
+        tree = _tree(TESTS / f"{module}.py")
+        tests = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        assert func in tests, f"{name}: test {test} not found"
+        assert name in code_names(tree), f"tests/{module}.py does not use {name}"
 
 
 def _report(rows: list[tuple[str, str, int]]) -> str:
@@ -123,5 +192,14 @@ def test_every_library_def_is_reached():
     )
 
 
+def test_no_unused_module_names():
+    rows = unused_module_names()
+    assert not rows, "unused module names:\n" + "\n".join(
+        f"{m}: {kind} {n}" for m, n, kind in rows
+    )
+
+
 if __name__ == "__main__":
     print(_report(unreached()))
+    for m, n, kind in unused_module_names():
+        print(f"unused {kind}: {m}: {n}")

@@ -9,8 +9,6 @@ checked against the frozen one — the observable consequence of the flag.
 
 from __future__ import annotations
 
-import pytest
-
 from logdata_anomaly_miner_spark.operators.lifecycle import (
     learning_cutoff,
     screen_paths,

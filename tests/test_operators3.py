@@ -9,10 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from logdata_anomaly_miner_spark.operators.correlation import (
-    chi_square,
-    implication_within,
-)
+from logdata_anomaly_miner_spark.operators.correlation import implication_within
 from logdata_anomaly_miner_spark.operators.variable_type import (
     infer_variable_types,
     ks_statistic,
@@ -121,19 +118,6 @@ def test_ks_with_ties_and_groups(spark):
     # ECDFs evaluated after ties: at v=1: |2/3 - 1/2|=1/6; v=2: |1 - 1/2|=1/2; v=3: 0
     got = ks_statistic(a, b, "v", ["grp"]).collect()[0]
     assert got["grp"] == "g" and got["ks"] == pytest.approx(0.5)
-
-
-def test_chi_square(spark):
-    # perfectly dependent: a==b
-    dep = spark.createDataFrame([(str(i % 2), str(i % 2)) for i in range(100)], "x string, y string")
-    c = chi_square(dep, "x", "y").collect()[0]
-    assert c["chi2"] == pytest.approx(100.0)  # N for a 2x2 perfect association
-    assert c["dof"] == 1
-    # independent-ish: chi2 near 0
-    ind = spark.createDataFrame(
-        [(str(i % 2), str((i // 2) % 2)) for i in range(100)], "x string, y string"
-    )
-    assert chi_square(ind, "x", "y").collect()[0]["chi2"] == pytest.approx(0.0, abs=1e-9)
 
 
 def test_implication_within(spark):

@@ -152,30 +152,6 @@ def test_infer_years_straggler_previous_year(spark):
     assert got[0].year == 2021 and got[2].year == 2021
 
 
-def test_datetime_multi_locale(spark):
-    """MultiLocaleDateTimeModelElement: ordered formats, localized month
-    names normalized before parsing; first match wins."""
-    from logdata_anomaly_miner_spark.parsing import datetime_multi_locale
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [("07 Feb 2019 11:40:00",), ("07 Feb. 2019 11:40:00",), ("07 Okt 2019 09:00:00",), ("nonsense",)],
-        "raw string",
-    )
-    ts = datetime_multi_locale(
-        F.col("raw"),
-        [
-            ("dd MMM yyyy HH:mm:ss", None),
-            ("dd MMM yyyy HH:mm:ss", {"Feb.": "Feb", "Okt": "Oct", "Dez": "Dec"}),
-        ],
-    )
-    got = [r["t"] for r in df.select(ts.alias("t")).collect()]
-    assert got[0] is not None and got[0].month == 2
-    assert got[1] is not None and got[1].month == 2
-    assert got[2] is not None and got[2].month == 10
-    assert got[3] is None
-
-
 def test_decimal_float_modes(spark):
     """DecimalFloatValueModelElement mode surface (reference :24-75)."""
     from logdata_anomaly_miner_spark.parsing import (
@@ -232,31 +208,6 @@ def test_repeated_items_per_item_values(spark):
         ),
     )
     assert out.collect()[0]["vals"] == [1, 22, 333]
-
-
-def test_parse_value_branches(spark):
-    """ElementValueBranchModelElement: the parsed discriminator routes each
-    row to its branch grammar; non-branch columns are null."""
-    from logdata_anomaly_miner_spark.parsing import (
-        any_bytes,
-        decimal_integer,
-        fixed,
-        parse,
-        parse_value_branches,
-        seq,
-        wordlist,
-    )
-
-    head = seq(wordlist("op", ["GET", "PUT"]), fixed(" "))
-    df = spark.createDataFrame([("GET /a 200",), ("PUT /b 17",)], "raw string")
-    parsed = parse(df, "raw", seq(head, any_bytes("rest")))
-    branches = {
-        "GET": seq(head, seq(fixed("/a "), decimal_integer("status"))),
-        "PUT": seq(head, seq(fixed("/b "), decimal_integer("nbytes"))),
-    }
-    out = {r["op"]: r for r in parse_value_branches(parsed, "op", branches).collect()}
-    assert out["GET"]["status"] == 200 and out["GET"]["nbytes"] is None
-    assert out["PUT"]["nbytes"] == 17 and out["PUT"]["status"] is None
 
 
 def test_parse_json_string_field(spark):

@@ -2,13 +2,12 @@
 
 Each test feeds the SAME corpus through a Structured Streaming stateful
 operator and the batch operator it re-expresses, and asserts identical
-violation sets. Together with the existing equivalence tests
-(streaming_window_counts ≡ anchored_window_counts,
-run_streaming_band_check ≡ check_event_frequency,
-streaming_value_range ≡ check_value_range_sequential in
-tests/test_io_streaming.py) this turns "streaming tested" into
-"streaming ≡ batch" for five detectors, including one with a state
-timeout (missing values, ProcessingTimeTimeout).
+violation sets: new values, missing values (with a state timeout,
+ProcessingTimeTimeout), charset, sequence n-grams, count clusters,
+entropy, event frequency (streaming_event_frequency ≡
+check_event_frequency) and value range (streaming_value_range ≡
+check_value_range_sequential). Each streaming operator here is the only
+streaming form of its detector.
 """
 
 from __future__ import annotations
@@ -495,3 +494,48 @@ def test_streaming_event_frequency_keyed_with_global_anchor(spark):
         expect.add((min(closers), 5))
     assert expect, "fixture must produce at least one band anomaly"
     assert got == expect
+
+
+def test_streaming_value_range_matches_sequential(spark):
+    """Streaming ValueRangeDetector state operator vs the batch sequential
+    prefix check: identical alarms (value + the pre-event range)."""
+    import tempfile as _tf
+
+    from logdata_anomaly_miner_spark.operators.value_range import (
+        check_value_range_sequential,
+    )
+    from logdata_anomaly_miner_spark.streaming.state import streaming_value_range
+
+    rows = [
+        ("a", 1.0, 5.0), ("a", 2.0, 9.0), ("a", 3.0, 7.0), ("a", 4.0, 12.0),
+        ("b", 1.5, 100.0), ("b", 2.5, 90.0), ("b", 3.5, 95.0),
+        # a NULL value arrives as NaN through Arrow: it must be skipped, NOT
+        # poison c's (mn, mx) state and disable the later genuine alarm
+        ("c", 1.0, 10.0), ("c", 2.0, None), ("c", 3.0, 50.0),
+    ]
+    with _tf.TemporaryDirectory() as d:
+        spark.createDataFrame(rows, "id string, ts double, value double").coalesce(
+            1
+        ).write.parquet(f"{d}/in")
+        stream = spark.readStream.schema("id string, ts double, value double").parquet(
+            f"{d}/in"
+        )
+        q = (
+            streaming_value_range(stream)
+            .writeStream.format("memory").queryName("vr_alarms")
+            .outputMode("update").trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        got = {
+            (r["id"], r["ts"]): (r["value"], r["range_min"], r["range_max"])
+            for r in spark.sql("select * from vr_alarms").collect()
+        }
+    batch_df = spark.createDataFrame(rows, "id string, ts double, value double")
+    viol, _ = check_value_range_sequential(batch_df, ["id"], "value", ("ts",))
+    want = {}
+    for r in viol.collect():
+        import json as _json
+
+        det = _json.loads(r["detail"])
+        want[(r["id"], r["ts"])] = (det["value"], det["range_min"], det["range_max"])
+    assert got == want and len(got) >= 3

@@ -8,7 +8,7 @@ import pytest
 
 from logdata_anomaly_miner_spark.operators.tsa import (
     ar1_forecast_bands,
-    ar_forecast_bands,
+    arma_forecast_bands,
     hr_arma_forecast_bands,
 )
 
@@ -63,7 +63,9 @@ def test_ar_p_flags_burst(spark):
         vals.append(nxt)
         prev.append(nxt)
     vals.append(100.0)  # burst at the end
-    out = {r["w"]: r for r in ar_forecast_bands(_series(spark, vals), ["k"], p=3).collect()}
+    out = {r["w"]: r for r in arma_forecast_bands(
+        _series(spark, vals), ["k"], p=3, q=0
+    ).collect()}
     assert out[len(vals) - 1]["anomaly"] is True
     normal = [w for w, r in out.items() if r["anomaly"] and w != len(vals) - 1]
     assert len(normal) <= 2
@@ -154,8 +156,6 @@ def test_arma_pq_recovers_and_flags(spark):
     """ARMA(2,1) via the general applyInPandas Hannan–Rissanen: on a
     synthetic ARMA(2,1) series the in-sample predictions track closely
     (sigma near the innovation scale) and an injected burst flags."""
-    from logdata_anomaly_miner_spark.operators.tsa import arma_forecast_bands
-
     rng = np.random.RandomState(5)
     eps = rng.uniform(-1, 1, 120)
     vals = [10.0, 11.0]
@@ -179,8 +179,6 @@ def test_arma_pq_recovers_and_flags(spark):
 def test_arma_seasonal_diff_combination(spark):
     """d=1 + seasonal lag: trend + period-6 cycle fits near-exactly; a
     broken cycle point flags; clean series has no alarms."""
-    from logdata_anomaly_miner_spark.operators.tsa import arma_forecast_bands
-
     cyc = [0.0, 8.0, 3.0, -2.0, 5.0, 1.0]
     clean_vals = [0.5 * t + cyc[t % 6] for t in range(120)]
     vals = list(clean_vals)

@@ -183,7 +183,7 @@ def test_css_refinement_tightens_ma_estimates():
 
 def test_arma_css_q2_spark_matches_python_replica(spark):
     """End-to-end q=2 through the Spark operator: arma_forecast_bands with
-    css=True returns the same one-step predictions as a pure-python replay
+    method='css' returns the same one-step predictions as a pure-python replay
     of the CSS pipeline, and a clean MA(2) stream yields no 4-sigma anomalies
     while an injected 25-sigma spike is flagged (z=1.96 would correctly flag
     ~5%% of clean Gaussian residuals, so the no-anomaly check uses z=4)."""
@@ -200,7 +200,7 @@ def test_arma_css_q2_spark_matches_python_replica(spark):
         [("k", i, float(v)) for i, v in enumerate(vals)],
         "k string, w long, cnt double",
     )
-    out = arma_forecast_bands(counts, ["k"], p=0, q=2, css=True, min_train=20, z=4.0)
+    out = arma_forecast_bands(counts, ["k"], p=0, q=2, method="css", min_train=20, z=4.0)
     rows = {r["w"]: r for r in out.collect()}
     assert sum(1 for r in rows.values() if r["anomaly"]) == 0
     # python replica of the operator's css path
@@ -234,7 +234,7 @@ def test_arma_css_q2_spark_matches_python_replica(spark):
             [("k", len(vals), 5.0 + 25.0)], "k string, w long, cnt double"
         )
     )
-    out2 = arma_forecast_bands(spiked, ["k"], p=0, q=2, css=True, min_train=20, z=4.0)
+    out2 = arma_forecast_bands(spiked, ["k"], p=0, q=2, method="css", min_train=20, z=4.0)
     flagged = {r["w"] for r in out2.filter("anomaly").collect()}
     assert len(vals) in flagged
 
