@@ -12,9 +12,9 @@ Spec shape:
       kind_vocab: [text, image, audio, video, code, table, header, footnote]
       entropy: {prob_thresh: 0.001}
       drift:   {psi_threshold: 0.2, buckets: 10, len_bounds: [0, 200]}
-      checks:  [uniqueness, referential, schema, new_value, entropy, drift]
 
-Unknown keys fail fast (the reference's cerberus-style validation); defaults
+The suite always runs all six checks (uniqueness, referential, schema,
+new_value, entropy, drift). Unknown keys fail fast (the reference's cerberus-style validation); defaults
 are filled like its normalisation pass.
 """
 
@@ -35,9 +35,7 @@ _DEFAULTS: dict[str, Any] = {
         "stop_learning_no_anomaly_time": None,
         "ignore_kinds": [],
     },
-    "checks": ["uniqueness", "referential", "schema", "new_value", "entropy", "drift"],
 }
-_KNOWN_CHECKS = set(_DEFAULTS["checks"])
 
 
 class SpecError(ValueError):
@@ -70,9 +68,6 @@ def validate_spec(spec: dict[str, Any] | None) -> dict[str, Any]:
             out[k] = {**default, **v}
         else:
             out[k] = v
-    bad = set(out["checks"]) - _KNOWN_CHECKS
-    if bad:
-        raise SpecError(f"unknown checks: {sorted(bad)}")
     pt = out["entropy"]["prob_thresh"]
     if not (isinstance(pt, (int, float)) and 0 <= pt <= 1):
         raise SpecError("entropy.prob_thresh must be in [0, 1]")

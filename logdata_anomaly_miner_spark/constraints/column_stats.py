@@ -3,16 +3,11 @@
 AMiner analog: EventTypeDetector's per-variable value accumulation
 (aminer/analysis/EventTypeDetector.py:25-293) and HistogramAnalysis
 (aminer/analysis/HistogramAnalysis.py:79-623); extended per the north star
-with null rate, distinct counts (exact or HyperLogLog), min/max, and
-approximate quantiles.
+with null rate, exact distinct counts, min/max, and approximate quartiles.
 
 Scale shape: ONE aggregation pass over the table produces every column's
-stats (map-side combinable, one shuffled row), then the single result row is
-exploded into one row per column. With ``exact_distinct=True`` Spark plans an
-Expand (input ×|columns|) to satisfy multiple count-distincts — fine at test
-scale; at 10^12 rows use ``exact_distinct=False`` (HyperLogLog
-approx_count_distinct, default rsd 5%) which keeps partial aggregation and a
-single pass with no expand.
+stats, then the single result row is exploded into one row per column. Spark
+plans an Expand (input ×|columns|) to satisfy several count-distincts.
 """
 
 from __future__ import annotations
@@ -25,15 +20,9 @@ from pyspark.sql import functions as F
 _NUMERIC = ("int", "bigint", "smallint", "tinyint", "double", "float")
 
 
-def column_stats(
-    df: DataFrame,
-    columns: Sequence[str],
-    exact_distinct: bool = True,
-    rsd: float = 0.05,
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-) -> DataFrame:
+def column_stats(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """One output row per column: (column, n_rows, null_rate, n_distinct,
-    min, max, quantiles). min/max/quantiles are null for non-numeric cols."""
+    min, max, quartiles). min/max/quartiles are null for non-numeric cols."""
     dtypes = dict(df.dtypes)
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in columns:
@@ -42,13 +31,11 @@ def column_stats(
         num = col.cast("double") if is_num else F.lit(None).cast("double")
         aggs += [
             F.round(F.avg(col.isNull().cast("double")), 9).alias(f"_null_{c}"),
-            (
-                F.countDistinct(col) if exact_distinct else F.approx_count_distinct(col, rsd)
-            ).alias(f"_nd_{c}"),
+            F.countDistinct(col).alias(f"_nd_{c}"),
             F.min(num).alias(f"_min_{c}"),
             F.max(num).alias(f"_max_{c}"),
             (
-                F.percentile_approx(num, list(quantiles), 10000)
+                F.percentile_approx(num, [0.25, 0.5, 0.75], 10000)
                 if is_num
                 else F.lit(None).cast("array<double>")
             ).alias(f"_q_{c}"),

@@ -4,9 +4,8 @@ North-star spec: "referential integrity of media_ref via broadcast/sort-merge
 anti-join". AMiner's closest analog is completeness checking in
 MissingMatchPathValueDetector (aminer/analysis/MissingMatchPathValueDetector.py:
 25-334); the set-oriented form is simply a **left_anti join** of fact keys
-against the dimension. Catalyst picks broadcast vs sort-merge from stats;
-``broadcast_dim=True`` forces the hint when the caller knows the dimension is
-small (the usual case for a media catalog vs a 10^12-row fact side).
+against the dimension, broadcast: a media catalog or other dimension is small
+beside a 10^12-row fact side.
 """
 
 from __future__ import annotations
@@ -39,16 +38,10 @@ def dangling_refs(
     fk_col: str,
     dim: DataFrame,
     pk_col: str,
-    broadcast_dim: bool = True,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Non-null FK values with no matching dimension row."""
-    keys = fact.select(F.col(fk_col)).filter(F.col(fk_col).isNotNull())
-    if distinct:
-        # Pre-aggregate fact keys before the join: the anti-join then moves
-        # |distinct keys| rows instead of |fact| rows.
-        keys = keys.dropDuplicates()
+    """Distinct non-null FK values with no matching dimension row."""
+    # Pre-aggregate fact keys before the join: the anti-join then moves
+    # |distinct keys| rows instead of |fact| rows.
+    keys = fact.select(F.col(fk_col)).filter(F.col(fk_col).isNotNull()).dropDuplicates()
     d = dim.select(F.col(pk_col).alias(fk_col)).dropDuplicates()
-    if broadcast_dim:
-        d = F.broadcast(d)
-    return keys.join(d, on=[fk_col], how="left_anti")
+    return keys.join(F.broadcast(d), on=[fk_col], how="left_anti")

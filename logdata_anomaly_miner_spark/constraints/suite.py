@@ -264,7 +264,7 @@ def run_suite(
     lo, hi = cfg.text_len_bounds
     cur_hist = histogram(lens, "text_len", lo, hi, cfg.n_hist_buckets, ["kind"])
     if cfg.baseline_hist is not None:
-        drift = psi_kl(cur_hist, cfg.baseline_hist, ["kind"], cfg.n_hist_buckets)
+        drift = psi_kl(cur_hist, cfg.baseline_hist, ["kind"])
         drift_fail = drift.filter(F.col("psi") > cfg.drift_psi_threshold)
         # drift is a snapshot-level verdict: a drifted kind fails every
         # partition in the batch (cross the tiny fail set with partitions)

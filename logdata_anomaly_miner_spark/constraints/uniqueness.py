@@ -15,14 +15,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# salts per key: the most reducers one hot key's partial counts spread over
+SALT_BUCKETS = 64
 
-def duplicate_keys_salted(
-    df: DataFrame, key_cols: Sequence[str], salt_buckets: int = 64
-) -> DataFrame:
+
+def duplicate_keys_salted(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Keys occurring more than once + their count, as a two-phase salted
     aggregate: groupBy(key, salt) partial counts, then groupBy(key) final
     sum — bounded per-reducer fan-in for arbitrarily hot keys."""
-    salt = F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(SALT_BUCKETS))
     partial = (
         df.withColumn("_salt", salt)
         .groupBy(*key_cols, "_salt")

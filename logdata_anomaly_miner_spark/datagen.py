@@ -61,24 +61,21 @@ def gen_media(spark: SparkSession, n_media: int = 1000, seed: int = 42) -> DataF
 def gen_documents(
     spark: SparkSession,
     n_docs: int = 10_000,
-    n_media: int = 1000,
     seed: int = 42,
-    max_spans: int = 8,
     dup_rate: float = 0.01,
     dangling_rate: float = 0.02,
-    null_media_rate: float = 0.5,
-    t0: float = 1_700_000_000.0,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Synthesize the interleaved text+media documents table.
 
     - doc_id: unique except a ``dup_rate`` fraction remapped onto a small set
       of hot duplicate ids (drives the uniqueness suite + skew handling).
-    - spans: 1..max_spans structs; kind zipf-skewed; text = 1..5 pool tokens
-      joined by space; media_ref only on media-ish kinds, null otherwise;
-      ``dangling_rate`` of non-null refs point outside media; offset strictly
-      increasing within the doc.
-    - ts: monotone-ish event time (epoch seconds, double).
+    - spans: 1..8 structs; kind zipf-skewed; text = 1..5 pool tokens joined
+      by space; media_ref only on media-ish kinds, null on half of them;
+      ``dangling_rate`` of non-null refs point outside media, the rest into
+      the 1000 ids of ``gen_media``; offset strictly increasing within the
+      doc.
+    - ts: monotone-ish event time (epoch seconds from 1.7e9, double).
     """
     base = (
         spark.range(0, n_docs, 1, n_partitions)
@@ -95,7 +92,7 @@ def gen_documents(
             F.format_string("doc_dup_%d", _h(seed + 3, did) % 7),
         ).otherwise(doc_id)
 
-    n_spans = (_h(seed + 4, did) % max_spans + 1).cast("int")
+    n_spans = (_h(seed + 4, did) % 8 + 1).cast("int")
 
     def span_struct(i: Column) -> Column:
         sh = _h(seed + 5, did, i)
@@ -112,11 +109,11 @@ def gen_documents(
         is_media_kind = kind.isin("image", "audio", "video")
         ref_h = _h(seed + 7, did, i)
         dangling = (ref_h % 1000) < int(dangling_rate * 1000)
-        null_ref = (_h(seed + 8, did, i) % 1000) < int(null_media_rate * 1000)
+        null_ref = (_h(seed + 8, did, i) % 1000) < 500
         media_ref = (
             F.when(~is_media_kind | null_ref, F.lit(None).cast("string"))
             .when(dangling, F.format_string("m_missing_%06d", ref_h % 100000))
-            .otherwise(F.format_string("m%06d", ref_h % n_media))
+            .otherwise(F.format_string("m%06d", ref_h % 1000))
         )
         offset = (i * 16 + (sh % 16)).cast("int")
         return F.struct(
@@ -127,7 +124,8 @@ def gen_documents(
         )
 
     spans = F.transform(F.sequence(F.lit(0), n_spans - 1), span_struct)
-    ts = (F.lit(t0) + did * 0.1 + (_h(seed + 9, did) % 100) / 1000.0).cast("double")
+    ts = F.lit(1_700_000_000.0) + did * 0.1 + (_h(seed + 9, did) % 100) / 1000.0
+    ts = ts.cast("double")
 
     return base.select(
         doc_id.alias("doc_id"), ts.alias("ts"), spans.alias("spans")

@@ -64,14 +64,6 @@ _SUITE_CORPUS_ROOT = _os.path.join(
 )
 SUITE_CORPUS_DIR = _os.path.join(_SUITE_CORPUS_ROOT, f"run-{_os.getpid()}")
 
-# Deterministic fault seeding for the oracle gate (round-6 ADVICE): the
-# driver-generated tables are clean (complete dimension, duplicate-free
-# corpus), so without planted faults q_referential / q_dedup_exact would
-# only ever certify the empty-violation path. The SQL oracles mirror the
-# seeded faults, so this must stay True under the driver's correctness
-# harness; set False when reusing these query exemplars on real data.
-INJECT_BENCH_FAULTS = True
-
 
 def _reap_stale_corpus_dirs() -> None:
     """Best-effort removal of run dirs whose owning process is gone, so
@@ -295,20 +287,19 @@ def q_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the generated dimension is complete (every user_id exists), so the
-    # anti-join was vacuously green; drop customers with c_custkey % 10 == 7
-    # to simulate missing dimension rows — now the query proves the
-    # violation path fires AND that matched refs stay silent
+    # planted fault: the generated dimension is complete (every user_id
+    # exists), so the anti-join would only certify the empty-violation
+    # path; dropping customers with c_custkey % 10 == 7 simulates missing
+    # dimension rows, so the query proves the violation path fires AND that
+    # matched refs stay silent. The oracle SQL mirrors the drop.
     ev = _read(spark, sf_dir, "events")
-    cust = _read(spark, sf_dir, "customer")
-    if INJECT_BENCH_FAULTS:
-        cust = cust.filter("c_custkey % 10 != 7")
+    cust = _read(spark, sf_dir, "customer").filter("c_custkey % 10 != 7")
     return dangling_refs(ev, "user_id", cust, "c_custkey").select("user_id")
 
 
 def q_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read(spark, sf_dir, "events")
-    stats = column_stats(ev, ["value", "user_id"], exact_distinct=True)
+    stats = column_stats(ev, ["value", "user_id"])
     med = ev.agg(
         F.round(F.percentile("value", F.lit(0.5)), 6).alias("_m_value"),
         F.round(F.percentile("user_id", F.lit(0.5)), 6).alias("_m_user_id"),
@@ -359,16 +350,16 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the synthetic corpus has no exact duplicates, so the grouper returned
-    # 0 groups; seed determinstic dups (every 20th doc re-ingested under a
-    # shifted id, the classic re-crawl shape) so the query certifies both
-    # that dup groups surface AND that unique docs stay out
+    # planted fault: the synthetic corpus has no exact duplicates, so the
+    # grouper would return 0 groups; seed deterministic dups (every 20th
+    # doc re-ingested under a shifted id, the classic re-crawl shape) so
+    # the query certifies both that dup groups surface AND that unique
+    # docs stay out. The oracle SQL mirrors the seeding.
     docs = _read(spark, sf_dir, "documents")
-    if INJECT_BENCH_FAULTS:
-        dup = docs.filter("doc_id % 20 = 0").withColumn(
-            "doc_id", F.col("doc_id") + F.lit(10_000_000)
-        )
-        docs = docs.unionByName(dup)
+    dup = docs.filter("doc_id % 20 = 0").withColumn(
+        "doc_id", F.col("doc_id") + F.lit(10_000_000)
+    )
+    docs = docs.unionByName(dup)
     return exact_dup_groups(docs, "doc_id", "text").select("text_hash", "cnt")
 
 
@@ -576,7 +567,7 @@ def q_near_dup_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logdata_anomaly_miner_spark.functions.similarity import exact_near_dup_pairs
 
     emb = _read(spark, sf_dir, "embeddings")
-    out = exact_near_dup_pairs(spark, emb, "embedding", "vec_id", 0.45)
+    out = exact_near_dup_pairs(emb, "embedding", "vec_id", 0.45)
     return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 

@@ -30,12 +30,12 @@ def normalize_text(text: Column) -> Column:
 
 
 def exact_dup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalize: bool = True
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(text_hash, cnt, doc_ids) for texts occurring more than once."""
-    t = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
+    """(text_hash, cnt, doc_ids) for normalized texts occurring more than
+    once."""
     return (
-        df.withColumn("text_hash", F.md5(t))
+        df.withColumn("text_hash", F.md5(normalize_text(F.col(text_col))))
         .groupBy("text_hash")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
         .filter(F.col("cnt") > 1)
@@ -138,23 +138,13 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard over shingle sets; keeps pairs with similarity ≥
     threshold. |∩| via the shingle **inverted index** (self-join on gram):
     only pairs that actually share a shingle ever materialize — never the
     all-pairs cross product. Pass ``candidates`` (e.g. LSH pairs) to restrict
-    further; None scans the full index.
-
-    ``max_shingle_df`` caps the inverted-index skew: a shingle shared by f
-    documents materializes f² join rows, so one stop-shingle ('the qu')
-    in 10⁶ docs would alone emit 10¹² rows. With the cap set, shingles with
-    document frequency > cap are EXCLUDED from candidate generation (and
-    logged); the surviving candidates' Jaccard is then computed exactly
-    over ALL their shingles, so reported similarities are unchanged — only
-    pairs whose overlap consists exclusively of capped stop-shingles are
-    missed (those have near-zero Jaccard by construction when the cap ≫
-    doc count × threshold)."""
+    further; None scans the full index, where a shingle shared by f
+    documents materializes f² join rows."""
     src = df
     if candidates is not None:
         # the candidate set is referenced three times below (id filter +
@@ -182,30 +172,6 @@ def ngram_jaccard_pairs(
     )
     sizes = sh.select("_id", F.size("sh").alias("n"))
     ex = sh.select("_id", F.explode("sh").alias("g"))
-    if candidates is None and max_shingle_df is not None:
-        hot = (
-            ex.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > int(max_shingle_df))
-        )
-        n_hot = hot.count()
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).info(
-                "ngram_jaccard_pairs: dropping %d shingles with df > %d from "
-                "candidate generation (pairs sharing only those are missed)",
-                n_hot,
-                max_shingle_df,
-            )
-        pruned = ex.join(F.broadcast(hot.select("g")), "g", "left_anti")
-        candidates = (
-            pruned.select(F.col("_id").alias("id_a"), "g")
-            .join(pruned.select(F.col("_id").alias("id_b"), "g"), "g")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates()
-        )
     if candidates is None:
         # full inverted index: every shingle-sharing pair, exact
         inter = (
@@ -239,10 +205,10 @@ def ngram_jaccard_pairs(
 
 
 def portable_simhash_bits(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_bits: int = 64
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Relational SimHash with a portable (md5-hex-nibble) token hash —
-    one row per (id, bit) with the majority bit value. Cross-engine
+    """Relational 64-bit SimHash with a portable (md5-hex-nibble) token
+    hash — one row per (id, bit) with the majority bit value. Cross-engine
     deterministic (md5/substr/strpos exist everywhere), so the
     ``simhash_bits`` query matches its DuckDB oracle bit for bit."""
     toks = df.select(
@@ -251,8 +217,8 @@ def portable_simhash_bits(
     ).withColumn("h", F.md5(F.col("tok")))
     # wide aggregation, not a bit-explode: one conditional sum per bit over
     # the token rows (map-side combined), then stack() restores the
-    # per-(id, bit) oracle shape AFTER aggregation — |docs|·n_bits rows
-    # post-shuffle instead of |tokens|·n_bits rows pre-shuffle
+    # per-(id, bit) oracle shape AFTER aggregation — |docs|·64 rows
+    # post-shuffle instead of |tokens|·64 rows pre-shuffle
     def bitval(i: int):
         nibble = F.conv(F.substring(F.col("h"), i // 4 + 1, 1), 16, 10).cast("int")
         return F.shiftright(nibble, i % 4).bitwiseAND(F.lit(1))
@@ -260,13 +226,13 @@ def portable_simhash_bits(
     sums = toks.groupBy("_id").agg(
         *[
             F.sum(F.when(bitval(i) == 1, 1).otherwise(-1)).alias(f"_s{i}")
-            for i in range(n_bits)
+            for i in range(64)
         ]
     )
-    stack_args = ", ".join(f"{i}, _s{i}" for i in range(n_bits))
+    stack_args = ", ".join(f"{i}, _s{i}" for i in range(64))
     return sums.selectExpr(
         f"_id as {id_col}",
-        f"stack({n_bits}, {stack_args}) as (bit, s)",
+        f"stack(64, {stack_args}) as (bit, s)",
     ).select(
         id_col,
         F.col("bit").cast("int").alias("bit"),

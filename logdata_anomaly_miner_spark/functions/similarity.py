@@ -95,10 +95,11 @@ def hyperplane_signature(
     return out
 
 
-def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (LCG, no numpy RNG state)."""
+def make_planes(dim: int, n_planes: int = 12) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (LCG seeded with 42, no numpy
+    RNG state)."""
     planes = []
-    state = seed
+    state = 42
     for _ in range(n_planes):
         row = []
         for _ in range(dim):
@@ -113,16 +114,14 @@ def lsh_bucket_topk(
     vec_col: str,
     query: Sequence[float],
     k: int = 10,
-    id_col: str = "vec_id",
     n_planes: int = 12,
-    seed: int = 42,
 ) -> DataFrame:
     """ANN: filter to the query's LSH bucket (+hamming-1 probes), exact
     cosine re-rank. Recall < 1 by construction; the candidate filter is a
     pure predicate so Catalyst pushes it into the scan of a signature-
     partitioned table at scale."""
     dim = len(query)
-    planes = make_planes(dim, n_planes, seed)
+    planes = make_planes(dim, n_planes)
     sig = hyperplane_signature(F.col(vec_col), planes)
     qsig = 0
     for i, p in enumerate(planes):
@@ -130,16 +129,15 @@ def lsh_bucket_topk(
             qsig |= 1 << i
     probes = [qsig] + [qsig ^ (1 << i) for i in range(n_planes)]
     cands = df.withColumn("_sig", sig).filter(F.col("_sig").isin(probes))
-    return cosine_topk(cands, vec_col, query, k, id_col)
+    return cosine_topk(cands, vec_col, query, k)
 
 
 def ivf_assign_cells(
     df: DataFrame,
     vec_col: str,
     centers: Sequence[Sequence[float]],
-    out_col: str = "_cell",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid with pure Column algebra:
+    """Adds ``_cell``: each vector's nearest centroid, assigned with pure Column algebra:
     argmin ||v−c||² = argmax (v·c − ||c||²/2), evaluated as an array of
     (score, cell) structs + array_max — whole-stage codegen, no UDF, no
     vector UDT in the hot path. ``centers`` is the (small) trained
@@ -157,14 +155,13 @@ def ivf_assign_cells(
             for i, c in enumerate(centers)
         ]
     )
-    return df.withColumn(out_col, F.array_max(scored)["cell"])
+    return df.withColumn("_cell", F.array_max(scored)["cell"])
 
 
-def _kmeans_lloyd(
-    mat, k: int, seed: int, max_iter: int = 40, tol: float = 1e-9
-) -> list[list[float]]:
-    """Deterministic driver-side KMeans (k-means++ init + Lloyd) over an
-    n×d numpy sample. Replaces the pyspark.ml KMeans fit, whose ~2
+def _kmeans_lloyd(mat, k: int, seed: int) -> list[list[float]]:
+    """Deterministic driver-side KMeans (k-means++ init + Lloyd, at most
+    40 iterations, until the centers move by ≤ 1e-9) over an n×d numpy
+    sample. Replaces the pyspark.ml KMeans fit, whose ~2
     Spark jobs PER ITERATION (~30 jobs per codebook) were pure scheduling
     overhead for a codebook that is trained from a bounded sample anyway
     (guide §1.2: fix the algorithm shape before the per-task work). All
@@ -188,7 +185,7 @@ def _kmeans_lloyd(
             centers[i] = mat[rng.randint(n)]
         d2 = np.minimum(d2, ((mat - centers[i]) ** 2).sum(axis=1))
     x2 = (mat * mat).sum(axis=1)
-    for _ in range(max_iter):
+    for _ in range(40):
         c2 = (centers * centers).sum(axis=1)
         dist = x2[:, None] - 2.0 * (mat @ centers.T) + c2[None, :]
         assign = dist.argmin(axis=1)
@@ -203,7 +200,7 @@ def _kmeans_lloyd(
                 new_centers[j] = mat[dist[np.arange(n), assign].argmax()]
         shift = float(((new_centers - centers) ** 2).sum())
         centers = new_centers
-        if shift <= tol:
+        if shift <= 1e-9:
             break
     return [list(map(float, c)) for c in centers]
 
@@ -214,26 +211,23 @@ def ivf_topk(
     vec_col: str,
     query: Sequence[float],
     k: int = 10,
-    id_col: str = "vec_id",
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     train_fraction: float = 1.0,
-    train_cap: int = 65536,
     codebook_out_path: str | None = None,
 ) -> DataFrame:
     """IVF ANN (the clustering-based scale path next to the hyperplane-LSH
     one): KMeans codebook -> every vector lands in a cell; a query scans
     only its ``n_probe`` nearest cells and re-ranks exactly (cosine_topk,
     TakeOrderedAndProject). At 10^12 vectors the codebook is trained
-    offline on a sample (``train_fraction``, hard-capped at ``train_cap``
-    rows — the standard IVF practice of a fixed training budget) and the
+    offline on a sample (``train_fraction``, hard-capped at 65,536 rows —
+    the standard IVF practice of a fixed training budget) and the
     cell id is a stored partition column, so the probe filter prunes the
     scan; here training runs inline. Recall < 1 by construction
     (cell-boundary misses), mitigated by raising n_probe.
 
     The codebook fit is a driver-side numpy Lloyd over the collected
-    sample (bounded: train_cap × d doubles), not a distributed ml.KMeans:
+    sample (bounded: 65,536 × d doubles), not a distributed ml.KMeans:
     a distributed fit on a driver-bounded sample only adds ~2 scheduler
     round-trips per iteration (measured: 33 jobs → 3, ~7 s per query at
     sf0.1)."""
@@ -241,10 +235,10 @@ def ivf_topk(
 
     train = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
     if train_fraction < 1.0:
-        train = train.sample(fraction=train_fraction, seed=seed)
-    sample = train.limit(int(train_cap)).collect()
+        train = train.sample(fraction=train_fraction, seed=42)
+    sample = train.limit(65536).collect()
     mat = np.array([r["_v"] for r in sample], dtype=np.float64)
-    centers = _kmeans_lloyd(mat, n_centroids, seed)
+    centers = _kmeans_lloyd(mat, n_centroids, 42)
     if codebook_out_path is not None:
         # persist the trained codebook: downstream assignment / probe /
         # rerank become pure functions of (vectors, codebook) that an
@@ -273,28 +267,24 @@ def ivf_topk(
     probes = sorted(range(len(centers)), key=lambda i: -scores[i])[:n_probe]
     assigned = ivf_assign_cells(df, vec_col, centers)
     cands = assigned.filter(F.col("_cell").isin(probes)).drop("_cell")
-    return cosine_topk(cands, vec_col, query, k, id_col)
+    return cosine_topk(cands, vec_col, query, k)
 
 
 def exact_near_dup_pairs(
-    spark,
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.45,
-    n_blocks: int = 8,
-    rows_per_chunk: int = 4096,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold, fully distributed (no driver
     collect, no whole-matrix broadcast), two-phase:
 
-    1. **Block-pair BLAS prefilter**: rows hash into ``n_blocks`` blocks;
-       each row is replicated to the n_blocks (lo, hi) block pairs it
-       participates in (one shuffle of n·B rows), then one applyInPandas
-       task per block pair computes blockA × blockBᵀ with numpy and emits
-       candidate pairs above (threshold − slack). Peak task memory is
-       2·(n/B)·d·8 bytes + a rows_per_chunk-bounded sims tile — tune
-       n_blocks so a block fits an executor. Exact all-pairs is O(n²)
+    1. **Block-pair BLAS prefilter**: rows hash into B = 8 blocks; each
+       row is replicated to the B (lo, hi) block pairs it participates in
+       (one shuffle of n·B rows), then one applyInPandas task per block
+       pair computes blockA × blockBᵀ with numpy and emits candidate pairs
+       above (threshold − slack). Peak task memory is 2·(n/B)·d·8 bytes +
+       a sims tile of 4096 rows. Exact all-pairs is O(n²)
        FLOPs by definition; this spreads them over B(B+1)/2 tasks.
     2. **Exact re-check**: candidates (broadcast — they are few) join their
        vectors back and the cosine is recomputed with the same sequential
@@ -308,7 +298,7 @@ def exact_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    B = max(1, int(n_blocks))
+    B = 8
     slack = 1e-6
     tagged = df.select(
         F.col(id_col).alias("_id"),
@@ -342,8 +332,8 @@ def exact_near_dup_pairs(
             ib_idx = np.nonzero(blk == hi)[0]
         mb, nb, idb = mat[ib_idx], norms[ib_idx], ids[ib_idx]
         out_a, out_b = [], []
-        for s in range(0, len(ia_idx), rows_per_chunk):
-            ii = ia_idx[s : s + rows_per_chunk]
+        for s in range(0, len(ia_idx), 4096):
+            ii = ia_idx[s : s + 4096]
             sims = (mat[ii] @ mb.T) / (norms[ii][:, None] * nb[None, :])
             r, c = np.nonzero(sims >= threshold - slack)
             a, b = ids[ii[r]], idb[c]

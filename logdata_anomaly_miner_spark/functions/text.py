@@ -89,9 +89,9 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("lang_pred", pred)
 
 
-def fingerprint(text: Column, mod: int = 1_000_000_007) -> Column:
+def fingerprint(text: Column) -> Column:
     """Deterministic position-weighted rolling-hash document fingerprint:
-    sum over chars of code(c_i) * (i+1) mod p — portable across engines
+    sum over chars of code(c_i) * (i+1) mod 1e9+7 — portable across engines
     (the same expression is SQL-expressible in DuckDB for the oracle)."""
     codes = F.transform(F.split(text, ""), lambda c: F.ascii(c).cast("long"))
     n = F.size(codes)
@@ -103,4 +103,4 @@ def fingerprint(text: Column, mod: int = 1_000_000_007) -> Column:
     )
     total = F.aggregate(weighted, F.lit(0).cast("long"), lambda a, x: a + x)
     # sequence(1, 0) would be descending, not empty — guard zero-length text
-    return F.pmod(F.when(n > 0, total).otherwise(F.lit(0)), F.lit(mod))
+    return F.pmod(F.when(n > 0, total).otherwise(F.lit(0)), F.lit(1_000_000_007))

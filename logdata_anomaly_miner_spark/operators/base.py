@@ -22,25 +22,23 @@ def violation_cols(
     ts: Column,
     group_key: Column | None = None,
     value: Column | None = None,
-    detail: Column | None = None,
 ) -> list[Column]:
-    """Standard violation projection (FIXTURES.md §2 `violations`)."""
+    """Standard violation projection (FIXTURES.md §2 `violations`); its
+    ``detail`` column is null."""
     return [
         F.lit(detector).alias("detector"),
         F.lit(message).alias("message"),
         ts.cast("double").alias("ts"),
         (group_key if group_key is not None else F.lit(None)).cast("string").alias("group_key"),
         (value if value is not None else F.lit(None)).cast("string").alias("value"),
-        (detail if detail is not None else F.lit(None)).cast("string").alias("detail"),
+        F.lit(None).cast("string").alias("detail"),
     ]
 
 
-def format_event_lines(
-    df: DataFrame, component_name: str = "None", loglines_col: str = "loglines"
-) -> DataFrame:
+def format_event_lines(df: DataFrame, component_name: str = "None") -> DataFrame:
     """format_event generalized to N loglines: renders the StreamPrinter
     golden with ``({n} lines)`` and one two-space-indented line per element
-    of ``loglines_col`` (array<string>), matching EventData.receive_event_
+    of ``loglines`` (array<string>), matching EventData.receive_event_
     string's bytes-logline branch (aminer/events/EventData.py:60-75): the
     header counts ALL loglines, the body skips empty ones, each body line
     is newline-terminated, plus StreamPrinter's closing newline. (The
@@ -50,7 +48,7 @@ def format_event_lines(
     empty strings, so event_text is never NULL."""
     ts_str = F.from_unixtime(F.col("ts").cast("long"), "yyyy-MM-dd HH:mm:ss")
     all_lines = F.coalesce(
-        F.col(loglines_col), F.array().cast("array<string>")
+        F.col("loglines"), F.array().cast("array<string>")
     )
     body_lines = F.filter(
         all_lines, lambda l: l.isNotNull() & (l != F.lit(""))
@@ -77,8 +75,9 @@ def format_event_lines(
     )
 
 
-def format_event(df: DataFrame, component_name: str = "None") -> DataFrame:
-    """Render violations in the reference StreamPrinter golden format.
+def format_event(df: DataFrame) -> DataFrame:
+    """Render violations in the reference StreamPrinter golden format, for
+    an unnamed component (the reference prints its name as "None").
 
     Reference: aminer/events/EventData.py:49-78 and e.g.
     aecid-testsuite/unit/analysis/ValueRangeDetectorTest.py:22 —
@@ -93,7 +92,7 @@ def format_event(df: DataFrame, component_name: str = "None") -> DataFrame:
             F.col("message"),
             F.lit("\n"),
             F.col("detector"),
-            F.lit(f': "{component_name}" (1 lines)\n  '),
+            F.lit(': "None" (1 lines)\n  '),
             F.coalesce(F.col("value"), F.lit("")),
             F.lit("\n\n"),
         ),

@@ -22,10 +22,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from logdata_anomaly_miner_spark.operators.var_gof import Z_ALPHA, bt_min_successes
 
-def chi_square_pairs(
-    df: DataFrame, cols: Sequence[str], alpha_z: float = 1.6448536269514722
-) -> DataFrame:
+# the reference's validation defaults: discovery on the first NUM_INIT rows,
+# re-tests on NUM_UPDATE-row chunks, a NUM_BT-chunk binomial ladder
+NUM_INIT, NUM_UPDATE, NUM_BT = 100, 50, 30
+
+
+def chi_square_pairs(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """VariableCorrelationDetector pair discovery
     (aminer/analysis/VariableCorrelationDetector.py:15-1642): test EVERY
     unordered column pair for independence; one output row per pair with
@@ -33,7 +37,7 @@ def chi_square_pairs(
 
     Significance without scipy: the Wilson–Hilferty cube-root normal
     approximation z = ((χ²/k)^⅓ − (1 − 2/(9k))) / √(2/(9k)); dependent ⟺
-    z > z_α (default α=0.05 one-sided). The same closed form evaluates in
+    z > z_α (α=0.05 one-sided). The same closed form evaluates in
     the DuckDB oracle.
 
     Scale shape (r8): ONE scan for all pairs — every pair melts out of the
@@ -77,12 +81,10 @@ def chi_square_pairs(
     # grid is exactly n) — no marginal-product grid join needed
     # (validate_correlation_pairs uses the identical form, with the
     # derivation)
-    from pyspark.sql import Window as _W
-
     cells = (
-        obs.withColumn("ra", F.sum("cnt").over(_W.partitionBy(*pk, "va")))
-        .withColumn("rb", F.sum("cnt").over(_W.partitionBy(*pk, "vb")))
-        .withColumn("n", F.sum("cnt").over(_W.partitionBy(*pk)))
+        obs.withColumn("ra", F.sum("cnt").over(Window.partitionBy(*pk, "va")))
+        .withColumn("rb", F.sum("cnt").over(Window.partitionBy(*pk, "vb")))
+        .withColumn("n", F.sum("cnt").over(Window.partitionBy(*pk)))
         .withColumn("e", F.col("ra") * F.col("rb") / F.col("n"))
     )
     combined = cells.groupBy(*pk).agg(
@@ -98,7 +100,7 @@ def chi_square_pairs(
         - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * k))
     ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * k))
     return combined.withColumn("z", z).withColumn(
-        "dependent", F.col("z") > F.lit(float(alpha_z))
+        "dependent", F.col("z") > F.lit(Z_ALPHA)
     )
 
 
@@ -311,22 +313,14 @@ def validate_correlation_pairs(
     df: DataFrame,
     cols: Sequence[str],
     order_cols: Sequence[str] = ("event_id",),
-    num_init: int = 100,
-    num_update: int = 50,
-    alpha_z: float = 1.6448536269514722,
-    num_bt: int = 30,
-    bt_alpha: float = 0.05,
-    d_alpha: float = 0.05,
-    num_buckets: int | None = None,
-    pairs: Sequence[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """VariableCorrelationDetector validation phase (reference
     VariableCorrelationDetector.py:575-1300: update_or_test_cor* +
     homogeneity_test :1200-1242 + validate_cor :1312): pairs discovered as
-    dependent on the first ``num_init`` rows are continuously RE-TESTED on
-    successive ``num_update``-row chunks with a chi² homogeneity test of
+    dependent on the first NUM_INIT rows are continuously RE-TESTED on
+    successive NUM_UPDATE-row chunks with a chi² homogeneity test of
     the chunk's joint (a, b) distribution against the discovery sample;
-    chunk failures feed a trailing ``num_bt`` binomial ladder (the same
+    chunk failures feed a trailing NUM_BT binomial ladder (the same
     machinery as var_gof.d_ladder), and an alarmed pair is DROPPED — the
     running ``dropped`` flag mirrors the reference deleting the failing
     correlation rule.
@@ -340,15 +334,8 @@ def validate_correlation_pairs(
     Returns (pair, chunk, chi2, dof, z, n_new, failed, n_fails, n_tests,
     alarm, dropped)."""
     from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
-    from logdata_anomaly_miner_spark.operators.var_gof import bt_min_successes
 
-    # ``pairs`` restricts to a preselected candidate set (preselect_pairs,
-    # the reference's used_presel_meth); default = all unordered pairs
-    pair_list = (
-        list(pairs)
-        if pairs is not None
-        else [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
-    )
+    pair_list = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
     pair_structs = [
         F.struct(
             F.lit(f"{a}~{b}").alias("pair"),
@@ -363,7 +350,7 @@ def validate_correlation_pairs(
     # orders by a dense integral ingest id, which _with_range_bucket
     # buckets by equal width; any order-consistent bucketing yields
     # identical prefix positions.
-    pre = _with_range_bucket(df, order_cols, num_buckets)
+    pre = _with_range_bucket(df, order_cols, None)
     bucketed = (
         pre.select(
             *order_cols, "_pid", F.explode(F.array(*pair_structs)).alias("_p")
@@ -403,8 +390,8 @@ def validate_correlation_pairs(
     cube = (
         d.withColumn(
             "chunk",
-            F.when(F.col("_ern") <= num_init, F.lit(-1).cast("long")).otherwise(
-                F.floor((F.col("_ern") - num_init - 1) / F.lit(num_update))
+            F.when(F.col("_ern") <= NUM_INIT, F.lit(-1).cast("long")).otherwise(
+                F.floor((F.col("_ern") - NUM_INIT - 1) / F.lit(NUM_UPDATE))
             ),
         )
         .groupBy("pair", "chunk", "va", "vb")
@@ -450,7 +437,7 @@ def validate_correlation_pairs(
         F.pow(F.col("chi2") / k, F.lit(1.0 / 3.0))
         - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * k))
     ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * k))
-    dep = disc.withColumn("z", wh_z).filter(F.col("z") > F.lit(float(alpha_z))).select("pair")
+    dep = disc.withColumn("z", wh_z).filter(F.col("z") > F.lit(Z_ALPHA)).select("pair")
 
     # homogeneity baseline: the dependent pairs' init joint distribution
     bl = (
@@ -468,19 +455,19 @@ def validate_correlation_pairs(
     full_chunks = (
         obs_post.groupBy("pair", "chunk")
         .agg(F.sum("cnt").alias("cn"))
-        .filter(F.col("cn") >= num_update)
+        .filter(F.col("cn") >= NUM_UPDATE)
         .select("pair", "chunk")
     )
     # closed form again (r8): the per-chunk grid is the baseline support
     # with O=0 wherever the chunk lacks the combo, so
-    #   Σ_bl (O−E)²/E = Σ_{bl∩chunk}[(O−E)²/E − E] + num_update·Σ_bl p
+    #   Σ_bl (O−E)²/E = Σ_{bl∩chunk}[(O−E)²/E − E] + NUM_UPDATE·Σ_bl p
     # with Σ_bl p = 1 by construction — only observed∩baseline cells are
-    # touched, chunks with no overlap get exactly num_update, and the
+    # touched, chunks with no overlap get exactly NUM_UPDATE, and the
     # bl × full_chunks grid expansion join disappears.
     matched = (
         obs_post.join(full_chunks, ["pair", "chunk"], "left_semi")
         .join(bl, ["pair", "va", "vb"])
-        .withColumn("e", F.col("p") * F.lit(float(num_update)))
+        .withColumn("e", F.col("p") * F.lit(float(NUM_UPDATE)))
         .withColumn(
             "term", (F.col("cnt") - F.col("e")) ** 2 / F.col("e") - F.col("e")
         )
@@ -492,7 +479,7 @@ def validate_correlation_pairs(
             "left",
         )
         .withColumn(
-            "chi2", F.coalesce(F.col("_s"), F.lit(0.0)) + F.lit(float(num_update))
+            "chi2", F.coalesce(F.col("_s"), F.lit(0.0)) + F.lit(float(NUM_UPDATE))
         )
         .drop("_s")
         .join(F.broadcast(num_diff), "pair")
@@ -509,16 +496,16 @@ def validate_correlation_pairs(
         .withColumn("n_new", F.coalesce("n_new", F.lit(0)).cast("long"))
         .withColumn("z", wh_z)
         .withColumn(
-            "failed", (F.col("n_new") > 0) | (F.col("z") > F.lit(float(alpha_z)))
+            "failed", (F.col("n_new") > 0) | (F.col("z") > F.lit(Z_ALPHA))
         )
     )
     # ladder + drop status: |pairs| × |chunks| rows by now — tiny — so the
     # pair-partitioned windows are over aggregated chunk rows, not atoms
-    bt = Window.partitionBy("pair").orderBy("chunk").rowsBetween(-(num_bt - 1), 0)
+    bt = Window.partitionBy("pair").orderBy("chunk").rowsBetween(-(NUM_BT - 1), 0)
     run = Window.partitionBy("pair").orderBy("chunk").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    min_success = bt_min_successes(num_bt, 1.0 - d_alpha, bt_alpha)
+    min_success = bt_min_successes(NUM_BT, 0.95, 0.05)
     return (
         per_chunk.withColumn(
             "n_fails", F.sum(F.col("failed").cast("int")).over(bt).cast("long")
@@ -526,7 +513,7 @@ def validate_correlation_pairs(
         .withColumn("n_tests", F.count(F.lit(1)).over(bt).cast("long"))
         .withColumn(
             "alarm",
-            (F.col("n_tests") >= num_bt)
+            (F.col("n_tests") >= NUM_BT)
             & ((F.col("n_tests") - F.col("n_fails")) < min_success),
         )
         .withColumn("dropped", F.max(F.col("alarm").cast("int")).over(run) == 1)
@@ -630,8 +617,6 @@ def mine_implication_rules(
     # exact binomial critical value (reference get_min_eval_true :124-149)
     # — same failure-tail walk as the gof ladder's bt_min_successes, with
     # the tail mass 1-alpha (one shared implementation, no drift)
-    from logdata_anomaly_miner_spark.operators.var_gof import bt_min_successes
-
     thr = bt_min_successes(max_observations, p0, 1 - alpha)
     return pairs.withColumn(
         "status",

@@ -103,35 +103,13 @@ def _pair_counts_bytes(vals: DataFrame, value_col: str = "_v") -> DataFrame:
     )
 
 
-def learn_bigram_freq(
-    df: DataFrame,
-    value_col: str,
-    baseline: DataFrame | None = None,
-    skip_repetitions: bool = False,
-    seen_values: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Returns (freq baseline (first,second,cnt), updated seen-values table).
-
-    skip_repetitions ≙ reference :170-174 — count each distinct value once
-    (and never recount values already in the persisted value_set).
-    """
+def learn_bigram_freq(df: DataFrame, value_col: str) -> tuple[DataFrame, None]:
+    """Returns ``(freq, None)``: the (first, second, cnt) bigram counts of
+    every non-null value. Callers unpack the pair (the benchmark indexes
+    ``[0]``); to count each distinct value once (the reference's
+    skip_repetitions, :170-174), pass distinct values."""
     vals = df.select(F.col(value_col).alias("_v")).filter(F.col("_v").isNotNull())
-    new_seen = None
-    if skip_repetitions:
-        vals = vals.dropDuplicates()
-        if seen_values is not None:
-            vals = vals.join(seen_values, vals["_v"] == seen_values["value"], "left_anti")
-            new_seen = seen_values.unionByName(vals.select(F.col("_v").alias("value"))).dropDuplicates()
-        else:
-            new_seen = vals.select(F.col("_v").alias("value"))
-    counts = _pair_counts_bytes(vals, "_v")
-    if baseline is not None:
-        counts = (
-            baseline.unionByName(counts)
-            .groupBy("first", "second")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    return counts, new_seen
+    return _pair_counts_bytes(vals, "_v"), None
 
 
 def freq_matrix(freq: DataFrame) -> np.ndarray:

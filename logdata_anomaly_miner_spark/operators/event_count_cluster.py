@@ -3,14 +3,13 @@
 Re-expresses EventCountClusterDetector (aminer/analysis/
 EventCountClusterDetector.py:26-390): per (id, window) build the vector of
 event-type counts; compare against known vectors with normalized Manhattan
-distance (detect :206, manhattan :240-265, optional idf weighting :45,159);
-similarity below ``confidence_factor`` → anomaly, else learn the vector.
+distance (detect :206, manhattan :240-265; the reference's optional idf
+term weighting, :45,159, is not reproduced); similarity below ``confidence_factor`` → anomaly, else learn the vector.
 
 Spark shape: counts are a relational (id, window, event_type, cnt) table —
 the vector never materializes as a Python object. Distance between current
 windows and baseline vectors is a full-outer join on event_type per (id)
-followed by a groupBy sum: dist = Σ|c−b| / (Σc + Σb). IDF weighting
-multiplies each term by log10(N/df) computed from the baseline corpus.
+followed by a groupBy sum: dist = Σ|c−b| / (Σc + Σb).
 """
 
 from __future__ import annotations
@@ -48,14 +47,11 @@ def manhattan_vs_baseline(
     current: DataFrame,
     baseline: DataFrame,
     id_cols: Sequence[str],
-    idf: bool = False,
-    n_baseline_ids: int | None = None,
 ) -> DataFrame:
     """Normalized Manhattan distance of each current (id, w) vector vs the
-    id's baseline vector: dist = Σ w_t·|c_t − b_t| / (Σ w_t·c_t + Σ w_t·b_t).
+    id's baseline vector: dist = Σ|c_t − b_t| / (Σc_t + Σb_t).
 
-    ``baseline`` columns: id_cols + (event_type, cnt). With ``idf=True``
-    terms are weighted by log10(N/df) over baseline ids (reference :45,159).
+    ``baseline`` columns: id_cols + (event_type, cnt).
     """
     g = list(id_cols)
     cur = current.select(*g, "w", "event_type", F.col("cnt").alias("c"))
@@ -68,18 +64,9 @@ def manhattan_vs_baseline(
     j = cur.join(base_w, [*g, "w", "event_type"], "full_outer").fillna(
         {"c": 0, "b": 0}
     )
-    weight = F.lit(1.0)
-    if idf:
-        if n_baseline_ids is None:
-            raise ValueError("idf=True requires n_baseline_ids")
-        df_counts = baseline.select(*g, "event_type").dropDuplicates().groupBy(
-            "event_type"
-        ).agg(F.count(F.lit(1)).alias("df"))
-        j = j.join(F.broadcast(df_counts), "event_type", "left").fillna({"df": 1})
-        weight = F.log10(F.lit(float(n_baseline_ids)) / F.col("df"))
     return (
-        j.withColumn("_num", weight * F.abs(F.col("c") - F.col("b")))
-        .withColumn("_den", weight * (F.col("c") + F.col("b")))
+        j.withColumn("_num", F.abs(F.col("c") - F.col("b")))
+        .withColumn("_den", F.col("c") + F.col("b"))
         .groupBy(*g, "w")
         .agg((F.sum("_num") / F.sum("_den")).alias("dist"))
     )

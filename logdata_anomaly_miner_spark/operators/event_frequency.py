@@ -96,8 +96,6 @@ def frequency_bands(
     key_cols: Sequence[str],
     num_windows: int,
     confidence_factor: float,
-    set_lower_limit: float | None = None,
-    set_upper_limit: float | None = None,
 ) -> DataFrame:
     """Attach (lower, upper) band per (key, w) from trailing history
     (reference calculate_range :361-399). Adds n_hist, mean, std columns."""
@@ -119,17 +117,9 @@ def frequency_bands(
             F.col("std")
         ),
     )
-    lower = (
-        F.lit(float(set_lower_limit))
-        if set_lower_limit is not None
-        else F.col("mean") - F.col("std") / F.lit(cf)
+    return out.withColumn("lower", F.col("mean") - F.col("std") / F.lit(cf)).withColumn(
+        "upper", F.col("mean") + F.col("std") / F.lit(cf)
     )
-    upper = (
-        F.lit(float(set_upper_limit))
-        if set_upper_limit is not None
-        else F.col("mean") + F.col("std") / F.lit(cf)
-    )
-    return out.withColumn("lower", lower).withColumn("upper", upper)
 
 
 def check_event_frequency(
@@ -139,28 +129,17 @@ def check_event_frequency(
     num_windows: int,
     confidence_factor: float,
     ts_col: str = "ts",
-    unique_cols: Sequence[str] | None = None,
-    set_lower_limit: float | None = None,
-    set_upper_limit: float | None = None,
     t0: float | None = None,
 ) -> DataFrame:
     """Full detector: violations per (key, w) for closed windows.
 
     A window is checked when (a) it is not the global last (only a later
-    atom closes it), and (b) the key has ≥1 prior window (n_hist ≥ 1).
+    atom closes it), and (b) the key has ≥1 prior window (n_hist ≥ 1;
+    reference :213-216).
     """
-    counts = anchored_window_counts(
-        df, key_cols, window_size, ts_col, unique_cols, t0
-    )
-    banded = frequency_bands(
-        counts, key_cols, num_windows, confidence_factor, set_lower_limit, set_upper_limit
-    )
-    checked = banded.filter(F.col("w") < F.col("w_last"))
-    # Reference :213-216 skips keys with <2 windows ONLY when a limit is
-    # unset; with BOTH limits given even a key's first closed window is
-    # checked against the fixed [lower, upper].
-    if set_lower_limit is None or set_upper_limit is None:
-        checked = checked.filter(F.col("n_hist") >= 1)
+    counts = anchored_window_counts(df, key_cols, window_size, ts_col, t0=t0)
+    banded = frequency_bands(counts, key_cols, num_windows, confidence_factor)
+    checked = banded.filter(F.col("w") < F.col("w_last")).filter(F.col("n_hist") >= 1)
     # SKIPPED-WINDOW RULE (reference :186-201 + reset_counter :340-348):
     # counts[-1] at a completion check is always a window in which at least
     # one atom arrived (the atom that closed it bumped next_check_time past
@@ -282,7 +261,6 @@ def check_early_exceeding(
     num_windows: int,
     confidence_factor: float,
     ts_col: str = "ts",
-    t0: float | None = None,
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
     """early_exceeding_anomaly_output (reference :264-302): the FIRST event
@@ -292,16 +270,9 @@ def check_early_exceeding(
     Batch shape: cumulative count per (key, w) ordered by event time; join
     the (key, w) upper bounds; keep the first crossing row per (key, w)."""
     ts = F.col(ts_col).cast("double")
-    src = df
-    if t0 is None:
-        t0_df = src.agg(F.min(ts).alias("_t0"))
-        work = src.crossJoin(F.broadcast(t0_df))
-        anchor = F.col("_t0")
-    else:
-        work = src
-        anchor = F.lit(float(t0))
-    with_w = work.withColumn("w", F.floor((ts - anchor) / F.lit(float(window_size))))
-    counts = anchored_window_counts(src, key_cols, window_size, ts_col, t0=t0)
+    work = df.crossJoin(F.broadcast(df.agg(F.min(ts).alias("_t0"))))
+    with_w = work.withColumn("w", F.floor((ts - F.col("_t0")) / F.lit(float(window_size))))
+    counts = anchored_window_counts(df, key_cols, window_size, ts_col)
     banded = frequency_bands(counts, key_cols, num_windows, confidence_factor)
     bounds = banded.filter(F.col("n_hist") >= 1).select(*key_cols, "w", "upper")
     order = [ts, *[F.col(c) for c in tiebreak_cols]]
@@ -324,17 +295,17 @@ def sliding_counts(
     df: DataFrame,
     key_cols: Sequence[str],
     window_size: float,
-    ts_col: str = "ts",
     micros_col: str | None = None,
 ) -> DataFrame:
     """Per-row trailing-window occurrence count (``sliding_cnt``): RANGE
-    frame over event time ≙ the reference's timestamp deque
-    (get_current_frequency counts timestamps ≥ t − window, so the frame is
-    inclusive on both ends, which rangeBetween is)."""
+    frame over event time (``micros_col``, else ``ts`` in seconds) ≙ the
+    reference's timestamp deque (get_current_frequency counts timestamps
+    ≥ t − window, so the frame is inclusive on both ends, which
+    rangeBetween is)."""
     ord_col = (
         F.col(micros_col)
         if micros_col
-        else (F.col(ts_col).cast("double") * 1_000_000).cast("long")
+        else (F.col("ts").cast("double") * 1_000_000).cast("long")
     )
     w = (
         Window.partitionBy(*key_cols)
@@ -349,11 +320,11 @@ def check_sliding_frequency(
     key_cols: Sequence[str],
     window_size: float,
     max_occurrences: int,
-    ts_col: str = "ts",
     micros_col: str | None = None,
 ) -> DataFrame:
     """SlidingEventFrequencyDetector (:22-271): count of events per key in
-    the trailing ``window_size`` seconds exceeds ``max_occurrences``."""
-    return sliding_counts(df, key_cols, window_size, ts_col, micros_col).filter(
+    the trailing ``window_size`` seconds of ``ts`` exceeds
+    ``max_occurrences``."""
+    return sliding_counts(df, key_cols, window_size, micros_col).filter(
         F.col("sliding_cnt") > max_occurrences
     )

@@ -28,15 +28,14 @@ def linear_histogram(
     value_col: str,
     lo: float,
     bin_size: float,
-    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(group..., bin, cnt) with bin = floor((v - lo)/bin_size) —
+    """(bin, cnt) with bin = floor((v - lo)/bin_size) —
     LinearNumericBinDefinition (HistogramAnalysis.py:115-166)."""
     v = F.col(value_col).cast("double")
     return (
         df.filter(v.isNotNull())
         .withColumn("bin", F.floor((v - F.lit(lo)) / F.lit(bin_size)))
-        .groupBy(*group_cols, "bin")
+        .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -72,26 +71,20 @@ def average_change(
     bin_size: float,
     group_cols: Sequence[str] = (),
     min_bin_elements: int = 1,
-    min_bin_time: float | None = None,
     change_threshold: float = 2.0,
     num_history_bins: int = 10,
-    t0: float | None = None,
 ) -> DataFrame:
     """Per-bin mean vs trailing history mean, normalized by history stddev
     (population, matching numpy defaults elsewhere): flags bins where
     |mean - hist_mean| > change_threshold * hist_std.
 
-    Returns one row per (group, bin) with mean/hist_mean/hist_std/changed.
+    Bins are anchored at the first timestamp. Returns one row per (group,
+    bin) with mean/hist_mean/hist_std/changed.
     """
     ts = F.col(ts_col).cast("double")
     v = F.col(value_col).cast("double")
-    if t0 is None:
-        t0_df = df.agg(F.min(ts).alias("_t0"))
-        df = df.crossJoin(F.broadcast(t0_df))
-        anchor = F.col("_t0")
-    else:
-        anchor = F.lit(float(t0))
-    binned = df.withColumn("bin", F.floor((ts - anchor) / F.lit(bin_size)))
+    df = df.crossJoin(F.broadcast(df.agg(F.min(ts).alias("_t0"))))
+    binned = df.withColumn("bin", F.floor((ts - F.col("_t0")) / F.lit(bin_size)))
     per_bin = (
         binned.groupBy(*group_cols, "bin")
         .agg(F.avg(v).alias("mean"), F.count(F.lit(1)).alias("n"))

@@ -1,10 +1,9 @@
-"""Learn-mode lifecycle + path screening (shared detector options).
+"""Learn-mode lifecycle (shared detector options).
 
 Re-expresses the AtomHandlerInterface lifecycle options every reference
 detector inherits (aminer/input/InputInterfaces.py:275-280 init;
 per-detector transition e.g. aminer/analysis/ValueRangeDetector.py:81-84,
-extension :162-164) and the ignore/constraint path screening
-(ValueRangeDetector.py:86-90):
+extension :162-164):
 
 - ``stop_learning_time``: learn_mode flips to False for every atom with
   atom_time strictly greater than start + stop_learning_time (strict "<"
@@ -15,9 +14,6 @@ extension :162-164) and the ignore/constraint path screening
   stop timestamp to its time + Δ (VRD :162-164), so learning stops at the
   FIRST atom whose gap to its predecessor exceeds Δ — and never resumes.
   The stopping atom itself is checked but not learned.
-- ``ignore_list`` / ``constraint_list``: an atom is skipped entirely when
-  any ignore path is present or any constraint path is absent. In the
-  columnar model "path present" ≙ column non-null.
 
 The gap scan is distributed exactly like operators/timestamps.py: range
 buckets + per-bucket lag + broadcast carry-in — no single-partition window.
@@ -25,28 +21,10 @@ buckets + per-bucket lag + broadcast carry-in — no single-partition window.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
-
-
-def screen_paths(
-    df: DataFrame,
-    ignore_cols: Sequence[str] = (),
-    constraint_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Drop rows any reference detector would skip (VRD :86-90): a row is
-    kept iff every ignore column is null AND every constraint column is
-    non-null."""
-    cond = F.lit(True)
-    for c in ignore_cols:
-        cond = cond & F.col(c).isNull()
-    for c in constraint_cols:
-        cond = cond & F.col(c).isNotNull()
-    return df.filter(cond)
 
 
 def learning_cutoff(
@@ -54,7 +32,6 @@ def learning_cutoff(
     ts_col: str = "ts",
     stop_learning_time: float | Column | None = None,
     stop_learning_no_anomaly_time: float | None = None,
-    num_buckets: int | None = None,
 ) -> tuple[DataFrame, bool]:
     """Returns (one-row DataFrame with ``cutoff_ts`` double, inclusive).
 
@@ -69,7 +46,7 @@ def learning_cutoff(
     ts = F.col(ts_col).cast("double")
     if stop_learning_no_anomaly_time is not None:
         delta = float(stop_learning_no_anomaly_time)
-        d = _with_range_bucket(df.select(ts.alias("_ts")), ["_ts"], num_buckets)
+        d = _with_range_bucket(df.select(ts.alias("_ts")), ["_ts"], None)
         w = Window.partitionBy("_pid").orderBy("_ts")
         d = d.withColumn("_prev", F.lag("_ts").over(w))
         last = d.groupBy("_pid").agg(F.max("_ts").alias("_last"))
@@ -100,13 +77,12 @@ def split_learn_check(
     ts_col: str = "ts",
     stop_learning_time: float | Column | None = None,
     stop_learning_no_anomaly_time: float | None = None,
-    num_buckets: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a batch into (learn_df, check_only_df) per the lifecycle rules.
     check_only rows are still CHECKED by detectors (learn_mode=False runs
     the check path) — they just never extend the baseline."""
     cut, inclusive = learning_cutoff(
-        df, ts_col, stop_learning_time, stop_learning_no_anomaly_time, num_buckets
+        df, ts_col, stop_learning_time, stop_learning_no_anomaly_time
     )
     ts = F.col(ts_col).cast("double")
     d = df.crossJoin(F.broadcast(cut))

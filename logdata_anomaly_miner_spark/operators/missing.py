@@ -22,16 +22,12 @@ def check_missing_values(
     value_cols: Sequence[str],
     interval_s: float,
     ts_micros_col: str,
-    now_micros: int | None = None,
 ) -> DataFrame:
     """(value..., last_seen_us) for values silent longer than interval_s
-    before `now` (default: global max timestamp)."""
+    before `now`, the global max timestamp."""
     last = df.groupBy(*value_cols).agg(F.max(ts_micros_col).alias("last_seen_us"))
-    if now_micros is None:
-        now_df = df.agg(F.max(ts_micros_col).alias("_now_us"))
-        last = last.crossJoin(F.broadcast(now_df))
-    else:
-        last = last.withColumn("_now_us", F.lit(int(now_micros)))
+    now_df = df.agg(F.max(ts_micros_col).alias("_now_us"))
+    last = last.crossJoin(F.broadcast(now_df))
     return (
         last.filter(
             F.col("last_seen_us") < F.col("_now_us") - F.lit(int(interval_s * 1_000_000))

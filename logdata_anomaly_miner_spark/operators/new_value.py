@@ -9,8 +9,8 @@ Re-expresses (semantics only, not code):
 
 Spark shape (SURVEY.md §2.4): the learned ``known_values_set`` becomes a
 baseline DataFrame; the membership check becomes a **left_anti join**
-(broadcast when the baseline is small — Catalyst/AQE decides, we hint when
-told it's small); AMiner's report-once-at-first-atom sequential semantics
+(broadcast when the baseline is small — Catalyst/AQE decides from its
+size); AMiner's report-once-at-first-atom sequential semantics
 become ``row_number() == 1`` over (ts, tiebreak) per value. Learning is
 ``union + dropDuplicates`` merged back into the baseline — at 10^12-doc
 scale this is a shuffle on the value key, which AQE skew-join salting
@@ -56,7 +56,6 @@ def check_new_values(
     value_cols: Sequence[str],
     baseline: DataFrame | None,
     order_cols: Sequence[str] = ("ts",),
-    broadcast_baseline: bool = False,
 ) -> DataFrame:
     """Violations: first occurrence (within the batch) of every value-combo
     not present in the pre-batch baseline.
@@ -68,8 +67,6 @@ def check_new_values(
     if baseline is None:
         return firsts
     b = baseline.select(*value_cols).dropDuplicates()
-    if broadcast_baseline:
-        b = F.broadcast(b)
     return firsts.join(b, on=list(value_cols), how="left_anti")
 
 

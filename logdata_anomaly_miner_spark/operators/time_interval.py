@@ -3,9 +3,9 @@
 Re-expresses PathValueTimeIntervalDetector (aminer/analysis/
 PathValueTimeIntervalDetector.py:26-412): learns the allowed times of day
 (modulo ``time_period_length``, default one day) at which each value occurs;
-an occurrence outside every learned interval (± warning buffer) is an
-anomaly. The batch form buckets the time-of-day and anti-joins unseen
-(value, bucket) combos — interval smearing is the ± bucket neighborhood.
+an occurrence outside every learned interval is an anomaly. The batch form
+buckets the time of day by hour and anti-joins unseen (value, hour) combos;
+the reference's ± allowed_time_diff smoothing is not reproduced.
 """
 
 from __future__ import annotations
@@ -16,30 +16,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucketed(
-    df: DataFrame,
-    value_cols: Sequence[str],
-    ts_col: str,
-    period: float,
-    bucket_size: float,
-) -> DataFrame:
-    b = F.floor(F.pmod(F.col(ts_col).cast("double"), F.lit(period)) / F.lit(bucket_size))
+def _bucketed(df: DataFrame, ts_col: str) -> DataFrame:
+    """Adds ``tod_bucket``: the hour of the day of ``ts_col``."""
+    b = F.floor(F.pmod(F.col(ts_col).cast("double"), F.lit(86400.0)) / F.lit(3600.0))
     return df.withColumn("tod_bucket", b.cast("long"))
 
 
 def learn_time_intervals(
-    df: DataFrame,
-    value_cols: Sequence[str],
-    ts_col: str = "ts",
-    period: float = 86400.0,
-    bucket_size: float = 3600.0,
+    df: DataFrame, value_cols: Sequence[str], ts_col: str = "ts"
 ) -> DataFrame:
     """Baseline = distinct (value..., tod_bucket)."""
-    return (
-        _bucketed(df, value_cols, ts_col, period, bucket_size)
-        .select(*value_cols, "tod_bucket")
-        .dropDuplicates()
-    )
+    return _bucketed(df, ts_col).select(*value_cols, "tod_bucket").dropDuplicates()
 
 
 def check_time_intervals(
@@ -47,32 +34,8 @@ def check_time_intervals(
     baseline: DataFrame,
     value_cols: Sequence[str],
     ts_col: str = "ts",
-    period: float = 86400.0,
-    bucket_size: float = 3600.0,
-    allow_neighbors: bool = False,
 ) -> DataFrame:
-    """Distinct (value, bucket) combos never seen in the baseline.
-    ``allow_neighbors`` also accepts ±1 bucket (the reference's
-    allowed_time_diff smoothing)."""
-    # bucket indices run 0..floor((period-ε)/bucket_size) = ceil(p/b)-1,
-    # so the wrap modulus is ceil — int(p//b) is one short when bucket_size
-    # does not divide period, mis-wrapping the midnight neighbors
-    n_buckets = -int(-period // bucket_size)
+    """Distinct (value, bucket) combos never seen in the baseline."""
     base = baseline.select(*value_cols, "tod_bucket")
-    if allow_neighbors:
-        base = base.select(
-            *value_cols,
-            F.explode(
-                F.array(
-                    F.pmod(F.col("tod_bucket") - 1, F.lit(n_buckets)),
-                    F.col("tod_bucket"),
-                    F.pmod(F.col("tod_bucket") + 1, F.lit(n_buckets)),
-                )
-            ).alias("tod_bucket"),
-        ).dropDuplicates()
-    cur = (
-        _bucketed(df, value_cols, ts_col, period, bucket_size)
-        .select(*value_cols, "tod_bucket")
-        .dropDuplicates()
-    )
+    cur = _bucketed(df, ts_col).select(*value_cols, "tod_bucket").dropDuplicates()
     return cur.join(base, on=[*value_cols, "tod_bucket"], how="left_anti")

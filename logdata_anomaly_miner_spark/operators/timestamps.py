@@ -9,14 +9,12 @@ Re-expresses:
   running maximum.
 
 Ingest order in batch = an explicit order column (event id / file offset).
-The running max is a prefix window — inherently sequential per stream, so
-partition by the stream/source column when there are many streams. When no
-stream column exists (ONE global sequence), a naive window would put every
-row in a single WindowExec partition; instead both operators run a
-**two-phase distributed prefix scan**: range-partition on the order column,
-compute the per-range local prefix (running max / lag), reduce each range
-to one summary row, derive each range's carry-in from the (tiny,
-broadcast) summary table, and combine locally. The summary self-join is
+The running max is a prefix window over ONE global sequence. A naive window
+would put every row in a single WindowExec partition; instead both
+operators run a **two-phase distributed prefix scan**: range-partition on
+the order column, compute the per-range local prefix (running max / lag),
+reduce each range to one summary row, derive each range's carry-in from
+the (tiny, broadcast) summary table, and combine locally. The summary self-join is
 |ranges|² rows — negligible — and no stage ever sees the whole sequence.
 """
 
@@ -153,18 +151,10 @@ def unsorted_timestamps(
     df: DataFrame,
     ts_col: str = "ts",
     order_cols: Sequence[str] = ("event_id",),
-    stream_cols: Sequence[str] = (),
     num_buckets: int | None = None,
 ) -> DataFrame:
     """Rows whose timestamp is smaller than the previous row's (ingest order)."""
-    if stream_cols:
-        w = Window.partitionBy(*stream_cols).orderBy(*[F.col(c) for c in order_cols])
-        prev = F.lag(F.col(ts_col)).over(w)
-        return (
-            df.withColumn("prev_ts", prev)
-            .filter(F.col("prev_ts").isNotNull() & (F.col(ts_col) < F.col("prev_ts")))
-        )
-    # Global sequence: per-range lag; each range's first row compares against
+    # Per-range lag; each range's first row compares against
     # the last timestamp (in order) of the nearest preceding non-empty range.
     d = _with_range_bucket(df, order_cols, num_buckets)
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
@@ -182,22 +172,13 @@ def monotonic_adjust(
     df: DataFrame,
     ts_col: str = "ts",
     order_cols: Sequence[str] = ("event_id",),
-    stream_cols: Sequence[str] = (),
     out_col: str = "ts_adj",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Adds ``out_col`` = running max of the timestamp in ingest order
     (decreasing timestamps clamped up, reference :18-52)."""
-    if stream_cols:
-        w = (
-            Window.partitionBy(*stream_cols)
-            .orderBy(*[F.col(c) for c in order_cols])
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return df.withColumn(out_col, F.max(F.col(ts_col)).over(w))
-    # Global sequence: local running max per range + max over all earlier
-    # ranges (carry-in), combined with greatest() (null carry for range 0).
-    d = _with_range_bucket(df, order_cols, num_buckets)
+    # Local running max per range + max over all earlier ranges (carry-in),
+    # combined with greatest() (null carry for range 0).
+    d = _with_range_bucket(df, order_cols, None)
     w = (
         Window.partitionBy("_pid")
         .orderBy(*[F.col(c) for c in order_cols])

@@ -37,8 +37,6 @@ def ar1_forecast_bands(
     key_cols: Sequence[str],
     z: float = 1.96,
     min_train: int = 10,
-    cnt_col: str = "cnt",
-    w_col: str = "w",
     diff: int = 0,
 ) -> DataFrame:
     """AR(1) forecast bands per key over a (key, w, cnt) window-count table.
@@ -55,8 +53,8 @@ def ar1_forecast_bands(
     level forecast is reconstituted as pred_t = cnt_{t−1} + Δ̂_t — a
     trending series whose increments are stable no longer alarms on every
     window the way a level-AR fit would."""
-    w_ord = Window.partitionBy(*key_cols).orderBy(w_col)
-    lvl = F.col(cnt_col).cast("double")
+    w_ord = Window.partitionBy(*key_cols).orderBy("w")
+    lvl = F.col("cnt").cast("double")
     if diff == 0:
         d = counts.withColumn("_y", lvl).withColumn(
             "_base", F.lit(0.0)
@@ -109,8 +107,8 @@ def ar1_forecast_bands(
     )
     return out.select(
         *key_cols,
-        w_col,
-        cnt_col,
+        "w",
+        "cnt",
         "pred",
         "sigma",
         F.col("n_train"),
@@ -123,15 +121,13 @@ def hr_arma_forecast_bands(
     key_cols: Sequence[str],
     mode: str = "ma",
     seasonal_lag: int = 144,
-    z: float = 1.96,
     min_train: int = 10,
-    cnt_col: str = "cnt",
-    w_col: str = "w",
 ) -> DataFrame:
     """MA(1) / seasonal terms via the Hannan–Rissanen two-stage closed form
     (reference TSAArimaDetector fits full statsmodels ARIMA with a season
     parameter, TSAArimaDetector.py:32-560, season handling ~:200-300; this
-    is the statsmodels-free batch analog).
+    is the statsmodels-free batch analog), flagging residuals above
+    1.96·sigma.
 
     - ``mode='ma'`` — ARMA(1,1): stage 1 fits AR(1) (regr_slope) and takes
       its residuals ε̂; stage 2 regresses y_t on [y_{t-1}, ε̂_{t-1}] — the
@@ -148,8 +144,8 @@ def hr_arma_forecast_bands(
     nullif guard (ANSI-safe)."""
     if mode not in ("ma", "seasonal"):
         raise ValueError("mode must be 'ma' or 'seasonal'")
-    w_ord = Window.partitionBy(*key_cols).orderBy(w_col)
-    d = counts.withColumn("_y", F.col(cnt_col).cast("double")).withColumn(
+    w_ord = Window.partitionBy(*key_cols).orderBy("w")
+    d = counts.withColumn("_y", F.col("cnt").cast("double")).withColumn(
         "_x1", F.lag("_y").over(w_ord)
     )
     if mode == "ma":
@@ -225,19 +221,18 @@ def hr_arma_forecast_bands(
         "anomaly",
         F.col("pred").isNotNull()
         & (F.col("n_train") >= min_train)
-        & (F.abs(F.col("_y") - F.col("pred")) > F.lit(float(z)) * F.col("sigma")),
+        & (F.abs(F.col("_y") - F.col("pred")) > F.lit(1.96) * F.col("sigma")),
     )
-    return out.select(*key_cols, w_col, cnt_col, "pred", "sigma", "n_train", "anomaly")
+    return out.select(*key_cols, "w", "cnt", "pred", "sigma", "n_train", "anomaly")
 
 
-def _nelder_mead(f, x0, maxiter=None, xatol=1e-7, fatol=1e-12):
+def _nelder_mead(f, x0):
     """Plain Nelder–Mead simplex minimizer (pure numpy; the standard
     reflection/expansion/contraction/shrink scheme with scipy's simplex
     initialization constants). Small fixed-dimension problems only — the
     CSS refinement below optimizes p+q+1(+1) parameters per key."""
     x0 = np.asarray(x0, dtype=np.float64)
     n = x0.size
-    maxiter = maxiter or 200 * n
     sim = np.vstack([x0] * (n + 1))
     for i in range(n):
         if sim[i + 1, i] != 0.0:
@@ -245,12 +240,12 @@ def _nelder_mead(f, x0, maxiter=None, xatol=1e-7, fatol=1e-12):
         else:
             sim[i + 1, i] = 0.00025
     fx = np.array([f(s) for s in sim])
-    for _ in range(maxiter):
+    for _ in range(200 * n):
         order = np.argsort(fx)
         sim, fx = sim[order], fx[order]
-        if np.max(np.abs(sim[1:] - sim[0])) <= xatol and np.max(
+        if np.max(np.abs(sim[1:] - sim[0])) <= 1e-7 and np.max(
             np.abs(fx[1:] - fx[0])
-        ) <= fatol:
+        ) <= 1e-12:
             break
         centroid = sim[:-1].mean(axis=0)
         xr = centroid + (centroid - sim[-1])
@@ -369,23 +364,19 @@ def arma_forecast_bands(
     key_cols: Sequence[str],
     p: int = 1,
     q: int = 1,
-    d: int = 0,
     seasonal_lag: int | None = None,
     z: float = 1.96,
     min_train: int = 20,
-    cnt_col: str = "cnt",
-    w_col: str = "w",
     method: str = "hr",
 ) -> DataFrame:
-    """General ARMA(p,q) (+optional d=1 differencing and one seasonal AR
-    lag) per key via applyInPandas — the full-surface analog of the
+    """General ARMA(p,q) (+optional seasonal AR lag) per key via
+    applyInPandas — the full-surface analog of the
     reference's statsmodels fit (TSAArimaDetector.py:32-560) for keys that
     need more memory than the declarative hr/ar1 forms.
 
     Hannan–Rissanen: stage 1 fits a long AR(max(p+q, 2)) by OLS and takes
     its residuals ê; stage 2 regresses y_t on [1, y_{t-1..p}, ê_{t-1..q},
-    y_{t-S}] by OLS. With d=1 both stages run on the first difference and
-    the level forecast is reconstituted as y_{t-1} + Δ̂_t. One ordered
+    y_{t-S}] by OLS; an anomaly is a residual above z·sigma. One ordered
     Arrow batch per key; keys distribute across executors; series length
     is bounded by the window-count domain.
 
@@ -411,18 +402,18 @@ def arma_forecast_bands(
     in_types = {f.name: f.dataType.simpleString() for f in counts.schema.fields}
     schema = (
         ", ".join(f"{c} {in_types[c]}" for c in key_cols)
-        + f", {w_col} {in_types[w_col]}, {cnt_col} double, "
+        + f", w {in_types['w']}, cnt double, "
         + "pred double, sigma double, anomaly boolean"
     )
     m = max(p + q, 2)
     slag = int(seasonal_lag) if seasonal_lag else 0
 
     def fit(key, pdf):
-        pdf = pdf.sort_values(w_col).reset_index(drop=True)
-        lvl = pdf[cnt_col].to_numpy(dtype=np.float64)
+        pdf = pdf.sort_values("w").reset_index(drop=True)
+        lvl = pdf["cnt"].to_numpy(dtype=np.float64)
         n = len(lvl)
-        yv = np.diff(lvl) if d == 1 else lvl
-        ny = len(yv)
+        yv = lvl
+        ny = n
         # stage 1: long AR residuals
         e = np.full(ny, np.nan)
         preds_y = np.full(ny, np.nan)
@@ -466,12 +457,7 @@ def arma_forecast_bands(
                     preds_y[rows] = yv[rows] - e_opt[rows]
             else:
                 preds_y[rows] = x2 @ th2
-        # reconstitute to level space
-        preds = np.full(n, np.nan)
-        if d == 1:
-            preds[1:] = lvl[:-1] + preds_y
-        else:
-            preds = preds_y
+        preds = preds_y
         resid = lvl[~np.isnan(preds)] - preds[~np.isnan(preds)]
         sigma = float(np.sqrt(np.mean(resid**2))) if resid.size else float("nan")
         anom = (
@@ -480,12 +466,12 @@ def arma_forecast_bands(
             else np.zeros(n, dtype=bool)
         )
         out = pd.DataFrame(
-            {w_col: pdf[w_col], cnt_col: lvl, "pred": preds, "sigma": sigma,
+            {"w": pdf["w"], "cnt": lvl, "pred": preds, "sigma": sigma,
              "anomaly": anom}
         )
         for c, v in zip(key_cols, key):
             out[c] = v
-        return out[[*key_cols, w_col, cnt_col, "pred", "sigma", "anomaly"]]
+        return out[[*key_cols, "w", "cnt", "pred", "sigma", "anomaly"]]
 
     return counts.groupBy(*key_cols).applyInPandas(fit, schema)
 

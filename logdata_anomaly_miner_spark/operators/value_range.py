@@ -38,30 +38,18 @@ def learn_ranges(
     )
 
 
-def merge_ranges(old: DataFrame | None, new: DataFrame, id_cols: Sequence[str]) -> DataFrame:
-    if old is None:
-        return new
-    return (
-        old.unionByName(new)
-        .groupBy(*id_cols)
-        .agg(F.min("min").alias("min"), F.max("max").alias("max"))
-    )
-
-
 def check_value_range(
     df: DataFrame,
     id_cols: Sequence[str],
     value_col: str,
     baseline: DataFrame,
-    broadcast_baseline: bool = True,
 ) -> DataFrame:
-    """Batch check against a fixed baseline (reference check :131-149).
-    Rows whose group has no learned range are NOT violations (AMiner treats
-    first sight as learning material), hence inner join."""
-    b = F.broadcast(baseline) if broadcast_baseline else baseline
+    """Batch check against a fixed (broadcast) baseline (reference check
+    :131-149). Rows whose group has no learned range are NOT violations
+    (AMiner treats first sight as learning material), hence inner join."""
     v = F.col(value_col).cast("double")
     return (
-        df.join(b, on=list(id_cols), how="inner")
+        df.join(F.broadcast(baseline), on=list(id_cols), how="inner")
         .filter((v < F.col("min")) | (v > F.col("max")))
         .withColumn(
             "detail",
@@ -81,13 +69,13 @@ def check_value_range_sequential(
     id_cols: Sequence[str],
     value_col: str,
     order_cols: Sequence[str] = ("ts",),
-    baseline: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """learn_mode=True parity: per id, running-prefix min/max check.
+    """learn_mode=True parity, learning from scratch: per id, running-prefix
+    min/max check.
 
-    Returns (violations, learned_baseline). ``baseline`` (previous run's
-    ranges) seeds the running min/max. Window sorts are per-group; groups are
-    bounded (id cardinality), so this scales by partitioning on id.
+    Returns (violations, learned_baseline). Window sorts are per-group;
+    groups are bounded (id cardinality), so this scales by partitioning on
+    id.
     """
     v = F.col(value_col).cast("double")
     w = (
@@ -95,20 +83,7 @@ def check_value_range_sequential(
         .orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    work = df
-    if baseline is not None:
-        work = df.join(
-            F.broadcast(baseline.withColumnRenamed("min", "_bmin").withColumnRenamed("max", "_bmax")),
-            on=list(id_cols),
-            how="left",
-        )
-    else:
-        work = df.withColumn("_bmin", F.lit(None).cast("double")).withColumn(
-            "_bmax", F.lit(None).cast("double")
-        )
-    prev_min = F.least(F.min(v).over(w), F.coalesce(F.col("_bmin"), F.min(v).over(w)))
-    prev_max = F.greatest(F.max(v).over(w), F.coalesce(F.col("_bmax"), F.max(v).over(w)))
-    scored = work.withColumn("_pmin", prev_min).withColumn("_pmax", prev_max)
+    scored = df.withColumn("_pmin", F.min(v).over(w)).withColumn("_pmax", F.max(v).over(w))
     violations = (
         scored.filter(
             F.col("_pmin").isNotNull()
@@ -124,10 +99,9 @@ def check_value_range_sequential(
                 )
             ),
         )
-        .drop("_pmin", "_pmax", "_bmin", "_bmax")
+        .drop("_pmin", "_pmax")
     )
-    learned = merge_ranges(baseline, learn_ranges(df, id_cols, value_col), id_cols)
-    return violations, learned
+    return violations, learn_ranges(df, id_cols, value_col)
 
 
 def check_value_range_lifecycle(
@@ -136,34 +110,18 @@ def check_value_range_lifecycle(
     value_col: str,
     order_cols: Sequence[str] = ("ts",),
     ts_col: str = "ts",
-    baseline: DataFrame | None = None,
     stop_learning_time: float | Column | None = None,
-    stop_learning_no_anomaly_time: float | None = None,
-    ignore_cols: Sequence[str] = (),
-    constraint_cols: Sequence[str] = (),
-    broadcast_baseline: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full VRD lifecycle (reference ValueRangeDetector.py:74-164):
-    screen ignore/constraint paths, run the sequential prefix check while
-    learn_mode holds, then check the remaining atoms against the FROZEN
-    learned ranges once stop_learning_time / stop_learning_no_anomaly_time
-    flips learn_mode off. Returns (violations + phase column, learned
-    baseline — which post-cutoff atoms never extend)."""
-    from logdata_anomaly_miner_spark.operators.lifecycle import (
-        screen_paths,
-        split_learn_check,
-    )
+    """Full VRD lifecycle (reference ValueRangeDetector.py:74-164), learning
+    from scratch: run the sequential prefix check while learn_mode holds,
+    then check the remaining atoms against the FROZEN learned ranges once
+    stop_learning_time flips learn_mode off. Returns (violations + phase
+    column, learned baseline — which post-cutoff atoms never extend)."""
+    from logdata_anomaly_miner_spark.operators.lifecycle import split_learn_check
 
-    work = screen_paths(df, ignore_cols, constraint_cols)
-    learn_df, check_df = split_learn_check(
-        work, ts_col, stop_learning_time, stop_learning_no_anomaly_time
-    )
-    v_learn, learned = check_value_range_sequential(
-        learn_df, id_cols, value_col, order_cols, baseline
-    )
-    v_check = check_value_range(
-        check_df, id_cols, value_col, learned, broadcast_baseline
-    )
+    learn_df, check_df = split_learn_check(df, ts_col, stop_learning_time)
+    v_learn, learned = check_value_range_sequential(learn_df, id_cols, value_col, order_cols)
+    v_check = check_value_range(check_df, id_cols, value_col, learned)
     cols = [*df.columns, "detail"]
     violations = (
         v_learn.withColumn("phase", F.lit("learn"))

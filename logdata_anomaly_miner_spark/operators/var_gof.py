@@ -76,6 +76,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# one-sided standard normal quantile at alpha = 0.05: a Wilson–Hilferty z
+# above it rejects the chi² test
+Z_ALPHA = 1.6448536269514722
+
 
 def _clip01(x: Column) -> Column:
     return F.least(F.greatest(x, F.lit(0.0)), F.lit(1.0))
@@ -320,7 +324,6 @@ def fit_continuous(
     value_col: str,
     order_cols: Sequence[str],
     num_init: int = 100,
-    gof_alpha: float = 0.05,
     test: str = "KS",
     with_betam: bool = False,
     use_empiric: bool = False,
@@ -458,7 +461,7 @@ def fit_continuous(
     packed = F.array(*entries)
     best = F.array_min(F.filter(packed, lambda s: s["scale"].isNotNull()))
     if test == "KS":
-        crit_scale = F.lit(math.sqrt(-math.log(gof_alpha / 2.0) / 2.0))
+        crit_scale = F.lit(math.sqrt(-math.log(0.05 / 2.0) / 2.0))
         accepted_expr = F.col("_scale") < crit_scale
     else:
         # asymptotic one-sample CvM crit at alpha=0.05 (raw-statistic scale;
@@ -527,24 +530,22 @@ def s_gof_ladder(
     s_gof_alpha: float = 0.05,
     num_s_gof_bt: int = 30,
     s_gof_bt_alpha: float = 0.05,
-    test: str = "KS",
-    spec_quantiles: Sequence[float] | None = None,
     use_empiric: bool = False,
 ) -> DataFrame:
     """Sliding gof + binomial ladder (reference s_gof_test :1605-1700):
     values after the init sample are cut into consecutive chunks of
     ``num_s_gof_values``; each full chunk is gof-tested against the FITTED
-    distribution (fail = statistic above the α critical value); an alarm
+    distribution with a KS test (fail = statistic above the α critical
+    value); an alarm
     fires on chunks where the fail count within the trailing
     ``num_s_gof_bt`` chunks reaches the binomial critical value.
 
-    Groups fitted as 'emp' / 'betam' / 'spec' / 'spec_rev' are tested with
-    the reference's TWO-SAMPLE branch (s_gof_test's final else + the
-    s_gof_get_quantiles tables, :1558-1603,1621-1624): 'emp' against the
+    Groups fitted as 'emp' / 'betam' are tested with the reference's
+    TWO-SAMPLE branch (s_gof_test's final else + the s_gof_get_quantiles
+    tables, :1558-1603,1621-1624): 'emp' against the
     2·num_s_gof_values-point equidistant quantile subsample of the init
     values, 'betam' against the closed-form 1000-point mixture ECDF scaled
-    back to value space, 'spec' against the caller-supplied table subsampled
-    to 2·num_s_gof_values points and compared in z-space. Their critical
+    back to value space. Their critical
     value is the reference's two-sample formula with num_distr_val fixed at
     2·num_s_gof_values (:1610 — the reference uses that constant even for
     the 1000-point betam table; mirrored, cited) and failure is strict
@@ -561,17 +562,9 @@ def s_gof_ladder(
     Groups whose fit is 'static' (constant init sample) are EXCLUDED: a
     static variable has no continuous CDF to slide against — the
     reference routes such variables to the discrete/static d_test path
-    (fit_discrete / d_test_ladder), not s_gof. Under test='CM' the
-    two-sample dists (emp/betam/spec) are excluded too, explicitly: the
-    reference's CM ladder tests them with a two-sample Cramér–von Mises
-    against tabulated homogeneity critical values (crit_val_hom_cm —
-    author-simulated data with no closed form); silently emitting
-    null statistics would suppress their alarms instead.
+    (fit_discrete / d_test_ladder), not s_gof.
     """
-    TWO_SAMPLE_DISTS = ("emp", "betam", "spec", "spec_rev")
     fitted = fitted.filter(F.col("dist") != "static")
-    if test == "CM":
-        fitted = fitted.filter(~F.col("dist").isin(*TWO_SAMPLE_DISTS))
     v = F.col(value_col).cast("double")
     w_ord = Window.partitionBy(*group_cols).orderBy(*[F.col(c) for c in order_cols])
     numbered = (
@@ -597,7 +590,7 @@ def s_gof_ladder(
     # than num_init — which the reference never fits — subsamples its full
     # sample instead of indexing out of bounds under ANSI mode)
     sz = F.size(F.col("_init_sorted"))
-    if test == "KS" and use_empiric:
+    if use_empiric:
         emp_arrs = (
             numbered.filter(F.col("_ern") <= num_init)
             .join(
@@ -643,10 +636,10 @@ def s_gof_ladder(
     sel = F.lit(None).cast("double")
     for name, expr in cdf_by_name:
         sel = F.when(F.col("dist") == name, expr).otherwise(sel)
-    term = _gof_terms(test, sel, F.col("_rn"), F.col("_cn"))
+    term = _gof_terms("KS", sel, F.col("_rn"), F.col("_cn"))
     rn, cn = F.col("_rn"), F.col("_cn")
     two_names = []
-    if test == "KS" and use_empiric:
+    if use_empiric:
         # emp: exact two-sample KS vs the stored m0-point subsample
         le = F.size(F.filter("_emp_arr", lambda e: e <= F.col("_v"))) / F.lit(
             float(m0)
@@ -659,59 +652,33 @@ def s_gof_ladder(
             F.greatest(F.abs(le - rn / cn), F.abs(lt - (rn - 1) / cn)),
         ).otherwise(term)
         two_names.append("emp")
-    if test == "KS":
-        # betam: closed-form mixture ECDF in scaled space; chunk values may
-        # leave [vmin, vmax], where the mixture ECDF saturates at 0 / 1
-        rng = F.nullif(F.col("vmax") - F.col("vmin"), F.lit(0.0))
-        xr = (F.col("_v") - F.col("vmin")) / rng
-        slots = _betam_slots(F.col("mu"), F.col("vmin"), F.col("vmax"))
-        f1le = (
-            F.when(xr < 0, F.lit(0.0))
-            .when(xr > 1, F.lit(1.0))
-            .otherwise(_betam_cdf_le(xr, slots))
-        )
-        hit = F.when((xr == F.lit(0.0)) | (xr == F.lit(1.0)), F.lit(1.0)).otherwise(
-            F.lit(0.0)
-        )
-        f1lt = (
-            F.when(xr <= 0, F.lit(0.0))
-            .when(xr > 1, F.lit(1.0))
-            .otherwise(f1le - hit / F.lit(1000.0))
-        )
-        term = F.when(
-            F.col("dist") == "betam",
-            F.greatest(F.abs(f1le - rn / cn), F.abs(f1lt - (rn - 1) / cn)),
-        ).otherwise(term)
-        two_names.append("betam")
-        if spec_quantiles is not None:
-            # reference :1578-1588: the table is subsampled to m0 points at
-            # indices int(i·999/(m0-1)); comparison in z-space (the
-            # reference scales the table by sigma/ev instead — equivalent)
-            sub = [
-                float(spec_quantiles[int(i * (len(spec_quantiles) - 1) / (m0 - 1))])
-                for i in range(m0)
-            ]
-            z = (F.col("_v") - F.col("mu")) / F.nullif(F.col("sigma"), F.lit(0.0))
-            term = F.when(
-                F.col("dist") == "spec", _table_ks_terms(sub, z, rn, cn)
-            ).otherwise(term)
-            # reversed orientation (reference :1088: ks_2samp(spec, -z)),
-            # mirrored to KS(-spec, z) so the ascending-by-value rank rn
-            # still applies
-            neg_sub = sorted(-q for q in sub)
-            term = F.when(
-                F.col("dist") == "spec_rev",
-                _table_ks_terms(neg_sub, z, rn, cn),
-            ).otherwise(term)
-            two_names += ["spec", "spec_rev"]
-    if test == "KS":
-        agg = F.max(term).alias("stat")
-        crit = F.lit(math.sqrt(-math.log(s_gof_alpha / 2.0) / 2.0)) / F.sqrt(
-            F.lit(float(num_s_gof_values))
-        )
-    else:
-        agg = (F.sum(term) + F.lit(1.0 / (12.0 * num_s_gof_values))).alias("stat")
-        crit = F.lit(0.4614)
+    # betam: closed-form mixture ECDF in scaled space; chunk values may
+    # leave [vmin, vmax], where the mixture ECDF saturates at 0 / 1
+    rng = F.nullif(F.col("vmax") - F.col("vmin"), F.lit(0.0))
+    xr = (F.col("_v") - F.col("vmin")) / rng
+    slots = _betam_slots(F.col("mu"), F.col("vmin"), F.col("vmax"))
+    f1le = (
+        F.when(xr < 0, F.lit(0.0))
+        .when(xr > 1, F.lit(1.0))
+        .otherwise(_betam_cdf_le(xr, slots))
+    )
+    hit = F.when((xr == F.lit(0.0)) | (xr == F.lit(1.0)), F.lit(1.0)).otherwise(
+        F.lit(0.0)
+    )
+    f1lt = (
+        F.when(xr <= 0, F.lit(0.0))
+        .when(xr > 1, F.lit(1.0))
+        .otherwise(f1le - hit / F.lit(1000.0))
+    )
+    term = F.when(
+        F.col("dist") == "betam",
+        F.greatest(F.abs(f1le - rn / cn), F.abs(f1lt - (rn - 1) / cn)),
+    ).otherwise(term)
+    two_names.append("betam")
+    agg = F.max(term).alias("stat")
+    crit = F.lit(math.sqrt(-math.log(s_gof_alpha / 2.0) / 2.0)) / F.sqrt(
+        F.lit(float(num_s_gof_values))
+    )
     # reference :1610-1618: two-sample critical value with num_distr_val
     # pinned at 2·num_s_gof_values, strict > for failure
     crit2 = F.lit(
@@ -722,7 +689,7 @@ def s_gof_ladder(
         )
     )
     failed = F.when(
-        F.col("dist").isin(two_names) if two_names else F.lit(False),
+        F.col("dist").isin(two_names),
         F.col("stat") > crit2,
     ).otherwise(F.col("stat") >= crit)
     per_chunk = (
@@ -767,7 +734,6 @@ def fit_discrete(
     value_col: str,
     order_cols: Sequence[str],
     num_init: int = 100,
-    sim_thres: float = 0.1,
 ) -> DataFrame:
     """Discrete/static variable baseline (reference detect_var_type
     :887-965, discrete branch :958-965): per group, classify the first
@@ -777,7 +743,7 @@ def fit_discrete(
     - 'stat'   — exactly one distinct value (:896-897)
     - 'unq'    — every value distinct (:951-953; the reference also
       requires non-float values, folded into the caller's column choice)
-    - 'others' — num_diff >= num_init·(1−sim_thres) (:954-956)
+    - 'others' — num_diff >= num_init·0.9 (:954-956)
     - 'd'      — otherwise: discrete, with p(v) = count(v)/n (:958-965)
 
     Returns one row per (group, value): group_cols + (var_kind, value, p,
@@ -801,7 +767,7 @@ def fit_discrete(
         .when(F.col("num_diff") == F.col("n_init"), F.lit("unq"))
         .when(
             F.col("num_diff")
-            >= F.col("n_init").cast("double") * F.lit(1.0 - sim_thres),
+            >= F.col("n_init").cast("double") * F.lit(0.9),
             F.lit("others"),
         )
         .otherwise(F.lit("d"))
@@ -822,8 +788,6 @@ def d_ladder(
     baseline: DataFrame,
     num_init: int = 100,
     num_update: int = 50,
-    d_alpha: float = 0.05,
-    alpha_z: float = 1.6448536269514722,
     num_d_bt: int = 30,
     d_bt_alpha: float = 0.05,
 ) -> DataFrame:
@@ -834,11 +798,11 @@ def d_ladder(
     baseline value probabilities (every baseline value contributes an
     expected count E = p·num_update, observed-but-unseen values flag the
     chunk as 'new value' instead — the reference's new-values branch); a
-    chunk fails when it has new values or its chi² exceeds the d_alpha
+    chunk fails when it has new values or its chi² exceeds the α = 0.05
     critical value (Wilson–Hilferty z > z_α, scipy-free and oracle-
     evaluable); the trailing ``num_d_bt`` chunk results alarm when the
-    success count drops below bt_min_successes(num_d_bt, 1−d_alpha,
-    d_bt_alpha) (reference :158).
+    success count drops below bt_min_successes(num_d_bt, 0.95, d_bt_alpha)
+    (reference :158).
 
     Documented deviation: the reference mutates the baseline inside the
     stream (learn mode expands the value set / re-weights probabilities);
@@ -902,13 +866,13 @@ def d_ladder(
         .withColumn("n_new", F.coalesce(F.col("n_new"), F.lit(0)))
         .withColumn("z", z)
         .withColumn(
-            "failed", (F.col("n_new") > 0) | (F.col("z") > F.lit(float(alpha_z)))
+            "failed", (F.col("n_new") > 0) | (F.col("z") > F.lit(Z_ALPHA))
         )
     )
     bt = Window.partitionBy(*group_cols).orderBy("chunk").rowsBetween(
         -(num_d_bt - 1), 0
     )
-    min_success = bt_min_successes(num_d_bt, 1.0 - d_alpha, d_bt_alpha)
+    min_success = bt_min_successes(num_d_bt, 0.95, d_bt_alpha)
     return (
         per_chunk.withColumn("n_fails", F.sum(F.col("failed").cast("int")).over(bt))
         .withColumn("n_tests", F.count(F.lit(1)).over(bt))

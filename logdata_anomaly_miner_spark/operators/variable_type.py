@@ -22,11 +22,9 @@ def infer_variable_types(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    static_max_distinct: int = 1,
-    discrete_max_distinct: int = 20,
 ) -> DataFrame:
     """(group, var_type, n, n_distinct, null_rate, numeric_rate):
-    static (one value), discrete (small domain), continuous (numeric, large
+    static (one value), discrete (at most 20 values), continuous (numeric, large
     domain), else 'other' — the reference's top-level classification."""
     v = F.col(value_col)
     num = v.try_cast("double")  # ANSI-safe numeric probe (null when not numeric)
@@ -37,8 +35,8 @@ def infer_variable_types(
         F.avg(num.isNotNull().cast("double")).alias("numeric_rate"),
     )
     t = (
-        F.when(F.col("n_distinct") <= static_max_distinct, "static")
-        .when(F.col("n_distinct") <= discrete_max_distinct, "discrete")
+        F.when(F.col("n_distinct") <= 1, "static")
+        .when(F.col("n_distinct") <= 20, "discrete")
         .when(F.col("numeric_rate") > 0.99, "continuous")
         .otherwise("other")
     )

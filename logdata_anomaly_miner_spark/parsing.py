@@ -108,9 +108,8 @@ def decimal_integer(name: str, allow_sign: bool = True) -> Element:
     return Element(_grp(name, sign + r"\d+"), name, caster="long")
 
 
-def decimal_float(name: str, allow_exponent: bool = True) -> Element:
-    exp = r"(?:[eE][+-]?\d+)?" if allow_exponent else ""
-    return Element(_grp(name, r"[+-]?\d+(?:\.\d+)?" + exp), name, caster="double")
+def decimal_float(name: str) -> Element:
+    return Element(_grp(name, r"[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?"), name, caster="double")
 
 
 def decimal_float_modes(

@@ -65,9 +65,7 @@ def ranges_to_reference_json(ranges: DataFrame, id_cols: list[str]) -> str:
     return json.dumps({"string:min": mins, "string:max": maxs})
 
 
-def ranges_from_reference_json(
-    spark: SparkSession, payload: str, id_col: str = "id"
-) -> DataFrame:
+def ranges_from_reference_json(spark: SparkSession, payload: str) -> DataFrame:
     """Reference persistence JSON -> ranges DataFrame (id, min, max).
     Only single-element id tuples map to one column; wider tuples get
     id = '\\x1f'-joined parts (the engine's composite-key convention)."""
@@ -78,7 +76,7 @@ def ranges_from_reference_json(
     for k, mn in mins.items():
         key = "\x1f".join(k) if isinstance(k, tuple) else str(k)
         rows.append((key, float(mn), float(maxs[k])))
-    return spark.createDataFrame(rows, f"{id_col} string, min double, max double")
+    return spark.createDataFrame(rows, "id string, min double, max double")
 
 
 def known_values_to_reference_json(values: DataFrame, value_col: str = "value") -> str:

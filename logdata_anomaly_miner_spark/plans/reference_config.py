@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark import parsing as P
 from logdata_anomaly_miner_spark.operators import rules as R
+from logdata_anomaly_miner_spark.plans.parser_modules import MODULE_REGISTRY
 
 
 class ReferenceConfigError(ValueError):
@@ -948,20 +949,18 @@ class ReferenceConfig:
 def load_reference_config(
     src: str | dict,
     *,
-    parser_id: str | None = None,
-    order_col: str = "line_no",
     strict: bool = False,
-    module_registry: dict | None = None,
 ) -> ReferenceConfig:
     """``src``: path to a reference config.yml, a YAML string, or the
-    already-parsed mapping. ``order_col``: ingest-order column of the raw
-    DataFrame (the atom sequence number).
+    already-parsed mapping. The raw DataFrame's ingest-order column (the
+    atom sequence number) is ``line_no``; the root parser is the first log
+    resource's ``parser_id``, else the last Parser entry.
 
-    ``module_registry`` maps EXTERNAL parsing-model type names (reference
-    YamlConfig.py:147-180 imports them as Python modules from
-    /etc/aminer/conf-available) to builders ``(name, mk) -> Element``;
-    None uses the built-in plans/parser_modules.MODULE_REGISTRY. Entries
-    resolved this way are recorded in ``approximations``."""
+    EXTERNAL parsing-model type names (reference YamlConfig.py:147-180
+    imports them as Python modules from /etc/aminer/conf-available) resolve
+    through plans/parser_modules.MODULE_REGISTRY to builders ``(name, mk)
+    -> Element``. Entries resolved this way are recorded in
+    ``approximations``."""
     if isinstance(src, dict):
         data = src
     else:
@@ -994,12 +993,8 @@ def load_reference_config(
                 # two raw names that sanitize identically cannot collide in
                 # the compiled regex's group namespace
                 entry = {**entry, "name": base if k == 1 else f"{base}{k}"}
-        if module_registry is None:
-            from logdata_anomaly_miner_spark.plans.parser_modules import (
-                MODULE_REGISTRY as module_registry,  # noqa: N811
-            )
         t = entry.get("type")
-        if t in module_registry:
+        if t in MODULE_REGISTRY:
             # external parsing-model module (YamlConfig.py:147-180) resolved
             # through the registry shim; leaf names dedup through the same
             # used_names table as YAML-defined names so shared leaves
@@ -1015,7 +1010,7 @@ def load_reference_config(
                 return b if j == 1 else f"{b}{j}"
 
             try:
-                elements[entry["id"]] = module_registry[t](
+                elements[entry["id"]] = MODULE_REGISTRY[t](
                     str(entry.get("name") or entry["id"]), mk
                 )
                 approximations.append(
@@ -1035,11 +1030,10 @@ def load_reference_config(
                 raise
             skipped.append((entry.get("id", entry.get("type", "?")), str(e)))
 
-    root = parser_id
-    if root is None:
-        res = data.get("LogResourceList") or []
-        if res and isinstance(res[0], dict):
-            root = res[0].get("parser_id")
+    root = None
+    res = data.get("LogResourceList") or []
+    if res and isinstance(res[0], dict):
+        root = res[0].get("parser_id")
     if root is None and data["Parser"]:
         root = data["Parser"][-1]["id"]
     if root not in elements:
@@ -1082,7 +1076,7 @@ def load_reference_config(
                     rule_actions.setdefault(entry["match_action"], []).append(eid)
             else:
                 detectors[eid] = _detector_builder(
-                    entry, rules, ts_col, order_col, bin_defs
+                    entry, rules, ts_col, "line_no", bin_defs
                 )
         except ReferenceConfigError as e:
             if strict:
@@ -1194,6 +1188,5 @@ def load_reference_config(
         approximations=approximations,
         referenced_cols=referenced,
         timestamp_col=ts_col,
-        order_col=order_col,
         learn_mode=data.get("LearnMode"),
     )

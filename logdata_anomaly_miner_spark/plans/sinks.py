@@ -25,13 +25,13 @@ from pyspark.sql import DataFrame
 LOG_INFO = 6  # syslog.LOG_INFO — numeric so no syslog import is needed
 
 
-def syslog_chunks(event_text: str, event_id: int, max_chunk: int = 800) -> list[str]:
+def syslog_chunks(event_text: str, event_id: int) -> list[str]:
     """Chunk one rendered event into syslog records.
 
     Mirrors SyslogWriterEventHandler.receive_event's line breaker
     (aminer/events/SyslogWriterEventHandler.py:63-81): the rendered event is
-    stripped, split into lines, and every line is emitted in ``max_chunk``-
-    byte pieces tagged ``[event_id]`` for the first record and
+    stripped, split into lines, and every line is emitted in 800-byte
+    pieces tagged ``[event_id]`` for the first record and
     ``[event_id-serial]`` for continuations — serial counts records across
     the whole event, not per line."""
     out: list[str] = []
@@ -39,10 +39,10 @@ def syslog_chunks(event_text: str, event_id: int, max_chunk: int = 800) -> list[
     for data_line in event_text.strip().split("\n"):
         while data_line:
             if serial == 0:
-                out.append(f"[{event_id}] {data_line[:max_chunk]}")
+                out.append(f"[{event_id}] {data_line[:800]}")
             else:
-                out.append(f"[{event_id}-{serial}] {data_line[:max_chunk]}")
-            data_line = data_line[max_chunk:]
+                out.append(f"[{event_id}-{serial}] {data_line[:800]}")
+            data_line = data_line[800:]
             serial += 1
     return out
 
@@ -50,12 +50,11 @@ def syslog_chunks(event_text: str, event_id: int, max_chunk: int = 800) -> list[
 def emit_syslog(
     df: DataFrame,
     send,
-    text_col: str = "event_text",
     start_event_id: int = 0,
     announce: bool | None = None,
 ) -> int:
-    """SyslogWriterEventHandler analog with the transport injected:
-    ``send(priority, message)`` is ``syslog.syslog`` in production, a test
+    """SyslogWriterEventHandler analog over the rendered ``event_text``
+    column, with the transport injected: ``send(priority, message)`` is ``syslog.syslog`` in production, a test
     double for byte-parity. Emits the reference's one-time init record
     (handler construction) then each event's chunk records with sequential
     event ids. The loop is driver-side single-threaded — exactly the
@@ -72,14 +71,14 @@ def emit_syslog(
     if announce:
         send(LOG_INFO, "Syslog logger initialized")
     event_id = start_event_id
-    for r in df.select(text_col).toLocalIterator():
-        for message in syslog_chunks(r[text_col], event_id):
+    for r in df.select("event_text").toLocalIterator():
+        for message in syslog_chunks(r["event_text"], event_id):
             send(LOG_INFO, message)
         event_id += 1
     return event_id
 
 
-def syslog_batch_emitter(send, order_col: str = "ingest_order"):
+def syslog_batch_emitter(send):
     """The stateful foreachBatch callback behind :func:`emit_syslog_stream`,
     exposed so the replay/announce discipline is directly testable:
     ids continue across batches, the init record fires exactly once (with
@@ -94,7 +93,7 @@ def syslog_batch_emitter(send, order_col: str = "ingest_order"):
         if batch_id <= state["last_batch"]:
             return
         state["next_id"] = emit_syslog(
-            batch.orderBy(order_col),
+            batch.orderBy("ingest_order"),
             send,
             start_event_id=state["next_id"],
             # announce iff no batch has been processed yet (ids may still
@@ -106,14 +105,14 @@ def syslog_batch_emitter(send, order_col: str = "ingest_order"):
     return _emit
 
 
-def emit_syslog_stream(rendered_df: DataFrame, send, order_col: str = "ingest_order"):
+def emit_syslog_stream(rendered_df: DataFrame, send):
     """Streaming emit_syslog: one foreachBatch emitter per micro-batch with
     the :func:`syslog_batch_emitter` id/announce/replay discipline. Each
-    micro-batch is sorted by ``order_col`` so the id assignment is
+    micro-batch is sorted by ``ingest_order`` so the id assignment is
     deterministic. ``rendered_df`` carries the rendered ``event_text``
     column that :func:`emit_syslog` consumes. Returns the started query."""
     return (
-        rendered_df.writeStream.foreachBatch(syslog_batch_emitter(send, order_col))
+        rendered_df.writeStream.foreachBatch(syslog_batch_emitter(send))
         .start()
     )
 
@@ -237,26 +236,24 @@ class MailAlertCollector:
         self.next_alert_time = 0
 
 
-def collect_mail_alerts(
-    df: DataFrame, collector: MailAlertCollector, text_col: str = "event_text"
-) -> None:
-    """Feed rendered events (StreamPrinter form, trailing blank line) into a
-    MailAlertCollector — the Spark-side glue for the mail sink. Driver-side
+def collect_mail_alerts(df: DataFrame, collector: MailAlertCollector) -> None:
+    """Feed rendered events (``event_text`` in StreamPrinter form, trailing
+    blank line) into a MailAlertCollector — the Spark-side glue for the mail sink. Driver-side
     by design: a mail alerter is a single egress point, and the volume is
     violations, not the corpus.
 
     ORDER-SENSITIVE: the pooled message concatenates in iteration order, so
     pass a sorted frame — a multi-partition frame without a sort iterates
     in nondeterministic partition order."""
-    for r in df.select(text_col).toLocalIterator():
+    for r in df.select("event_text").toLocalIterator():
         # StreamPrinter events end with a blank line; EventData strings
         # end each line with exactly one newline
-        collector.receive_event(r[text_col].rstrip("\n") + "\n")
+        collector.receive_event(r["event_text"].rstrip("\n") + "\n")
 
 
-def mail_batch_collector(collector: MailAlertCollector, order_col: str = "ingest_order"):
-    """foreachBatch callback that feeds each micro-batch, in ``order_col``
-    order, into the (stateful) collector, with a replay guard: an
+def mail_batch_collector(collector: MailAlertCollector):
+    """foreachBatch callback that feeds each micro-batch, in
+    ``ingest_order`` order, into the (stateful) collector, with a replay guard: an
     at-least-once re-invocation of the same ``batch_id`` would double-pool
     every event in the batch into one mail, so replays are skipped.
     Collector state is driver-memory only — a driver restart re-pools from
@@ -266,7 +263,7 @@ def mail_batch_collector(collector: MailAlertCollector, order_col: str = "ingest
     def _collect(batch: DataFrame, batch_id: int) -> None:
         if batch_id <= state["last_batch"]:
             return
-        collect_mail_alerts(batch.orderBy(order_col), collector)
+        collect_mail_alerts(batch.orderBy("ingest_order"), collector)
         state["last_batch"] = batch_id
 
     return _collect

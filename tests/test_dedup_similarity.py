@@ -116,37 +116,6 @@ def test_minhash_lsh_candidates_match_python_reference(spark):
         assert got == want and got, use_xx
 
 
-def test_jaccard_shingle_df_cap(spark):
-    """A planted stop-shingle shared by EVERY doc must not drive candidate
-    generation when max_shingle_df is set: pairs overlapping only on the
-    stop phrase disappear (bounding the index self-join), while genuine
-    near-dups keep their EXACT jaccard (intersection still counts all
-    shingles, including capped ones)."""
-    stop = " lorem ipsum dolor sit amet"
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog" + stop),
-        (2, "the quick brown fox jumps over the lazy dog" + stop),
-        (3, "a completely different document body here" + stop),
-        (4, "yet another unrelated piece of text content" + stop),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, None, "doc_id", "text", 3, 0.01).collect()
-    }
-    # without the cap the stop phrase makes EVERY pair a candidate
-    assert uncapped == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
-    capped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, None, "doc_id", "text", 3, 0.01, max_shingle_df=2
-        ).collect()
-    }
-    # stop-shingle-only pairs are gone; the true near-dup pair survives
-    assert set(capped) == {(1, 2)}
-    assert capped[(1, 2)] == 1.0  # exact jaccard, capped shingles included
-
-
 def test_cosine_topk_and_lsh(spark):
     rows = [(i, [1.0, 0.0] if i < 3 else [0.0, 1.0]) for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -161,7 +130,7 @@ def test_exact_near_dup_pairs_blas(spark):
     rows = [(0, [1.0, 0.0]), (1, [0.999, 0.01]), (2, [0.0, 1.0]), (3, [0.01, 0.999])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {(r["id_a"], r["id_b"]): r["cosine"] for r in
-           exact_near_dup_pairs(spark, df, threshold=0.9).collect()}
+           exact_near_dup_pairs(df, threshold=0.9).collect()}
     assert set(out) == {(0, 1), (2, 3)}
     assert all(v > 0.99 for v in out.values())
 
@@ -183,7 +152,7 @@ def test_ivf_topk_recall(spark):
     neighborhood, so the top-k equals the exact scan's."""
     import random
 
-    from logdata_anomaly_miner_spark.functions.similarity import cosine_topk, ivf_topk
+    from logdata_anomaly_miner_spark.functions.similarity import ivf_topk
 
     rng = random.Random(5)
     rows = []

@@ -1733,8 +1733,6 @@ def test_demo9_e2e_stream_matches_reference_golden(spark):
 
 
 def _spark_event_stream10(spark) -> str:
-    from logdata_anomaly_miner_spark.operators.timestamps import unsorted_timestamps
-
     model = P.seq(
         P.Element("^"),
         P.datetime_el("DTM10", "yyyy-MM-dd HH:mm:ss",

@@ -47,16 +47,12 @@ def _ref_scores():
 
 
 def _spark_sequential_scores(spark, scorer):
-    scores = []
-    baseline = None
-    for v in VALUES:
-        df = spark.createDataFrame([(v,)], "value string")
-        if baseline is None:
-            scores.append(0.0)  # empty freq table -> every prob 0
-        else:
-            scored = scorer(df, baseline)
-            scores.append(scored.collect()[0]["critical_val"])
-        baseline, _ = learn_bigram_freq(df, "value", baseline)
+    scores = [0.0]  # empty freq table -> every prob 0
+    for i, v in enumerate(VALUES[1:], 1):
+        learned = spark.createDataFrame([(x,) for x in VALUES[:i]], "value string")
+        baseline, _ = learn_bigram_freq(learned, "value")
+        scored = scorer(spark.createDataFrame([(v,)], "value string"), baseline)
+        scores.append(scored.collect()[0]["critical_val"])
     return scores
 
 
@@ -114,21 +110,6 @@ def test_check_entropy_filter(spark):
         [("a", 0.04), ("b", 0.06)], "value string, critical_val double"
     )
     assert [r["value"] for r in check_entropy(df, 0.05).collect()] == ["a"]
-
-
-def test_skip_repetitions(spark):
-    """skip_repetitions=True counts each distinct value once (ref :170-174)."""
-    df = spark.createDataFrame([("ab",), ("ab",), ("cd",)], "value string")
-    freq, seen = learn_bigram_freq(df, "value", None, skip_repetitions=True)
-    # "ab" counted once: pairs (-1,a),(a,b),(b,-1) and (-1,c),(c,d),(d,-1)
-    total = sum(r["cnt"] for r in freq.collect())
-    assert total == 6
-    assert sorted(r["value"] for r in seen.collect()) == ["ab", "cd"]
-    # second batch with an already-seen value adds nothing
-    df2 = spark.createDataFrame([("ab",), ("ef",)], "value string")
-    freq2, seen2 = learn_bigram_freq(df2, "value", freq, skip_repetitions=True, seen_values=seen)
-    assert sum(r["cnt"] for r in freq2.collect()) == 9
-    assert sorted(r["value"] for r in seen2.collect()) == ["ab", "cd", "ef"]
 
 
 def _ref_scores_seq(values, skip_repetitions=False):

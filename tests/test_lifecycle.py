@@ -1,17 +1,16 @@
 """Learn-mode lifecycle parity with the reference unit tests.
 
 Replays the semantics of ValueRangeDetectorTest.py:181-209 (stop_learning_time
-and stop_learning_no_anomaly_time transitions) and ValueRangeDetector.py:86-90
-(ignore/constraint path screening) in batch form: instead of asserting the
-learn_mode flag, we assert which atoms extended the baseline and which were
-checked against the frozen one — the observable consequence of the flag.
+and stop_learning_no_anomaly_time transitions) in batch form: instead of
+asserting the learn_mode flag, we assert which atoms extended the baseline
+and which were checked against the frozen one — the observable consequence
+of the flag.
 """
 
 from __future__ import annotations
 
 from logdata_anomaly_miner_spark.operators.lifecycle import (
     learning_cutoff,
-    screen_paths,
     split_learn_check,
 )
 from logdata_anomaly_miner_spark.operators.value_range import (
@@ -56,21 +55,6 @@ def test_learning_never_stops_without_options(spark):
     assert cut.collect()[0]["cutoff_ts"] is None and inclusive
 
 
-def test_screen_paths(spark):
-    """VRD :86-90 — skip atoms containing an ignore path or missing a
-    constraint path ('path present' = column non-null)."""
-    df = spark.createDataFrame(
-        [
-            (1, "a", None, 1.0),       # kept
-            (2, "b", "dbg", 2.0),      # ignore path present -> skipped
-            (3, None, None, 3.0),      # constraint path absent -> skipped
-        ],
-        "atom int, user string, debug string, value double",
-    )
-    out = screen_paths(df, ignore_cols=["debug"], constraint_cols=["user"])
-    assert [r["atom"] for r in out.collect()] == [1]
-
-
 def test_value_range_lifecycle_end_to_end(spark):
     """Baseline freezes at the cutoff: post-cutoff atoms are checked against
     the frozen range and never extend it."""
@@ -78,7 +62,7 @@ def test_value_range_lifecycle_end_to_end(spark):
         (T + 0.0, "id1", 5.0),    # learns: range [5,5]
         (T + 50.0, "id1", 9.0),   # checked vs [5,5] -> violation; learns -> [5,9]
         (T + 99.0, "id1", 7.0),   # inside [5,9]
-        (T + 300.0, "id1", 12.0),  # gap 201 > 100 -> check-only; 12 > 9 violation
+        (T + 300.0, "id1", 12.0),  # past the 100 s -> check-only; 12 > 9 violation
         (T + 301.0, "id1", 8.0),   # check-only, inside frozen [5,9]
         (T + 302.0, "id1", 4.0),   # check-only, 4 < 5 violation
     ]
@@ -89,26 +73,9 @@ def test_value_range_lifecycle_end_to_end(spark):
         "value",
         order_cols=("ts",),
         ts_col="ts",
-        stop_learning_no_anomaly_time=100.0,
+        stop_learning_time=100.0,
     )
     got = sorted((r["ts"] - T, r["phase"]) for r in violations.collect())
     assert got == [(50.0, "learn"), (300.0, "check"), (302.0, "check")]
     base = learned.collect()[0]
     assert (base["min"], base["max"]) == (5.0, 9.0)
-
-
-def test_lifecycle_ignores_screened_rows(spark):
-    """A screened-out atom neither learns nor alarms (reference returns
-    before any processing, VRD :86-90)."""
-    rows = [
-        (T + 0.0, "id1", 5.0, None),
-        (T + 1.0, "id1", 999.0, "x"),  # ignore path present: no alarm, no learn
-        (T + 2.0, "id1", 6.0, None),
-    ]
-    df = spark.createDataFrame(rows, "ts double, id string, value double, dbg string")
-    violations, learned = check_value_range_lifecycle(
-        df, ["id"], "value", order_cols=("ts",), ts_col="ts", ignore_cols=["dbg"]
-    )
-    assert violations.count() == 1  # only the 6.0 > 5.0 prefix extension alarm
-    base = learned.collect()[0]
-    assert (base["min"], base["max"]) == (5.0, 6.0)

@@ -94,13 +94,12 @@ def test_global_prefix_scan_multi_bucket(spark):
             want_bad.append(i)
         prev = t
     df = spark.createDataFrame(rows, "event_id long, ts double").repartition(8)
+    out = monotonic_adjust(df)
+    # a dense integral ingest id is range-bucketed by equal width
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "width_bucket" in plan and "percentile_approx" not in plan
+    assert {r["event_id"]: r["ts_adj"] for r in out.collect()} == want_adj
     for nb in (3, 7, 1000):
-        out = monotonic_adjust(df, num_buckets=nb)
-        # a dense integral ingest id is range-bucketed by equal width
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "width_bucket" in plan and "percentile_approx" not in plan
-        adj = {r["event_id"]: r["ts_adj"] for r in out.collect()}
-        assert adj == want_adj, f"num_buckets={nb}"
         bad = sorted(
             r["event_id"]
             for r in unsorted_timestamps(df, num_buckets=nb).collect()
@@ -154,10 +153,6 @@ def test_time_intervals(spark):
     )
     viols = check_time_intervals(cur, learned, ["v"])
     assert [(r["v"], r["tod_bucket"]) for r in viols.collect()] == [("backup", 14)]
-    # neighbor smoothing accepts hour 4 (adjacent to learned 3)
-    cur2 = spark.createDataFrame([("backup", day + 86400 + 4.2 * 3600)], "v string, ts double")
-    assert check_time_intervals(cur2, learned, ["v"], allow_neighbors=True).count() == 0
-    assert check_time_intervals(cur2, learned, ["v"], allow_neighbors=False).count() == 1
 
 
 def test_count_vectors_and_manhattan(spark):
@@ -194,7 +189,6 @@ def test_range_bucket_null_skew_and_stability(spark):
     position), and quantile boundaries keep a bursty double distribution
     balanced (no bucket hoards the burst). A nullable bigint order column
     gets equal-width buckets, its nulls in bucket 0 too."""
-    from pyspark.sql import functions as F
 
     from logdata_anomaly_miner_spark.operators.timestamps import _with_range_bucket
 
@@ -247,7 +241,7 @@ def test_range_bucket_null_skew_and_stability(spark):
     seq = spark.createDataFrame(
         [(None, 50.0), (1, 10.0), (2, 60.0), (3, 20.0)], "event_id bigint, ts double"
     )
-    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(seq, num_buckets=2).collect()}
+    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(seq).collect()}
     assert adj == {None: 50.0, 1: 50.0, 2: 60.0, 3: 60.0}
 
 

@@ -300,12 +300,7 @@ def test_preselect_pairs_end_to_end(spark):
     value) is excluded by excludeDueDistr; matchDiscVals pairs the two
     columns sharing a vocabulary; union/intersection combine methods
     (reference init_cor :341-436)."""
-    from pyspark.sql import functions as F
-
-    from logdata_anomaly_miner_spark.operators.correlation import (
-        preselect_pairs,
-        validate_correlation_pairs,
-    )
+    from logdata_anomaly_miner_spark.operators.correlation import preselect_pairs
 
     rows = [
         (i, str(i % 10), str(i % 10), "hot" if i % 100 else "rare", f"d{i % 7}")
@@ -326,9 +321,6 @@ def test_preselect_pairs_end_to_end(spark):
         methods=("excludeDueDistr", "matchDiscVals"), intersect=True,
     )
     assert both == [("a", "b")]
-    # the preselected pairs feed the validation phase
-    out = validate_correlation_pairs(df, ["a", "b", "c", "d"], pairs=both, num_init=50, num_update=20)
-    assert set(r["pair"] for r in out.collect()) <= {"a~b"}
 
 
 def test_preselect_random_method_seeded(spark):
@@ -338,7 +330,6 @@ def test_preselect_random_method_seeded(spark):
     produces the SAME MT19937 stream as the reference's global
     np.random.seed(seed), so the draw-by-draw replication below IS the
     reference algorithm, made deterministic."""
-    import numpy as np
 
     from logdata_anomaly_miner_spark.operators.correlation import (
         pick_random_pairs,

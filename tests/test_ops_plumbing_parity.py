@@ -299,7 +299,6 @@ def test_mail_collector_spark_glue(spark):
 def test_emit_syslog_stream_continues_ids(spark, tmp_path):
     """Streaming syslog sink: event ids continue across micro-batches and
     the init record is emitted exactly once (first batch)."""
-    import time
 
     from logdata_anomaly_miner_spark.plans.sinks import emit_syslog_stream
 
@@ -473,7 +472,7 @@ def test_unix_socket_spool_to_spark(spark, unix_server, tmp_path):
     assert res.open() is True
     _serve_once(srv)
     spool = str(tmp_path / "spool")
-    # default roll_bytes -> one spool file, so batch ingest_order is line
+    # under the 1 MiB roll size -> one spool file, so batch ingest_order is line
     # order (across many spool files, order is per-file — the streaming
     # reader sequences files by arrival instead)
     n = spool_unix_socket(res, spool)

@@ -277,7 +277,6 @@ def test_readschema_referential_prunes_nested_media_ref(spark, pruning_corpus):
 def test_readschema_var_gof_scans_three_event_columns(spark):
     """The var_gof oracle plan must scan only (event_id, event_type, value)
     of the events table — ts/user_id/props pruned."""
-    from logdata_anomaly_miner_spark.engine_queries import QUERIES
 
     plan = QUERIES["var_gof"](spark, SF_DIR)
     schemas = _scan_schemas(plan, "events.parquet")
@@ -289,7 +288,6 @@ def test_readschema_var_gof_scans_three_event_columns(spark):
 def test_readschema_dedup_exact_prunes_documents(spark):
     """dedup_exact normalizes text per doc: only (doc_id, text) may be
     read from the documents table."""
-    from logdata_anomaly_miner_spark.engine_queries import QUERIES
 
     plan = QUERIES["dedup_exact"](spark, SF_DIR)
     schemas = _scan_schemas(plan, "documents.parquet")

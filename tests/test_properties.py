@@ -75,7 +75,7 @@ def test_value_range_sequential_matches_reference_loop(spark, events):
 )
 def test_global_prefix_scan_property(spark, ts_vals, nb):
     """Distributed two-phase prefix max / lag == sequential fold, for any
-    sequence and any range-bucket count."""
+    sequence (and, for the lag, any range-bucket count)."""
     from logdata_anomaly_miner_spark.operators.timestamps import (
         monotonic_adjust,
         unsorted_timestamps,
@@ -83,7 +83,7 @@ def test_global_prefix_scan_property(spark, ts_vals, nb):
 
     rows = [(i, float(t)) for i, t in enumerate(ts_vals)]
     df = spark.createDataFrame(rows, "event_id long, ts double").repartition(5)
-    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(df, num_buckets=nb).collect()}
+    adj = {r["event_id"]: r["ts_adj"] for r in monotonic_adjust(df).collect()}
     bad = sorted(r["event_id"] for r in unsorted_timestamps(df, num_buckets=nb).collect())
     run, prev, want_adj, want_bad = float("-inf"), None, {}, []
     for i, t in enumerate(ts_vals):

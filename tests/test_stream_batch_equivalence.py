@@ -499,7 +499,6 @@ def test_streaming_event_frequency_keyed_with_global_anchor(spark):
 def test_streaming_value_range_matches_sequential(spark):
     """Streaming ValueRangeDetector state operator vs the batch sequential
     prefix check: identical alarms (value + the pre-event range)."""
-    import tempfile as _tf
 
     from logdata_anomaly_miner_spark.operators.value_range import (
         check_value_range_sequential,
@@ -513,7 +512,7 @@ def test_streaming_value_range_matches_sequential(spark):
         # poison c's (mn, mx) state and disable the later genuine alarm
         ("c", 1.0, 10.0), ("c", 2.0, None), ("c", 3.0, 50.0),
     ]
-    with _tf.TemporaryDirectory() as d:
+    with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(rows, "id string, ts double, value double").coalesce(
             1
         ).write.parquet(f"{d}/in")

@@ -110,7 +110,6 @@ def test_suite_drift_verdict_attribution(spark):
     baseline_hist = spark.createDataFrame(
         [(k, 9, 1000) for k in kinds], "kind string, bucket long, cnt long"
     )
-    from logdata_anomaly_miner_spark.constraints.suite import SuiteConfig, run_suite
 
     res = run_suite(
         spark, docs, media,
@@ -142,8 +141,6 @@ def test_suite_lifecycle_freeze_and_ignore(spark):
     the novelty baseline at the first gap, so every later unseen value
     alarms (per occurrence); ignore_kinds screens spans out entirely."""
     from logdata_anomaly_miner_spark.config import to_suite_config, validate_spec
-    from logdata_anomaly_miner_spark.constraints.suite import run_suite
-    from logdata_anomaly_miner_spark.datagen import gen_documents, gen_media
 
     spec = validate_spec(
         {"suite": {"lifecycle": {"stop_learning_no_anomaly_time": 3600.0,

@@ -177,17 +177,18 @@ def test_arma_pq_recovers_and_flags(spark):
 
 
 def test_arma_seasonal_diff_combination(spark):
-    """d=1 + seasonal lag: trend + period-6 cycle fits near-exactly; a
-    broken cycle point flags; clean series has no alarms."""
+    """Seasonal lag on a trend + period-6 cycle: the fit learns the
+    seasonal difference y_t − y_{t−6} = 3 exactly; a broken cycle point
+    flags; clean series has no alarms."""
     cyc = [0.0, 8.0, 3.0, -2.0, 5.0, 1.0]
     clean_vals = [0.5 * t + cyc[t % 6] for t in range(120)]
     vals = list(clean_vals)
     vals[100] += 25.0
     out = {r["w"]: r for r in arma_forecast_bands(
-        _series(spark, vals), ["k"], p=1, q=0, d=1, seasonal_lag=6, min_train=10
+        _series(spark, vals), ["k"], p=1, q=0, seasonal_lag=6, min_train=10
     ).collect()}
     assert out[100]["anomaly"]
     clean = {r["w"]: r for r in arma_forecast_bands(
-        _series(spark, clean_vals), ["k"], p=1, q=0, d=1, seasonal_lag=6, min_train=10
+        _series(spark, clean_vals), ["k"], p=1, q=0, seasonal_lag=6, min_train=10
     ).collect()}
     assert not any(r["anomaly"] for r in clean.values())

@@ -189,11 +189,7 @@ def test_arma_css_q2_spark_matches_python_replica(spark):
     ~5%% of clean Gaussian residuals, so the no-anomaly check uses z=4)."""
     import numpy as np
 
-    from logdata_anomaly_miner_spark.operators.tsa import (
-        _css_innovations,
-        _nelder_mead,
-        arma_forecast_bands,
-    )
+    from logdata_anomaly_miner_spark.operators.tsa import _css_innovations, _nelder_mead
 
     vals = _gen_ma2(n=300)
     counts = spark.createDataFrame(
@@ -280,12 +276,7 @@ def test_mle_tier_improves_likelihood_and_runs_end_to_end(spark):
     is caught."""
     import numpy as np
 
-    from logdata_anomaly_miner_spark.operators.tsa import (
-        _css_innovations,
-        _kalman_concentrated_nll,
-        _nelder_mead,
-        arma_forecast_bands,
-    )
+    from logdata_anomaly_miner_spark.operators.tsa import _css_innovations, _kalman_concentrated_nll, _nelder_mead
 
     rng = np.random.default_rng(11)
     n, th = 80, 0.9

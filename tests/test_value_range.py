@@ -58,15 +58,3 @@ def test_unseen_group_is_not_violation(spark):
 def test_learn_ranges(spark):
     got = {r["id"]: (r["min"], r["max"]) for r in learn_ranges(_df(spark), ["id"], "value").collect()}
     assert got == {"a": (2.5, 4.75), "b": (3.1, 6.3)}
-
-
-def test_sequential_with_seed_baseline(spark):
-    """Previous-run baseline seeds the running range."""
-    df = _df(spark)
-    seed = spark.createDataFrame([("a", 2.0, 5.0)], "id string, min double, max double")
-    viols, learned = check_value_range_sequential(df, ["id"], "value", ["ts"], baseline=seed)
-    got = sorted((r["ts"] - T0, r["id"], r["value"]) for r in viols.collect())
-    # 'a' rows all within seeded [2,5] -> no anomalies; 'b' as before
-    assert got == [(3.0, "b", 6.3), (5.0, "b", 3.1)]
-    b = {r["id"]: (r["min"], r["max"]) for r in learned.collect()}
-    assert b == {"a": (2.0, 5.0), "b": (3.1, 6.3)}

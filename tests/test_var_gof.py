@@ -119,7 +119,7 @@ def test_fit_discrete_classification(spark):
     dvals = ["x"] * 50 + ["y"] * 30 + ["z"] * 20
     rows += [("d", i, dvals[i]) for i in range(100)]
     df = spark.createDataFrame(rows, "g string, i long, v string")
-    out = fit_discrete(df, ["g"], "v", ["i"], num_init=100, sim_thres=0.1)
+    out = fit_discrete(df, ["g"], "v", ["i"], num_init=100)
     kinds = {r["g"]: r["var_kind"] for r in out.select("g", "var_kind").dropDuplicates().collect()}
     assert kinds == {"s": "stat", "u": "unq", "o": "others", "d": "d"}
     probs = {r["value"]: r["p"] for r in out.filter("g = 'd'").collect()}
