@@ -13,8 +13,6 @@ swap). Schema (FIXTURES.md §2 checkpoint_manifest):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_SCHEMA = (
@@ -29,9 +27,9 @@ class CheckpointManifest:
         self.path = path
 
     def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
+        # the path's Hadoop filesystem: a plain path, file://, hdfs://, s3a://
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        return path.getFileSystem(self.spark._jsc.hadoopConfiguration()).exists(path)
 
     def read(self) -> DataFrame:
         if not self._exists():
@@ -39,8 +37,6 @@ class CheckpointManifest:
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def committed_partitions(self, snapshot_id: int) -> set[str]:
-        if not self._exists():
-            return set()
         return {
             r["partition"]
             for r in self.read()

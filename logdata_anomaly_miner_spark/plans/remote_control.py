@@ -23,8 +23,9 @@ aminer/AminerRemoteControlExecutionMethods.py:31-412) for the Spark engine:
 On a cluster the handler lives driver-side (the control socket is a
 single-node ingress, like the reference's AF_UNIX socket in its select
 loop); mutations touch driver state: config properties, registered
-components (collectors/baseline handles), and the suspended flag that a
-polling job loop consults between batches.
+components (collectors/baseline handles), and the suspended flag. No
+driver reads that flag: scripts/run_validation.py runs one suite plan per
+run, with no loop between batches to consult it.
 """
 
 from __future__ import annotations

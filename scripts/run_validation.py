@@ -6,6 +6,12 @@ documents table with checkpoint/resume at partition granularity.
         --docs /path/documents.parquet --media /path/media.parquet \
         --out /path/run_output --snapshot-id 1 [--spec suite.yaml] [--resume]
 
+One ``run_suite`` over the whole table, as uniqueness and novelty span
+partitions (UTC days of ``ts``); one write of its violations, under
+``violations/partition=<day>``; one manifest row per partition, from its
+verdicts. ``--resume`` skips re-writing and re-committing committed
+partitions, so it gives a fresh run's answer. Job group: ``lams-validate``.
+
 Packaging: scripts/package.sh builds lams.zip. On a cluster, master/executor
 conf comes from spark-submit; locally the session factory defaults apply.
 Mirrors the reference entry point aminer.py (--config / --from-begin ≙
@@ -36,44 +42,44 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logdata_anomaly_miner_spark.config import load_spec, to_suite_config
-    from logdata_anomaly_miner_spark.constraints.suite import run_suite, utc_day_partition
+    from logdata_anomaly_miner_spark.constraints.suite import run_suite
     from logdata_anomaly_miner_spark.plans.checkpoint import CheckpointManifest
     from logdata_anomaly_miner_spark.session import get_spark
 
     spark = get_spark(app_name="lams-validate")
-    spec = load_spec(args.spec) if args.spec else load_spec({})
-    cfg = to_suite_config(spec)
-
-    docs = spark.read.parquet(args.docs)
-    media = spark.read.parquet(args.media)
+    spark.sparkContext.setJobGroup("lams-validate", "constraint-validation run")
+    t0 = time.time()
+    cfg = to_suite_config(load_spec(args.spec) if args.spec else load_spec({}))
     manifest = CheckpointManifest(spark, f"{args.out}/manifest")
-
-    # the key run_suite labels its verdicts with, so each slice is exactly
-    # one verdict partition and a null ts is its own slice
-    docs = docs.withColumn("partition", utc_day_partition(F.col("ts")))
-    partitions = sorted(
-        r["partition"] for r in docs.select("partition").distinct().collect()
-    )
     done = manifest.committed_partitions(args.snapshot_id) if args.resume else set()
-    todo = [p for p in partitions if p not in done]
-    print(f"{len(partitions)} partitions, {len(done)} committed, {len(todo)} to run")
 
-    for part in todo:
-        t0 = time.time()
-        part_docs = docs.filter(F.col("partition") == part).drop("partition")
-        res = run_suite(spark, part_docs, media, cfg)
+    res = run_suite(
+        spark, spark.read.parquet(args.docs), spark.read.parquet(args.media), cfg
+    )
+    rows_scanned, violations = {}, {}
+    for r in res.verdicts.collect():
+        rows_scanned[r["partition"]] = r["n_docs"]
+        violations[r["partition"]] = violations.get(r["partition"], 0) + r["n_violations"]
+    todo = sorted(set(rows_scanned) - done)
+    print(f"{len(rows_scanned)} partitions, {len(todo)} to run")
+
+    # dynamic: the write replaces only the todo partitions with violations,
+    # so committed ones survive; a todo partition with none writes no
+    # directory, so an earlier run's is deleted here
+    for part in (p for p in todo if violations[p] == 0):
+        path = spark._jvm.org.apache.hadoop.fs.Path(f"{args.out}/violations/partition={part}")
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
+    if any(violations[p] for p in todo):
         (
-            res.violations.write.mode("overwrite")
-            .parquet(f"{args.out}/violations/partition={part}")
+            res.violations.filter(F.col("partition").isin(todo))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition").parquet(f"{args.out}/violations")
         )
-        manifest.commit(
-            args.snapshot_id,
-            part,
-            rows_scanned=res.metrics["rows_scanned"],
-            violations=res.metrics["violations"],
-            wall_time_s=time.time() - t0,
-        )
-        print(json.dumps({"partition": part, **res.metrics}))
+    wall = time.time() - t0
+    for part in todo:
+        manifest.commit(args.snapshot_id, part, rows_scanned=rows_scanned[part],
+                        violations=violations[part], wall_time_s=wall)
+        print(json.dumps({"partition": part, "violations": violations[part]}))
     print("done")
     return 0
 

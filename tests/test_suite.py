@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import importlib.util
+import sys
 import tempfile
+from collections import Counter
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from logdata_anomaly_miner_spark.constraints.schema_checks import offsets_not_increasing
@@ -123,17 +128,19 @@ def test_suite_drift_verdict_attribution(spark):
 
 
 def test_checkpoint_manifest(spark):
-    with tempfile.TemporaryDirectory() as d:
-        m = CheckpointManifest(spark, f"{d}/manifest")
-        assert m.committed_partitions(1) == set()
-        m.commit(1, "2023-11-14", rows_scanned=100, violations=2, wall_time_s=1.5)
-        m.commit(1, "2023-11-15", rows_scanned=50, violations=0, wall_time_s=0.7)
-        m.commit(2, "2023-11-14", rows_scanned=10, violations=0, wall_time_s=0.1)
-        assert m.committed_partitions(1) == {"2023-11-14", "2023-11-15"}
-        assert m.committed_partitions(2) == {"2023-11-14"}
-        df = m.read()
-        assert df.count() == 3
-        assert df.filter("snapshot_id = 1").agg(F.sum("rows_scanned")).collect()[0][0] == 150
+    # a Hadoop URI (file://, hdfs://, s3a://) reads back as a plain path does
+    for scheme in ("", "file://"):
+        with tempfile.TemporaryDirectory() as d:
+            m = CheckpointManifest(spark, f"{scheme}{d}/manifest")
+            assert m.committed_partitions(1) == set()
+            m.commit(1, "2023-11-14", rows_scanned=100, violations=2, wall_time_s=1.5)
+            m.commit(1, "2023-11-15", rows_scanned=50, violations=0, wall_time_s=0.7)
+            m.commit(2, "2023-11-14", rows_scanned=10, violations=0, wall_time_s=0.1)
+            assert m.committed_partitions(1) == {"2023-11-14", "2023-11-15"}
+            assert m.committed_partitions(2) == {"2023-11-14"}
+            df = m.read()
+            assert df.count() == 3
+            assert df.filter("snapshot_id = 1").agg(F.sum("rows_scanned")).collect()[0][0] == 150
 
 
 def test_suite_lifecycle_freeze_and_ignore(spark):
@@ -214,50 +221,150 @@ def test_suite_warm_calls_reuse_generated_code(spark):
     assert compilations.getCount() - before <= 30
 
 
-def test_run_validation_cli_validates_every_row_once(spark, tmp_path, monkeypatch):
-    """scripts/run_validation.py slices the input by the UTC-day key that
-    run_suite labels its verdicts with: a null-ts doc is its own slice (it
-    used to make sorted() raise next to dated slices), and in a non-UTC
-    session two docs either side of UTC midnight stay in two slices."""
-    import importlib.util
-    import sys
-    from pathlib import Path
+DAY = 86_400.0
+MIDNIGHT = DAY * 19_700  # 2023-12-09T00:00Z
 
+
+@pytest.fixture
+def cli(spark, monkeypatch):
+    """``scripts/run_validation.py``'s main on this session, in a non-UTC
+    session time zone: ``cli(*args)`` runs it and returns the number of
+    jobs it ran under its job group ``lams-validate``."""
     from logdata_anomaly_miner_spark import session
 
     script = Path(__file__).resolve().parents[1] / "scripts" / "run_validation.py"
     mod_spec = importlib.util.spec_from_file_location("run_validation", script)
-    cli = importlib.util.module_from_spec(mod_spec)
-    mod_spec.loader.exec_module(cli)
-
-    schema = (
-        "doc_id string, ts double, "
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    midnight = 86_400.0 * 19_700  # 2023-12-09T00:00Z
-    span = [("text", "a", None, 0)]
-    docs = spark.createDataFrame(
-        [("d1", None, span), ("d2", midnight - 60, span), ("d3", midnight + 60, span)],
-        schema,
-    )
-    media = gen_media(spark, 10)
-    docs.write.parquet(str(tmp_path / "docs"))
-    media.write.parquet(str(tmp_path / "media"))
-    out = tmp_path / "out"
+    mod = importlib.util.module_from_spec(mod_spec)
+    mod_spec.loader.exec_module(mod)
     monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
-    monkeypatch.setattr(sys, "argv", [
-        "run_validation.py", "--docs", str(tmp_path / "docs"),
-        "--media", str(tmp_path / "media"), "--out", str(out),
-    ])
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def run(*args: str) -> int:
+        monkeypatch.setattr(sys, "argv", ["run_validation.py", *args])
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup("lams-validate"))
+        try:
+            assert mod.main() == 0
+        finally:
+            sc.setJobGroup(None, None)
+        bus.waitUntilEmpty()
+        return len(set(tracker.getJobIdsForGroup("lams-validate")) - before)
+
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try:
-        assert cli.main() == 0
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz)
+    yield run
+    spark.conf.set("spark.sql.session.timeZone", tz)
 
+
+def _cli_input(spark, tmp_path) -> tuple[str, str]:
+    """Five UTC days plus a null-ts doc: d2 is on two days, the text "a" is
+    on two days, d1/d2 sit either side of UTC midnight, which is one local
+    day in a UTC-8 session, and the last day has no violation."""
+    span = lambda text: [("text", text, None, 0)]  # noqa: E731
+    docs = spark.createDataFrame(
+        [
+            ("d0", None, span("z")),
+            ("d1", MIDNIGHT - 60, span("a")),
+            ("d2", MIDNIGHT + 60, span("a")),
+            ("d2", MIDNIGHT + DAY, span("b")),
+            ("d3", MIDNIGHT + 2 * DAY, [("image", None, "m_missing", 0)]),
+            ("d4", MIDNIGHT + 3 * DAY, [("image", None, "m000001", 0)]),
+        ],
+        "doc_id string, ts double, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    docs.write.parquet(str(tmp_path / "docs"))
+    gen_media(spark, 10).write.parquet(str(tmp_path / "media"))
+    return str(tmp_path / "docs"), str(tmp_path / "media")
+
+
+def _suite_on(spark, docs_path: str, media_path: str):
+    """One run_suite over the whole table, under the CLI's default spec."""
+    from logdata_anomaly_miner_spark.config import load_spec, to_suite_config
+
+    return run_suite(
+        spark, spark.read.parquet(docs_path), spark.read.parquet(media_path),
+        to_suite_config(load_spec({})),
+    )
+
+
+def _rows(df) -> Counter:
+    return Counter(map(tuple, df.collect()))
+
+
+def _written(spark, out: Path, columns: list[str]) -> Counter:
+    got = spark.read.parquet(str(out / "violations"))
+    return _rows(got.withColumn("partition", F.col("partition").cast("string")).select(*columns))
+
+
+def test_run_validation_cli_validates_every_row_once(spark, tmp_path, cli):
+    """The CLI's violations are one run_suite's over the whole table: the
+    doc_id on two days is a duplicate, the text first seen on one day is
+    not new on the next, and each partition's manifest row matches its
+    verdicts."""
+    docs, media = _cli_input(spark, tmp_path)
+    out = tmp_path / "out"
+    cli("--docs", docs, "--media", media, "--out", str(out))
+
+    res = _suite_on(spark, docs, media)
+    want = _rows(res.violations)
+    assert _written(spark, out, res.violations.columns) == want
+    assert {(r[0], r[2]) for r in want if r[0] in ("uniqueness", "new_value")} == {
+        ("uniqueness", "2023-12-09"), ("uniqueness", "2023-12-10"),
+        ("new_value", "__no_ts__"), ("new_value", "2023-12-08"),
+        ("new_value", "2023-12-10"),
+    }
+
+    verdicts: dict = {}
+    for r in res.verdicts.collect():
+        n_docs, n_viol = verdicts.get(r["partition"], (r["n_docs"], 0))
+        verdicts[r["partition"]] = (n_docs, n_viol + r["n_violations"])
     manifest = CheckpointManifest(spark, str(out / "manifest")).read().collect()
-    assert sum(r["rows_scanned"] for r in manifest) == 3
-    verdicts = run_suite(spark, docs, media).verdicts.collect()
-    assert {r["partition"] for r in manifest} == {r["partition"] for r in verdicts}
-    assert len(manifest) == 3
+    assert len(manifest) == len(verdicts) == 6
+    assert {r["partition"]: (r["rows_scanned"], r["violations"]) for r in manifest} == verdicts
+
+
+def test_run_validation_cli_resume_skips_committed_partitions(spark, tmp_path, cli):
+    """A resumed run validates the whole table, so the partitions it still
+    runs get a fresh run's violations; it writes and commits nothing for a
+    committed partition, whose violations directory survives, and deletes
+    an earlier run's directory of a partition that now has no violation."""
+    docs, media = _cli_input(spark, tmp_path)
+    out = tmp_path / "out"
+    fresh = _suite_on(spark, docs, media).violations
+    first = "2023-12-08"
+    kept = out / "violations" / f"partition={first}"
+    stale = out / "violations" / "partition=2023-12-12"
+    for path in (kept, stale):
+        fresh.filter(F.col("partition") == first).drop("partition").write.parquet(str(path))
+    listing = {f.name: f.stat().st_mtime_ns for f in kept.iterdir()}
+    manifest = CheckpointManifest(spark, str(out / "manifest"))
+    manifest.commit(1, first, rows_scanned=-1, violations=-1, wall_time_s=0.0)
+
+    cli("--docs", docs, "--media", media, "--out", str(out), "--resume")
+
+    assert {f.name: f.stat().st_mtime_ns for f in kept.iterdir()} == listing
+    assert not stale.exists()
+    assert _written(spark, out, fresh.columns) == _rows(fresh)
+    rows = manifest.read().collect()
+    assert [r["rows_scanned"] for r in rows if r["partition"] == first] == [-1]
+    assert sorted(r["partition"] for r in rows if r["partition"] != first) == [
+        "2023-12-09", "2023-12-10", "2023-12-11", "2023-12-12", "__no_ts__",
+    ]
+
+
+def test_run_validation_cli_jobs_do_not_grow_with_days(spark, tmp_path, cli):
+    """The CLI runs one suite plan and one write whatever the number of
+    days; each extra day adds only its manifest commit."""
+    media = str(tmp_path / "media")
+    gen_media(spark, 1000).write.parquet(media)
+    jobs = {}
+    for n_days in (1, 4):
+        docs = str(tmp_path / f"docs{n_days}")
+        gen_documents(spark, n_docs=400, seed=5).withColumn(
+            "ts", F.col("ts") + F.pmod(F.floor(F.col("ts") * 10), F.lit(n_days)) * DAY
+        ).write.parquet(docs)
+        jobs[n_days] = cli("--docs", docs, "--media", media, "--out", str(tmp_path / f"out{n_days}"))
+    # measured at local[4]: 28 and 31 (one suite plan is about 27)
+    assert 0 < jobs[4] <= jobs[1] + 3, jobs
