@@ -35,46 +35,6 @@ def violation_cols(
     ]
 
 
-def format_event_lines(df: DataFrame, component_name: str = "None") -> DataFrame:
-    """format_event generalized to N loglines: renders the StreamPrinter
-    golden with ``({n} lines)`` and one two-space-indented line per element
-    of ``loglines`` (array<string>), matching EventData.receive_event_
-    string's bytes-logline branch (aminer/events/EventData.py:60-75): the
-    header counts ALL loglines, the body skips empty ones, each body line
-    is newline-terminated, plus StreamPrinter's closing newline. (The
-    reference's str-logline branch additionally leaves lines starting with
-    the configured log-line prefix unindented — not reproduced here.)
-    Null-safe: a null array renders as 0 lines, null message/detector as
-    empty strings, so event_text is never NULL."""
-    ts_str = F.from_unixtime(F.col("ts").cast("long"), "yyyy-MM-dd HH:mm:ss")
-    all_lines = F.coalesce(
-        F.col("loglines"), F.array().cast("array<string>")
-    )
-    body_lines = F.filter(
-        all_lines, lambda l: l.isNotNull() & (l != F.lit(""))
-    )
-    return df.withColumn(
-        "event_text",
-        F.concat(
-            F.coalesce(ts_str, F.lit("")),
-            F.lit(" "),
-            F.coalesce(F.col("message"), F.lit("")),
-            F.lit("\n"),
-            F.coalesce(F.col("detector"), F.lit("")),
-            F.lit(f': "{component_name}" ('),
-            F.size(all_lines).cast("string"),
-            F.lit(" lines)\n"),
-            F.concat_ws(
-                "",
-                F.transform(
-                    body_lines, lambda l: F.concat(F.lit("  "), l, F.lit("\n"))
-                ),
-            ),
-            F.lit("\n"),
-        ),
-    )
-
-
 def format_event(df: DataFrame) -> DataFrame:
     """Render violations in the reference StreamPrinter golden format, for
     an unnamed component (the reference prints its name as "None").

@@ -4,9 +4,9 @@ Mirrors AMiner's repositioning_data/persistence lifecycle
 (aminer/AnalysisChild.py:280-284, aminer/util/PersistenceUtil.py:116-125):
 progress is committed per partition so a restarted run skips completed work.
 
-The manifest is a parquet table (one file per committed partition —
-append-only, atomic at file granularity like the reference's tmpfile+link
-swap). Schema (FIXTURES.md §2 checkpoint_manifest):
+The manifest is a parquet table (one file per commit, which may hold
+many partitions — append-only, atomic at file granularity like the
+reference's tmpfile+link swap). Schema (FIXTURES.md §2 checkpoint_manifest):
     (snapshot_id long, partition string, status string,
      rows_scanned long, violations long, wall_time_s double)
 """
@@ -53,18 +53,21 @@ class CheckpointManifest:
         violations: int,
         wall_time_s: float,
     ) -> None:
-        row = [
-            (
-                int(snapshot_id),
-                str(partition),
-                "done",
-                int(rows_scanned),
-                int(violations),
-                float(wall_time_s),
-            )
+        self.commit_many(snapshot_id, [(partition, rows_scanned, violations, wall_time_s)])
+
+    def commit_many(
+        self, snapshot_id: int, rows: list[tuple[str, int, int, float]]
+    ) -> None:
+        """Commit (partition, rows_scanned, violations, wall_time_s) rows in
+        one append: one Spark job, one parquet file."""
+        if not rows:
+            return
+        data = [
+            (int(snapshot_id), str(p), "done", int(n), int(v), float(w))
+            for p, n, v, w in rows
         ]
         (
-            self.spark.createDataFrame(row, MANIFEST_SCHEMA)
+            self.spark.createDataFrame(data, MANIFEST_SCHEMA)
             .coalesce(1)
             .write.mode("append")
             .parquet(self.path)

@@ -9,8 +9,9 @@ documents table with checkpoint/resume at partition granularity.
 One ``run_suite`` over the whole table, as uniqueness and novelty span
 partitions (UTC days of ``ts``); one write of its violations, under
 ``violations/partition=<day>``; one manifest row per partition, from its
-verdicts. ``--resume`` skips re-writing and re-committing committed
-partitions, so it gives a fresh run's answer. Job group: ``lams-validate``.
+verdicts, all in one append. ``--resume`` skips re-writing and
+re-committing committed partitions, so it gives a fresh run's answer. Job
+group: ``lams-validate``.
 
 Packaging: scripts/package.sh builds lams.zip. On a cluster, master/executor
 conf comes from spark-submit; locally the session factory defaults apply.
@@ -76,9 +77,10 @@ def main() -> int:
             .partitionBy("partition").parquet(f"{args.out}/violations")
         )
     wall = time.time() - t0
+    manifest.commit_many(
+        args.snapshot_id, [(p, rows_scanned[p], violations[p], wall) for p in todo]
+    )
     for part in todo:
-        manifest.commit(args.snapshot_id, part, rows_scanned=rows_scanned[part],
-                        violations=violations[part], wall_time_s=wall)
         print(json.dumps({"partition": part, "violations": violations[part]}))
     print("done")
     return 0

@@ -1,4 +1,4 @@
-"""Sources, sinks, and Structured Streaming operators."""
+"""Sources and Structured Streaming operators."""
 
 from __future__ import annotations
 
@@ -13,14 +13,12 @@ from logdata_anomaly_miner_spark.sources.readers import (
 )
 
 
-def test_read_text_lines_overlong(spark):
+def test_read_text_lines(spark):
     with tempfile.TemporaryDirectory() as d:
         with open(f"{d}/a.log", "w") as f:
             f.write("short\n" + "x" * 100 + "\nanother\n")
-        df = read_text_lines(spark, d, max_line_length=50)
-        rows = df.collect()
+        rows = read_text_lines(spark, d).collect()
         assert len(rows) == 3
-        assert sum(r["overlong"] for r in rows) == 1
         assert all(r["source"].endswith("a.log") for r in rows)
 
 

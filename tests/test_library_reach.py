@@ -5,11 +5,13 @@ and no module imports or assigns a name it never uses.
 Static (AST only), no Spark. Roots: the scripts, ``bench.py``,
 ``__spark_entry__.py`` and ``perfbench/``; the module-level code of every
 library module (the ``QUERIES``/``ORACLES`` registries); and the
-reference-parity and golden test files. From the roots, the names a reached
-def uses in code reach every def of that name, to a fixpoint. Only code
-identifiers count — ``ast.Name`` ids, ``ast.Attribute`` attrs and imported
-names — so a def that a docstring, comment or string merely mentions is not
-reached. A def that nothing reaches is dead code — unless it is the
+reference-parity and golden test files, less the tests that skip here (a
+module-level ``pytestmark`` that is a ``skipif``, a test def marked
+``skipif`` or calling ``pytest.skip``), as a skipped test runs nothing.
+From the roots, the names a reached def uses in code reach every def of
+that name, to a fixpoint. Only code identifiers count — ``ast.Name`` ids,
+``ast.Attribute`` attrs and imported names — so a def that a docstring,
+comment or string merely mentions is not reached. A def that nothing reaches is dead code — unless it is the
 reference that a named test replays, which ``KEEP`` records.
 
 The parameter audit covers every top-level def and class method outside
@@ -24,7 +26,7 @@ and is exempt from the read check. ``OPTION_KEEP`` records the exceptions,
 each with the reference-replay test or frozen caller that needs it.
 
 Run ``python tests/test_library_reach.py`` to print the unreached defs, the
-parameter audit and the unused module names.
+skipped tests it excluded, the parameter audit and the unused module names.
 """
 
 from __future__ import annotations
@@ -47,8 +49,6 @@ ROOT_FILES = (
 PARITY_TESTS = [
     "test_demo_e2e_parity",
     "test_stream_batch_equivalence",
-    "test_ops_plumbing_parity",
-    "test_remote_control_parity",
     "test_reference_config",
     "test_compiled_config_parity",
     "test_golden_format",
@@ -84,14 +84,6 @@ OPTION_KEEP = {
     "s_gof_ladder.use_empiric": "test_var_gof::test_emp_ladder_two_sample_ks",
     "parse_json_string_models.strict": "test_parsing::test_json_string_models_parity",
     "parse_json_string_models.ignore_null": "test_parsing::test_json_string_models_parity",
-    # remote-control commands arrive as text and reach these methods by
-    # name, with the reference's signatures
-    "allowlist_event_in_component.allowlisting_data":
-        "test_remote_control_parity::test_remote_control_byte_parity",
-    "blocklist_event_in_component.blocklisting_data":
-        "test_remote_control_parity::test_remote_control_byte_parity",
-    "persist_all.analysis_context":
-        "test_remote_control_parity::test_persist_callback_and_fd_transport",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -122,6 +114,68 @@ def code_names(tree: ast.AST) -> set[str]:
     return out
 
 
+def _skipif(expr: ast.AST) -> bool:
+    """Whether an expression holds a ``skipif`` mark."""
+    return any(
+        isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "skipif"
+        for n in ast.walk(expr)
+    )
+
+
+def _calls_pytest_skip(node: ast.AST) -> bool:
+    return any(
+        isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "skip" and getattr(n.func.value, "id", None) == "pytest"
+        for n in ast.walk(node)
+    )
+
+
+def module_skipped(module: str) -> bool:
+    """Whether ``tests/<module>.py`` sets a module-level ``skipif`` mark."""
+    return any(
+        isinstance(n, ast.Assign)
+        and any(getattr(t, "id", None) == "pytestmark" for t in n.targets)
+        and _skipif(n.value)
+        for n in _tree(TESTS / f"{module}.py").body
+    )
+
+
+def skipped_tests(module: str) -> list[str]:
+    """The test defs of ``tests/<module>.py`` that skip here: all of them
+    under a module-level ``skipif``, else each one marked ``skipif`` or
+    calling ``pytest.skip``."""
+    tests = [
+        n for n in _tree(TESTS / f"{module}.py").body
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("test")
+    ]
+    whole = module_skipped(module)
+    return [
+        t.name for t in tests
+        if whole or any(_skipif(d) for d in t.decorator_list) or _calls_pytest_skip(t)
+    ]
+
+
+@cache
+def root_code() -> list[ast.Module]:
+    """The code the roots run here: the root files, and each parity test
+    module without its skipped tests."""
+    out = [_tree(p) for p in ROOT_FILES]
+    for t in PARITY_TESTS:
+        if module_skipped(t):
+            continue
+        skipped = set(skipped_tests(t))
+        body = [n for n in _tree(TESTS / f"{t}.py").body if getattr(n, "name", None) not in skipped]
+        out.append(ast.Module(body=body, type_ignores=[]))
+    return out
+
+
+def audited_tests() -> list[str]:
+    """The test modules the audit reads: the parity tests and the modules
+    of the tests that ``KEEP`` and ``OPTION_KEEP`` name."""
+    named = {who.split("::")[0] for who in [*KEEP.values(), *OPTION_KEEP.values()] if "::" in who}
+    return sorted(set(PARITY_TESTS) | named)
+
+
 def library_defs() -> dict[str, list[tuple[str, int, set[str]]]]:
     """Top-level defs by name -> [(module path, lines, names used)]; the
     statements of module-level code (everything but defs and imports) sit
@@ -141,10 +195,9 @@ def unreached() -> list[tuple[str, str, int]]:
     """(module, def name, lines) of every top-level library def that no root
     reaches, sorted by module and name."""
     defs = library_defs()
-    roots = [TESTS / f"{t}.py" for t in PARITY_TESTS] + ROOT_FILES
     frontier: set[str] = set()
-    for path in roots:
-        frontier |= code_names(_tree(path))
+    for tree in root_code():
+        frontier |= code_names(tree)
     for _, _, names in defs.pop(""):
         frontier |= names
     reached: set[str] = set()
@@ -258,8 +311,7 @@ def _root_usage() -> tuple[dict[str, list[ast.Call]], set[str]]:
     }
     calls: dict[str, list[ast.Call]] = {}
     values: set[str] = set()
-    for path in sorted(LIBRARY.rglob("*.py")) + [TESTS / f"{t}.py" for t in PARITY_TESTS] + ROOT_FILES:
-        tree = _tree(path)
+    for tree in [_tree(p) for p in sorted(LIBRARY.rglob("*.py"))] + root_code():
         alias = {
             a.asname: a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
             for a in n.names if a.asname
@@ -350,6 +402,7 @@ def test_kept_defs_exist_and_their_tests_exist():
         tree = _tree(TESTS / f"{module}.py")
         tests = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
         assert func in tests, f"{name}: test {test} not found"
+        assert func not in skipped_tests(module), f"{name}: test {test} skips here"
         assert name in code_names(tree), f"tests/{module}.py does not use {name}"
 
 
@@ -366,15 +419,11 @@ def test_option_keep_entries_name_a_replay_test_or_frozen_caller():
             module, test = who.split("::")
             tree = _tree(TESTS / f"{module}.py")
             assert test in {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}, who
+            assert test not in skipped_tests(module), f"{key}: test {who} skips here"
         else:  # a frozen caller
             assert ROOT / who in ROOT_FILES, f"{key}: {who} is not a root file"
             tree = _tree(ROOT / who)
-        # a remote-control command names its method in text
-        texts = [n.value for n in ast.walk(tree) if isinstance(n, ast.Constant)
-                 and isinstance(n.value, str)]
-        assert func in code_names(tree) or any(func in t for t in texts), (
-            f"{who} does not use {func}"
-        )
+        assert func in code_names(tree), f"{who} does not use {func}"
 
 
 def _report(rows: list[tuple[str, str, int]]) -> str:
@@ -423,6 +472,9 @@ def test_no_local_reimports():
 
 if __name__ == "__main__":
     print(_report(unreached()))
+    for module in audited_tests():
+        for test in skipped_tests(module):
+            print(f"excluded root: {module}::{test} (skips here)")
     unset, unread = unset_options(), unread_parameters()
     for m, d, p, v in unset:
         keep = OPTION_KEEP.get(f"{d.split('.')[-1]}.{p}")
